@@ -62,31 +62,11 @@ def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-def run_pipeline(master: str, shuffle: int, durable: bool = False,
-                 n_convs: int | None = None,
+def run_pipeline(master: str, shuffle: int, n_convs: int | None = None,
                  extra_conf: dict[str, str] | None = None) -> tuple[float, int]:
-    """Full extract→link→canonicalize→materialize on generated transcripts.
-
-    Default: compute path (single pre-explode checkpoint handoff) — measures
-    the engine. durable=True instead runs the parquet-checkpointed
-    resumable pipeline (plans.pipeline.run_pipeline) with checkpoints on
-    /dev/shm; on one machine its IO serializes on a single memory/disk
-    channel, so it is reported once, not used for the scaling ratio.
+    """Full extract→link→canonicalize→materialize on generated transcripts,
+    handed over in memory (plans.pipeline.run_pipeline without a run_dir).
     Returns (wall_seconds, emitted_triples)."""
-    import shutil
-    import tempfile
-
-    from knowledge_extraction_pipeline_spark.operators.canonicalize import (
-        canonicalize_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.extract import extract_stage
-    from knowledge_extraction_pipeline_spark.operators.link import (
-        distinct_terms,
-        link_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.materialize import (
-        materialize_stage,
-    )
     from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline as rp
     from knowledge_extraction_pipeline_spark.session import get_spark
     from knowledge_extraction_pipeline_spark.sources.transcripts_gen import (
@@ -96,24 +76,14 @@ def run_pipeline(master: str, shuffle: int, durable: bool = False,
     spark = get_spark(app_name=f"bench-{master}", master=master,
                       shuffle_partitions=shuffle, extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
-    run_dir = None
     try:
         t = generate_transcripts(spark, n_convs or N_CONVS)
         # materialize the input once so generation cost is out of the timing
         t = t.cache()
         n_turns = t.count()
         t0 = time.time()
-        if durable:
-            base_dir = "/dev/shm" if os.path.isdir("/dev/shm") else None
-            run_dir = tempfile.mkdtemp(prefix="kg_bench_", dir=base_dir)
-            res = rp(spark, t, run_dir)
-            nodes, edges, tr = res.nodes, res.edges, res.triples_raw
-        else:
-            m, tr = extract_stage(t)
-            terms = distinct_terms(m).localCheckpoint(eager=True)
-            asn = canonicalize_stage(terms, link_stage(m, terms=terms)) \
-                .localCheckpoint(eager=True)
-            nodes, edges = materialize_stage(spark, m, tr, asn)
+        res = rp(spark, t)
+        nodes, edges, tr = res.nodes, res.edges, res.triples_raw
         # the two output tables are independent — materialize them
         # concurrently so their stages interleave and fill idle task slots
         from concurrent.futures import ThreadPoolExecutor
@@ -125,13 +95,11 @@ def run_pipeline(master: str, shuffle: int, durable: bool = False,
         # triple count is a property of the data, not of the pipeline run —
         # counted outside the timed window
         n_triples = tr.count()
-        log(f"  {master}{' durable' if durable else ''}: turns={n_turns} "
+        log(f"  {master}: turns={n_turns} "
             f"triples={n_triples} nodes={n_nodes} edges={n_edges} wall={wall:.1f}s")
         return wall, n_triples
     finally:
         spark.stop()
-        if run_dir:
-            shutil.rmtree(run_dir, ignore_errors=True)
 
 
 # ── scaling measurement ──────────────────────────────────────────────────

@@ -26,12 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.canonicalize import canonicalize_stage
 from .operators.chunking import merge_small_chunks, semantic_chunks
 from .operators.extract import extract_stage
 from .operators.graph_algos import degree_centrality, graph_stats, top_k_nodes
-from .operators.link import distinct_terms, link_stage
-from .operators.materialize import materialize_stage
 from .operators.similarity import (
     brute_force_topk,
     ivf_pq_topk,
@@ -39,6 +36,7 @@ from .operators.similarity import (
     lsh_topk,
     pq_topk,
 )
+from .plans.pipeline import run_pipeline
 
 
 def extract_concepts(transcripts: DataFrame) -> DataFrame:
@@ -50,24 +48,21 @@ def extract_concepts(transcripts: DataFrame) -> DataFrame:
 
 def resolve_entities(transcripts: DataFrame, enable_fuzzy: bool = True) -> DataFrame:
     """norm_term → canonical assignment (exact + alias + fuzzy CC)."""
-    m, _ = extract_stage(transcripts)
-    terms = distinct_terms(m)
-    return canonicalize_stage(terms, link_stage(m, enable_fuzzy=enable_fuzzy))
+    return run_pipeline(transcripts.sparkSession, transcripts,
+                        enable_fuzzy=enable_fuzzy).assignments
 
 
 def extract_relationships(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
     """Typed co-occurrence edges (replaces create_relationship_batch +
     parse_relationship_responses)."""
-    _, edges = build_knowledge_graph(spark, transcripts)
-    return edges
+    return run_pipeline(spark, transcripts).edges
 
 
 def build_knowledge_graph(spark: SparkSession, transcripts: DataFrame,
                           enable_fuzzy: bool = True) -> tuple[DataFrame, DataFrame]:
     """→ (nodes, edges)."""
-    m, tr = extract_stage(transcripts)
-    asn = canonicalize_stage(distinct_terms(m), link_stage(m, enable_fuzzy=enable_fuzzy))
-    return materialize_stage(spark, m, tr, asn)
+    res = run_pipeline(spark, transcripts, enable_fuzzy=enable_fuzzy)
+    return res.nodes, res.edges
 
 
 def create_semantic_chunks(transcripts: DataFrame, **kw) -> DataFrame:

@@ -19,6 +19,9 @@ import hashlib
 import re
 from functools import lru_cache
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 from ..config import CATEGORIES, IMPORTANCE_LEVELS, KNOWN_ALIASES
 
 # ~157 base terms: 150 synthetic two-word domain terms + the 7 canonical
@@ -183,3 +186,10 @@ def normalize_term_py(term: str) -> str:
 def apply_alias_py(norm: str) -> str:
     """Reference alias canonicalization (graph_tools.py:119-130)."""
     return KNOWN_ALIASES.get(norm, norm)
+
+
+def apply_alias(norm: Column) -> Column:
+    """apply_alias_py as a Column: the known-alias target of a normalized
+    term, else the term itself (a map literal — no join)."""
+    amap = F.create_map(*[F.lit(x) for kv in KNOWN_ALIASES.items() for x in kv])
+    return F.coalesce(amap[norm], norm)

@@ -92,7 +92,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
 
     Distributed convergence: the small-star output is a star forest fixed
     point when its (count, checksum) stops changing — checksum is an
-    order-insensitive bit_xor of row hashes, one tiny aggregate per round."""
+    order-insensitive bit_xor of row hashes, one tiny aggregate per round.
+    Raises RuntimeError when max_iter rounds pass without that fixed point."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     e = e.localCheckpoint(eager=True)
 
@@ -116,6 +117,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} "
+            "(no repeated (count, bit_xor) signature); the assignments would "
+            "be silently wrong — raise max_iter")
 
     # Star forest: every edge is (member, root). Roots map to themselves.
     members = e.select(F.col("src").alias("norm_term"), F.col("dst").alias("canon"))

@@ -23,12 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import (
-    KNOWN_ALIASES,
     LSH_JACCARD_THRESHOLD,
     LSH_NUM_BANDS,
     LSH_NUM_HASHES,
     LSH_SHINGLE_SIZE,
 )
+from ..functions.lexicon import apply_alias
 from ..functions.text import (
     char_shingles,
     lsh_bands,
@@ -47,11 +47,10 @@ def distinct_terms(mentions: DataFrame) -> DataFrame:
 def alias_edges(terms: DataFrame) -> DataFrame:
     """(norm → canonical) edges from the known-alias table, as a broadcast
     map literal — a constant-folded expression, no join."""
-    amap = F.create_map(*[F.lit(x) for kv in KNOWN_ALIASES.items() for x in kv])
     return (
         terms
-        .withColumn("dst", amap[F.col("norm_term")])
-        .filter(F.col("dst").isNotNull() & (F.col("dst") != F.col("norm_term")))
+        .withColumn("dst", apply_alias(F.col("norm_term")))
+        .filter(F.col("dst") != F.col("norm_term"))
         .select(F.col("norm_term").alias("src"), "dst",
                 F.lit(1.0).alias("sim"), F.lit("alias").alias("phase"))
     )

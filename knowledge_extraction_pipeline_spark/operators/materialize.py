@@ -38,6 +38,7 @@ from ..config import (
     EVIDENCE_SAMPLE,
     MIN_COOCCURRENCES,
 )
+from ..functions.lexicon import apply_alias
 
 N_SALT = 16
 
@@ -49,12 +50,9 @@ def alias_assignments(mentions: DataFrame) -> DataFrame:
     the EMITTED TRIPLES use — the reference never fuzzy-merges, so edge parity
     requires edges at this level; the LSH+CC fuzzy canonicalization feeds the
     richer nodes table instead."""
-    from ..config import KNOWN_ALIASES
-
-    amap = F.create_map(*[F.lit(x) for kv in KNOWN_ALIASES.items() for x in kv])
     return (
         mentions.select("norm_term").distinct()
-        .withColumn("canon", F.coalesce(amap[F.col("norm_term")], F.col("norm_term")))
+        .withColumn("canon", apply_alias(F.col("norm_term")))
     )
 
 
@@ -127,16 +125,16 @@ def build_nodes(mentions_c: DataFrame,
     mentions_c_quotes (defaults to mentions_c). Splitting them lets callers
     hand the eight quote-free aggregation branches a narrow table — with an
     RDD-checkpointed handoff every branch otherwise deserializes the fat
-    quote strings it never uses."""
+    quote strings it never uses.
+
+    This is the first phase: the mentions reduced to the small canon-keyed
+    tables node_rollup consumes."""
     if mentions_c_quotes is None:
         mentions_c_quotes = mentions_c
-    # canonical_term: modal original casing, ties → earliest occurrence
-    # (entity_resolver.py:462-465 uses the most common surface form).
     # groupBy(canon, term) first: output cardinality = surface variants per
-    # entity (small), so the follow-up window is over tiny groups. The same
-    # pass also partial-aggregates confidence/category/count, so the former
-    # seventh branch (a full extra scan + shuffle of mentions for groupBy
-    # (canon)) folds into a second-phase aggregate over this tiny table.
+    # entity (small), so the follow-up name window is over tiny groups. The
+    # same pass also partial-aggregates confidence/category/count, so the
+    # confidence rollup is a second-phase aggregate over this tiny table.
     by_term = mentions_c.groupBy("canon", "term").agg(
         F.count(F.lit(1)).alias("cnt"), F.min("occ").alias("first_occ"),
         F.sum("confidence").alias("_conf_sum"),
@@ -144,7 +142,37 @@ def build_nodes(mentions_c: DataFrame,
         # ignore-null semantics for callers with missing confidences
         F.count("confidence").alias("_conf_n"),
         F.min_by("category", "occ").alias("_first_cat"),
-    ).persist()  # tiny (surface variants per entity); read by names AND conf
+    )
+    # distinct quotes first (full-key shuffle, skew-free), then salted top-k
+    by_quote = mentions_c_quotes.groupBy("canon", "quote").agg(
+        F.min("occ").alias("first_occ"))
+    # ONE shuffle over (canon, category, importance) — both dimensions are
+    # bounded (7 × 4), so the combined key stays tiny
+    by_ci = mentions_c.groupBy("canon", "category", "importance").count()
+    ev = _salted_topk(mentions_c_quotes, "canon", ["occ"],
+                      ["conv_id", "turn_idx", "quote"], EVIDENCE_SAMPLE, "_ev")
+    by_src = mentions_c.groupBy("canon", "conv_id").agg(F.min("occ").alias("first_occ"))
+    return node_rollup(by_term, by_quote, by_ci, ev, by_src)
+
+
+def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
+                ev: DataFrame, by_src: DataFrame) -> DataFrame:
+    """Second phase of the node build: canon-level names, definitions,
+    category/importance modes, evidence, sources and the confidence rollup,
+    joined into one row per canonical entity. Inputs, all keyed by canon:
+
+      by_term  (canon, term, cnt, first_occ, _conf_sum, _conf_n, _first_cat)
+      by_quote (canon, quote, first_occ)
+      by_ci    (canon, category, importance, count)
+      ev       (canon, _ev: earliest EVIDENCE_SAMPLE
+                struct(occ, conv_id, turn_idx, quote), sorted)
+      by_src   (canon, conv_id, first_occ)
+
+    build_nodes derives them from mentions; plans/ivm from its norm_term
+    summaries."""
+    by_term = by_term.persist()  # tiny; read by names AND conf
+    # canonical_term: modal original casing, ties → earliest occurrence
+    # (entity_resolver.py:462-465 uses the most common surface form)
     w_term = Window.partitionBy("canon").orderBy(
         F.desc("cnt"), F.asc("first_occ"), F.asc("term")
     )
@@ -157,19 +185,13 @@ def build_nodes(mentions_c: DataFrame,
             F.when(F.col("rn") > 1, F.col("term")))).alias("aliases"),
     )
 
-    # definitions: distinct quotes, first DEFINITIONS_CAP by occurrence.
-    # distinct first (full-key shuffle, skew-free), then salted top-k.
-    by_quote = mentions_c_quotes.groupBy("canon", "quote").agg(
-        F.min("occ").alias("first_occ"))
+    # definitions: distinct quotes, first DEFINITIONS_CAP by occurrence
     defs = _salted_topk(by_quote, "canon", ["first_occ"], ["quote"],
                         DEFINITIONS_CAP, "_defs").select(
         "canon", F.transform(F.col("_defs"), lambda x: x["quote"]).alias("definitions"))
 
-    # category / importance histograms → mode, from ONE shuffle over
-    # (canon, category, importance) — both dimensions are bounded (7 × 4),
-    # so the combined key stays tiny and the mode windows run on it.
-    by_ci = mentions_c.groupBy("canon", "category", "importance").count() \
-        .persist()  # tiny (≤ |canon|·28 rows), reused twice
+    # category / importance histograms → mode
+    by_ci = by_ci.persist()  # tiny (≤ |canon|·28 rows), reused twice
     by_cat = by_ci.groupBy("canon", "category").agg(F.sum("count").alias("count"))
     w_cat = Window.partitionBy("canon").orderBy(F.desc("count"), "category")
     cats = by_cat.withColumn("rn", F.row_number().over(w_cat)).groupBy("canon").agg(
@@ -182,17 +204,13 @@ def build_nodes(mentions_c: DataFrame,
         F.min_by("importance", "rn").alias("primary_importance"),
     )
 
-    # evidence sample (<= EVIDENCE_SAMPLE earliest mentions) + sources (<=20).
-    ev = _salted_topk(mentions_c_quotes, "canon", ["occ"],
-                      ["conv_id", "turn_idx", "quote"],
-                      EVIDENCE_SAMPLE, "_ev").select(
+    # evidence sample (<= EVIDENCE_SAMPLE earliest mentions) + sources (<=20)
+    ev = ev.select(
         "canon",
         F.transform(F.col("_ev"), lambda x: F.struct(
             x["conv_id"].alias("conv_id"),
             x["turn_idx"].alias("turn_idx"),
             x["quote"].alias("quote"))).alias("evidence"))
-
-    by_src = mentions_c.groupBy("canon", "conv_id").agg(F.min("occ").alias("first_occ"))
     srcs = _salted_topk(by_src, "canon", ["first_occ"], ["conv_id"], 20,
                         "_srcs").select(
         "canon", F.transform(F.col("_srcs"), lambda x: x["conv_id"]).alias("sources"))
@@ -238,43 +256,27 @@ def typing_table(spark: SparkSession, categories: list[str] | None = None) -> Da
 
 def build_edges(
     triples_raw: DataFrame,
-    assignments: DataFrame,
     mentions_c: DataFrame,
     min_cooccurrences: int = MIN_COOCCURRENCES,
-    evidence_scope: str = "first_member",
 ) -> DataFrame:
     """Canonical co-occurrence edges with salted aggregation and
     first-occurrence orientation. Output columns:
     (subj, pred='CO_OCCURS', obj, common, strength, confidence, evidence).
 
-    evidence_scope:
-      'first_member' (default) — a canonical entity's chunk set is its
-          first-occurring member norm's chunks, byte-matching the reference's
-          alias-merge behavior (graph_tools.py:137-149 copies group[0] and
-          never merges the evidence lists).
-      'union' — the arguably-correct semantics: union of all members'
-          chunks. Diverges from the reference on alias/fuzzy-merged entities.
-    """
-    if evidence_scope == "first_member":
-        # vocabulary-sized; materialized so the four consumers below don't
-        # each rescan the mentions table
-        rep = representative_norms(mentions_c).persist()
-        rep_map = rep.select(F.col("rep_norm").alias("norm_term"), "canon")
-        mentions_used = mentions_c.drop("canon").join(rep_map, "norm_term")
-        a_map = rep_map.select(F.col("norm_term").alias("subj"), F.col("canon").alias("ca"))
-        b_map = rep_map.select(F.col("norm_term").alias("obj"), F.col("canon").alias("cb"))
-        # inner joins: pairs whose endpoint norms are not group representatives
-        # are dropped, exactly like the reference's lost evidence lists.
-        mapped = triples_raw.join(a_map, "subj").join(b_map, "obj")
-    else:
-        mentions_used = mentions_c
-        a_map = assignments.select(F.col("norm_term").alias("subj"), F.col("canon").alias("ca"))
-        b_map = assignments.select(F.col("norm_term").alias("obj"), F.col("canon").alias("cb"))
-        mapped = (
-            triples_raw.join(a_map, "subj", "left").join(b_map, "obj", "left")
-            .withColumn("ca", F.coalesce("ca", "subj"))
-            .withColumn("cb", F.coalesce("cb", "obj"))
-        )
+    A canonical entity's chunk set is its first-occurring member norm's
+    chunks, byte-matching the reference's alias-merge behavior
+    (graph_tools.py:137-149 copies group[0] and never merges the evidence
+    lists)."""
+    # vocabulary-sized; materialized so the four consumers below don't
+    # each rescan the mentions table
+    rep = representative_norms(mentions_c).persist()
+    rep_map = rep.select(F.col("rep_norm").alias("norm_term"), "canon")
+    mentions_used = mentions_c.drop("canon").join(rep_map, "norm_term")
+    a_map = rep_map.select(F.col("norm_term").alias("subj"), F.col("canon").alias("ca"))
+    b_map = rep_map.select(F.col("norm_term").alias("obj"), F.col("canon").alias("cb"))
+    # inner joins: pairs whose endpoint norms are not group representatives
+    # are dropped, exactly like the reference's lost evidence lists.
+    mapped = triples_raw.join(a_map, "subj").join(b_map, "obj")
     pairs = (
         mapped
         .filter(F.col("ca") != F.col("cb"))
@@ -345,8 +347,6 @@ def materialize_stage(
     mentions: DataFrame,
     triples_raw: DataFrame,
     assignments: DataFrame,
-    evidence_scope: str = "first_member",
-    persist_quotes: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """nodes from the FULL canonicalization (stage-3 CC over alias + LSH
     candidates → variant aliases folded into one node), edges from the
@@ -362,30 +362,19 @@ def materialize_stage(
     slim = mentions.drop("quote").persist()
 
     mc_nodes = canonical_mentions(slim, assignments)
-    # the quote-carrying projection feeds TWO aggregation branches
-    # (definitions distinct + evidence top-k). persist_quotes caches the
-    # joined projection so those branches skip the explode+join recompute —
-    # MEASURED trade (interleaved A/B at 125k convs, local[16]): on an idle
-    # machine the recompute reads the cached extract and the persist LOSES
-    # ~3.5 s (cache write + memory pressure beat one cheap recompute), but
-    # under core contention the persist halves materialize (92 s → 46 s).
-    # Default off — the single-tenant bench shape; multi-tenant callers
-    # should enable it.
+    # the quote-carrying projection feeds the two quote aggregates
+    # (definitions distinct + evidence top-k); it is recomputed rather than
+    # cached — on an idle machine the cache write costs more than the
+    # recompute of one cheap explode+join
     mc_nodes_q = canonical_mentions(
         mentions.select("conv_id", "turn_idx", "norm_term", "start", "quote"),
         assignments)
-    if persist_quotes:
-        mc_nodes_q = mc_nodes_q.persist()
     nodes = build_nodes(mc_nodes, mc_nodes_q)
 
     # exact+alias canonicalization for the edge path — derived from the
     # vocabulary already in `assignments`, NOT another scan of mentions
-    from ..config import KNOWN_ALIASES
-    amap = F.create_map(*[F.lit(x) for kv in KNOWN_ALIASES.items() for x in kv])
     edge_asn = assignments.select("norm_term").withColumn(
-        "canon", F.coalesce(amap[F.col("norm_term")], F.col("norm_term")))
+        "canon", apply_alias(F.col("norm_term")))
     mc_edges = canonical_mentions(slim, edge_asn)
-    edges = type_edges(
-        build_edges(triples_raw, edge_asn, mc_edges, evidence_scope=evidence_scope),
-        typing_table(spark))
+    edges = type_edges(build_edges(triples_raw, mc_edges), typing_table(spark))
     return nodes, edges

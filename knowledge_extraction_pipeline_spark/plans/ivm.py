@@ -39,14 +39,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.materialize import (
-    DEFINITIONS_CAP,
-    EVIDENCE_SAMPLE,
-    _salted_topk,
-)
+from ..operators.materialize import EVIDENCE_SAMPLE, _salted_topk, node_rollup
 
 
 @dataclass
@@ -120,84 +116,26 @@ def _canon(df: DataFrame, assignments: DataFrame) -> DataFrame:
 
 
 def finalize_nodes(s: NodeSummaries, assignments: DataFrame) -> DataFrame:
-    """Canon-level finalization — the same second-phase windows/caps as
-    build_nodes (materialize.py:117-221), consuming summaries instead of
-    mentions. Output schema and values are row-identical to build_nodes."""
-    # by_term: canon image of s_term (exact: sum/min/argmin re-aggregate)
+    """Re-aggregate the summaries by canon, then run build_nodes's own
+    second phase (materialize.node_rollup) on them. Output schema and
+    values are row-identical to build_nodes."""
+    # each is the canon image of a summary (exact: sum/min/argmin/top-k
+    # re-aggregate)
     by_term = _canon(s.term, assignments).groupBy("canon", "term").agg(
         F.sum("cnt").alias("cnt"),
         F.min("first_occ").alias("first_occ"),
         F.sum("conf_sum").alias("_conf_sum"),
         F.sum("conf_n").alias("_conf_n"),
         F.min_by("first_cat", "first_occ").alias("_first_cat"),
-    ).persist()
-    w_term = Window.partitionBy("canon").orderBy(
-        F.desc("cnt"), F.asc("first_occ"), F.asc("term"))
-    ranked_terms = by_term.withColumn("rn", F.row_number().over(w_term)) \
-        .filter(F.col("rn") <= 21)
-    names = ranked_terms.groupBy("canon").agg(
-        F.min_by("term", "rn").alias("canonical_term"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("rn") > 1, F.col("term")))).alias("aliases"),
     )
-
     by_quote = _canon(s.quote, assignments).groupBy("canon", "quote").agg(
         F.min("first_occ").alias("first_occ"))
-    defs = _salted_topk(by_quote, "canon", ["first_occ"], ["quote"],
-                        DEFINITIONS_CAP, "_defs").select(
-        "canon",
-        F.transform(F.col("_defs"), lambda x: x["quote"]).alias("definitions"))
-
     by_ci = _canon(s.ci, assignments) \
         .groupBy("canon", "category", "importance") \
-        .agg(F.sum("cnt").alias("count")).persist()
-    by_cat = by_ci.groupBy("canon", "category").agg(F.sum("count").alias("count"))
-    w_cat = Window.partitionBy("canon").orderBy(F.desc("count"), "category")
-    cats = by_cat.withColumn("rn", F.row_number().over(w_cat)) \
-        .groupBy("canon").agg(
-            F.min_by("category", "rn").alias("primary_category"),
-            F.map_from_entries(F.collect_list(
-                F.struct("category", "count"))).alias("categories"))
-    by_imp = by_ci.groupBy("canon", "importance").agg(F.sum("count").alias("count"))
-    w_imp = Window.partitionBy("canon").orderBy(F.desc("count"), "importance")
-    imps = by_imp.withColumn("rn", F.row_number().over(w_imp)) \
-        .groupBy("canon").agg(
-            F.min_by("importance", "rn").alias("primary_importance"))
-
+        .agg(F.sum("cnt").alias("count"))
     ev = _canon(s.ev, assignments).groupBy("canon").agg(
         F.slice(F.array_sort(F.flatten(F.collect_list("items"))), 1,
-                EVIDENCE_SAMPLE).alias("_ev")).select(
-        "canon",
-        F.transform(F.col("_ev"), lambda x: F.struct(
-            x["conv_id"].alias("conv_id"),
-            x["turn_idx"].alias("turn_idx"),
-            x["quote"].alias("quote"))).alias("evidence"))
-
+                EVIDENCE_SAMPLE).alias("_ev"))
     by_src = _canon(s.src, assignments).groupBy("canon", "conv_id").agg(
         F.min("first_occ").alias("first_occ"))
-    srcs = _salted_topk(by_src, "canon", ["first_occ"], ["conv_id"], 20,
-                        "_srcs").select(
-        "canon",
-        F.transform(F.col("_srcs"), lambda x: x["conv_id"]).alias("sources"))
-
-    conf = by_term.groupBy("canon").agg(
-        F.round(F.sum("_conf_sum") / F.sum("_conf_n"), 6)
-        .alias("avg_confidence"),
-        F.sum("cnt").alias("mention_count"),
-        F.min("first_occ").alias("first_occ"),
-        F.min_by("_first_cat", "first_occ").alias("category"),
-    )
-
-    return (
-        names.join(defs, "canon").join(cats, "canon").join(imps, "canon")
-        .join(ev, "canon").join(srcs, "canon").join(conf, "canon")
-        .select(
-            F.xxhash64("canon").alias("canonical_id"),
-            F.col("canon"),
-            "canonical_term", "aliases", "definitions",
-            "primary_category", "primary_importance", "categories",
-            F.col("category").alias("first_category"),
-            "avg_confidence", "mention_count", "evidence", "sources",
-            "first_occ",
-        )
-    )
+    return node_rollup(by_term, by_quote, by_ci, ev, by_src)

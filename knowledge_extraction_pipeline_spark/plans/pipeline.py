@@ -1,15 +1,18 @@
-"""The orchestrated, checkpointed, resumable KG-construction pipeline.
+"""The one composition of the KG-construction pipeline.
 
 Spark analog of the reference's run_complete_pipeline
-(scripts/process_pdf.py:42-354) and batch_process (scripts/batch_process.py):
-each stage reads the previous checkpoint table, writes its own + metrics rows,
-and is skipped on re-run if already committed (resume without recompute).
+(scripts/process_pdf.py:42-354) and batch_process (scripts/batch_process.py).
 
-    run_pipeline(spark, transcripts, run_dir)
+    run_pipeline(spark, transcripts, run_dir=None)
         extract      → mentions, triples_raw
         link         → candidate edges (alias + MinHash-LSH)
         canonicalize → assignments(norm_term, canon)
         materialize  → nodes, edges
+
+With run_dir=None the stages hand their DataFrames over in memory. With a
+run_dir each stage writes its tables as checkpoints plus metrics rows, and a
+stage already committed there is read back instead of recomputed (resume
+without recompute).
 
 Ship via: spark-submit --py-files kg_spark.zip jobs/run_pipeline.py ...
 """
@@ -41,23 +44,28 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
-    run_dir: str,
+    run_dir: str | None = None,
     enable_fuzzy: bool = True,
 ) -> PipelineResult:
     recomputed: list[str] = []
 
-    # ── stage 1: extract ────────────────────────────────────────────
-    if stage_committed(run_dir, "extract", "mentions") and \
-       stage_committed(run_dir, "extract", "triples_raw"):
-        mentions = checkpoint_read(spark, run_dir, "extract", "mentions")
-        triples_raw = checkpoint_read(spark, run_dir, "extract", "triples_raw")
-    else:
-        m, tr = extract_stage(transcripts)
-        mentions = checkpoint_write(m, run_dir, "extract", "mentions")
-        triples_raw = checkpoint_write(tr, run_dir, "extract", "triples_raw")
-        recomputed.append("extract")
+    def stage(name: str, tables: tuple[str, ...], compute) -> list[DataFrame]:
+        """The stage's tables: read back if committed in run_dir, else
+        computed (and checkpointed when there is a run_dir)."""
+        if run_dir is not None and all(
+                stage_committed(run_dir, name, t) for t in tables):
+            return [checkpoint_read(spark, run_dir, name, t) for t in tables]
+        out = compute()
+        recomputed.append(name)
+        if run_dir is None:
+            return list(out)
+        return [checkpoint_write(df, run_dir, name, t)
+                for df, t in zip(out, tables)]
 
-    # the vocabulary is consumed by both stage 2 and stage 3 — one scan
+    mentions, triples_raw = stage("extract", ("mentions", "triples_raw"),
+                                  lambda: extract_stage(transcripts))
+
+    # the vocabulary is consumed by both link and canonicalize — one scan
     terms = None
 
     def _terms():
@@ -66,34 +74,12 @@ def run_pipeline(
             terms = distinct_terms(mentions).localCheckpoint(eager=True)
         return terms
 
-    # ── stage 2: link ───────────────────────────────────────────────
-    if stage_committed(run_dir, "link", "candidates"):
-        candidates = checkpoint_read(spark, run_dir, "link", "candidates")
-    else:
-        candidates = checkpoint_write(
-            link_stage(mentions, enable_fuzzy=enable_fuzzy, terms=_terms()),
-            run_dir, "link", "candidates")
-        recomputed.append("link")
-
-    # ── stage 3: canonicalize ───────────────────────────────────────
-    if stage_committed(run_dir, "canonicalize", "assignments"):
-        assignments = checkpoint_read(spark, run_dir, "canonicalize", "assignments")
-    else:
-        assignments = checkpoint_write(
-            canonicalize_stage(_terms(), candidates),
-            run_dir, "canonicalize", "assignments")
-        recomputed.append("canonicalize")
-
-    # ── stage 4: materialize ────────────────────────────────────────
-    if stage_committed(run_dir, "materialize", "nodes") and \
-       stage_committed(run_dir, "materialize", "edges"):
-        nodes = checkpoint_read(spark, run_dir, "materialize", "nodes")
-        edges = checkpoint_read(spark, run_dir, "materialize", "edges")
-    else:
-        n, e = materialize_stage(spark, mentions, triples_raw, assignments)
-        nodes = checkpoint_write(n, run_dir, "materialize", "nodes")
-        edges = checkpoint_write(e, run_dir, "materialize", "edges")
-        recomputed.append("materialize")
+    [candidates] = stage("link", ("candidates",), lambda: [
+        link_stage(mentions, enable_fuzzy=enable_fuzzy, terms=_terms())])
+    [assignments] = stage("canonicalize", ("assignments",), lambda: [
+        canonicalize_stage(_terms(), candidates)])
+    nodes, edges = stage("materialize", ("nodes", "edges"), lambda:
+                         materialize_stage(spark, mentions, triples_raw, assignments))
 
     return PipelineResult(
         mentions=mentions, triples_raw=triples_raw, candidates=candidates,

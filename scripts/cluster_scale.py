@@ -91,17 +91,7 @@ def launch_cluster(n_workers: int, exec_cpus: list[str], aux_cpus: str,
 
 def run_job(url: str, n_workers: int, n_convs: int, shuffle: int = 8,
             input_parquet: str | None = None, triples_known: int = -1):
-    from knowledge_extraction_pipeline_spark.operators.canonicalize import (
-        canonicalize_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.extract import extract_stage
-    from knowledge_extraction_pipeline_spark.operators.link import (
-        distinct_terms,
-        link_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.materialize import (
-        materialize_stage,
-    )
+    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
     from knowledge_extraction_pipeline_spark.session import get_spark
     from knowledge_extraction_pipeline_spark.sources.transcripts_gen import (
         generate_transcripts,
@@ -157,11 +147,8 @@ def run_job(url: str, n_workers: int, n_convs: int, shuffle: int = 8,
             tw = generate_transcripts(spark, 4000 * n_workers,
                                       partitions=8 * n_workers).cache()
             tw.count()
-            mw, trw = extract_stage(tw)
-            aw = canonicalize_stage(distinct_terms(mw),
-                                    link_stage(mw, terms=distinct_terms(mw)))
-            nw, ew = materialize_stage(spark, mw, trw, aw)
-            nw.count(), ew.count()
+            warm = run_pipeline(spark, tw)
+            warm.nodes.count(), warm.edges.count()
             tw.unpersist()
             spark.catalog.clearCache()
         # identical partitioning at both levels — coarse enough that driver
@@ -177,11 +164,8 @@ def run_job(url: str, n_workers: int, n_convs: int, shuffle: int = 8,
             t = generate_transcripts(spark, n_convs, partitions=parts).cache()
         n_turns = t.count()
         t0 = time.time()
-        m, tr = extract_stage(t)
-        terms = distinct_terms(m).localCheckpoint(eager=True)
-        asn = canonicalize_stage(terms, link_stage(m, terms=terms)) \
-            .localCheckpoint(eager=True)
-        nodes, edges = materialize_stage(spark, m, tr, asn)
+        res = run_pipeline(spark, t)
+        nodes, edges, tr = res.nodes, res.edges, res.triples_raw
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(2) as ex:
             fn, fe = ex.submit(nodes.count), ex.submit(edges.count)

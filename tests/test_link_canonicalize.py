@@ -69,6 +69,18 @@ def test_cc_large_component(spark, driver_threshold):
     assert {got[f"s{i:02d}"] for i in range(50)} == {"hub"}
 
 
+def test_cc_fails_loudly_when_max_iter_runs_out(spark):
+    """A 101-node chain needs more than two star rounds: with max_iter=2 the
+    distributed loop must raise instead of returning an unconverged
+    canonicalization; with the default max_iter it finds the one root."""
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(100)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge within max_iter=2"):
+        connected_components(df, max_iter=2, driver_threshold=0)
+    got = connected_components(df, driver_threshold=0)
+    assert {r["canon"] for r in got.collect()} == {"n000"}
+
+
 def test_alias_edges(spark, transcripts):
     m = mentions(transcripts)
     ae = alias_edges(distinct_terms(m)).collect()

@@ -67,6 +67,9 @@ def test_resume_is_value_identical(spark, transcripts, tmp_path):
     # an independent run in a fresh dir agrees (hash BEFORE deleting its
     # files — the DataFrames lazily re-read the checkpoint parquet)
     assert _table_hash(r2.nodes) == h_nodes and _table_hash(r2.edges) == h_edges
+    # ... and so does the in-memory handoff (no run_dir)
+    mem = run_pipeline(spark, transcripts)
+    assert _table_hash(mem.nodes) == h_nodes and _table_hash(mem.edges) == h_edges
     m = read_manifest(killed)
     for stage in ("canonicalize", "materialize"):
         m["stages"].pop(stage)
@@ -198,16 +201,6 @@ def test_ivm_finalize_equals_build_nodes(spark, transcripts, tmp_path):
     """finalize_nodes(node_summaries(M), A) ≡ build_nodes(canonical_mentions
     (M, A)) — the summaries carry exactly the statistics the canon-level
     aggregation needs, row-for-row."""
-    from knowledge_extraction_pipeline_spark.operators.canonicalize import (
-        canonicalize_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.extract import (
-        extract_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.link import (
-        distinct_terms,
-        link_stage,
-    )
     from knowledge_extraction_pipeline_spark.operators.materialize import (
         build_nodes,
         canonical_mentions,
@@ -217,9 +210,8 @@ def test_ivm_finalize_equals_build_nodes(spark, transcripts, tmp_path):
         node_summaries,
     )
 
-    m, _ = extract_stage(transcripts)
-    m = m.persist()
-    asn = canonicalize_stage(distinct_terms(m), link_stage(m)).persist()
+    res = run_pipeline(spark, transcripts)
+    m, asn = res.mentions, res.assignments
     want = build_nodes(canonical_mentions(m, asn))
     got = finalize_nodes(node_summaries(m), asn)
     _rows_equal(got, want, "finalize vs build_nodes")
@@ -232,15 +224,8 @@ def test_ivm_merge_is_exact(spark, transcripts, tmp_path):
     absorbed because state is keyed by norm_term)."""
     from pyspark.sql import functions as F
 
-    from knowledge_extraction_pipeline_spark.operators.canonicalize import (
-        canonicalize_stage,
-    )
     from knowledge_extraction_pipeline_spark.operators.extract import (
         extract_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.link import (
-        distinct_terms,
-        link_stage,
     )
     from knowledge_extraction_pipeline_spark.operators.materialize import (
         build_nodes,
@@ -258,11 +243,10 @@ def test_ivm_merge_is_exact(spark, transcripts, tmp_path):
 
     m_old, _ = extract_stage(old_t)
     m_delta, _ = extract_stage(delta_t)
-    m_all = m_old.unionByName(m_delta).persist()
-
     merged = merge_summaries(node_summaries(m_old), node_summaries(m_delta))
-    asn = canonicalize_stage(distinct_terms(m_all), link_stage(m_all)).persist()
 
+    full = run_pipeline(spark, transcripts)
+    m_all, asn = full.mentions, full.assignments
     want = build_nodes(canonical_mentions(m_all, asn))
     got = finalize_nodes(merged, asn)
     _rows_equal(got, want, "merged summaries vs full recompute")

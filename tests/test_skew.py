@@ -43,7 +43,7 @@ def test_salted_pair_counts_exact_under_skew(spark):
     asn = alias_assignments(m)
     mc = canonical_mentions(m, asn)
     edges = {(r["subj"], r["obj"]): r for r in
-             build_edges(tr, asn, mc).collect()}
+             build_edges(tr, mc).collect()}
     # counts are exact despite the hot key funneling through 16 salt shards
     hc = edges[("hot", "common")] if ("hot", "common") in edges else edges[("common", "hot")]
     assert hc["common"] == 3000

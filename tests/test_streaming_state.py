@@ -377,20 +377,11 @@ def test_stream_kg_update_matches_batch_nodes(spark, transcripts, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from knowledge_extraction_pipeline_spark.operators.canonicalize import (
-        canonicalize_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.extract import (
-        extract_stage,
-    )
-    from knowledge_extraction_pipeline_spark.operators.link import (
-        distinct_terms,
-        link_stage,
-    )
     from knowledge_extraction_pipeline_spark.operators.materialize import (
         build_nodes,
         canonical_mentions,
     )
+    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
     from knowledge_extraction_pipeline_spark.streaming.stream import (
         finalize_stream_nodes,
         start_stream_kg_update,
@@ -411,10 +402,8 @@ def test_stream_kg_update_matches_batch_nodes(spark, transcripts, tmp_path):
 
     got = finalize_stream_nodes(spark, state)
 
-    m, _ = extract_stage(transcripts)
-    m = m.persist()
-    asn = canonicalize_stage(distinct_terms(m), link_stage(m)).persist()
-    want = build_nodes(canonical_mentions(m, asn))
+    res = run_pipeline(spark, transcripts)
+    want = build_nodes(canonical_mentions(res.mentions, res.assignments))
 
     from tests.test_pipeline_resume import _rows_equal
     _rows_equal(got, want, "stream-maintained vs batch nodes")
