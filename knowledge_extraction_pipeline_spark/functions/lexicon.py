@@ -188,8 +188,18 @@ def apply_alias_py(norm: str) -> str:
     return KNOWN_ALIASES.get(norm, norm)
 
 
+def literal_map(d: dict[str, str]) -> Column:
+    """A str → str dict as a map literal, parsed from ONE `map(...)` SQL
+    expression: one JVM call, where `F.create_map(*[F.lit(x) ...])` makes
+    one per key and per value. It analyzes to the same CreateMap of string
+    literals. Quotes and backslashes are escaped for the SQL parser."""
+    def quoted(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return F.expr("map(" + ", ".join(
+        quoted(x) for kv in d.items() for x in kv) + ")")
+
+
 def apply_alias(norm: Column) -> Column:
     """apply_alias_py as a Column: the known-alias target of a normalized
     term, else the term itself (a map literal — no join)."""
-    amap = F.create_map(*[F.lit(x) for kv in KNOWN_ALIASES.items() for x in kv])
-    return F.coalesce(amap[norm], norm)
+    return F.coalesce(literal_map(KNOWN_ALIASES)[norm], norm)

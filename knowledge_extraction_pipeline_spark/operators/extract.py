@@ -76,14 +76,13 @@ def _jvm_pattern() -> str:
 
 
 def _lookup_maps():
-    from ..functions.lexicon import surface_map
+    from ..functions.lexicon import literal_map, surface_map
 
     cat, imp = {}, {}
     for key, (_base, _kind, c, i) in surface_map().items():
         cat[key] = c
         imp[key] = i
-    mk = lambda d: F.create_map(*[F.lit(x) for kv in d.items() for x in kv])
-    return mk(cat), mk(imp)
+    return literal_map(cat), literal_map(imp)
 
 
 def with_mention_array_jvm(transcripts: DataFrame) -> DataFrame:

@@ -22,11 +22,18 @@ Semantics kept byte-compatible with the reference's deterministic path:
       entity insertion order = first concept occurrence)
   edge type = category-pair rule table, direct then reverse, else RELATED_TO
       (scripts/type_relationships.py:107-128)
+
+Every "first"/"earliest" above orders mentions by their occurrence
+(conv_id, turn_idx, start). materialize_stage packs that triple into ONE
+order-preserving BIGINT `occ` (conversation ordinal | turn_idx | start), so
+the min/min_by aggregates keep fixed-width buffers and the top-k sorts
+compare longs, not structs of strings; nodes.first_occ is unpacked back to
+the struct on output. The operators below take either form of `occ`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -38,9 +45,13 @@ from ..config import (
     EVIDENCE_SAMPLE,
     MIN_COOCCURRENCES,
 )
-from ..functions.lexicon import apply_alias
+from ..functions.lexicon import apply_alias, literal_map
 
 N_SALT = 16
+
+# bit widths of the packed occurrence key; together 63 bits, so the key is
+# a non-negative BIGINT whose order is the (conv_id, turn_idx, start) order
+CONV_BITS, TURN_BITS, START_BITS = 27, 16, 20
 
 
 def alias_assignments(mentions: DataFrame) -> DataFrame:
@@ -56,45 +67,84 @@ def alias_assignments(mentions: DataFrame) -> DataFrame:
     )
 
 
+def conv_ordinals(mentions: DataFrame) -> DataFrame:
+    """(conv_id, _ord): the dense rank, from 0, of the distinct conv_ids —
+    the conversation field of the packed occurrence key. Conversation-sized:
+    one shuffle for the distinct, then one single-partition sort, and
+    broadcast to its consumers."""
+    return mentions.select("conv_id").distinct().coalesce(1).select(
+        "conv_id",
+        (F.row_number().over(Window.orderBy("conv_id")) - 1).cast("long").alias("_ord"))
+
+
+def with_occ_key(df: DataFrame, ordinals: DataFrame,
+                 fields: tuple[tuple[str, int], ...] = (
+                     ("turn_idx", TURN_BITS), ("start", START_BITS))) -> DataFrame:
+    """df plus `occ`: the conversation ordinal of its conv_id packed with
+    `fields` into one BIGINT that orders like struct(conv_id, *fields). A
+    field that is null, negative or wider than its bits fails the query
+    instead of silently reordering occurrences."""
+    key, ok = "_ord", f"_ord < {1 << CONV_BITS}"
+    for name, bits in fields:
+        key = f"shiftleft({key}, {bits}) | CAST({name} AS BIGINT)"
+        ok += f" AND {name} BETWEEN 0 AND {(1 << bits) - 1}"
+    names = ", ".join(["_ord"] + [n for n, _ in fields])
+    widths = ", ".join([f"conv={CONV_BITS}"] + [f"{n}={b}" for n, b in fields])
+    occ = F.expr(f"CASE WHEN {ok} THEN {key} ELSE raise_error(concat("
+                 f"'occurrence key field out of range (bits {widths}): ', "
+                 f"to_json(struct({names})))) END")
+    return (df.join(F.broadcast(ordinals), "conv_id", "left")
+            .select(*df.columns, occ.alias("occ")))
+
+
+def occ_struct(nodes: DataFrame, mentions: DataFrame) -> DataFrame:
+    """nodes with the packed `first_occ` unpacked to struct(conv_id,
+    turn_idx, start), typed as in `mentions`. `sources` lists a node's
+    conversations by first occurrence, so sources[0] is the conversation of
+    first_occ — no lookup of the ordinal needed."""
+    types = dict(mentions.dtypes)
+    occ = F.expr(
+        f"struct(sources[0] AS conv_id, "
+        f"CAST(shiftright(first_occ, {START_BITS}) & {(1 << TURN_BITS) - 1}"
+        f" AS {types['turn_idx']}) AS turn_idx, "
+        f"CAST(first_occ & {(1 << START_BITS) - 1} AS {types['start']}) AS start)")
+    return nodes.withColumn("first_occ", occ)
+
+
 def canonical_mentions(mentions: DataFrame, assignments: DataFrame) -> DataFrame:
     """Attach the canonical id to every mention. assignments is vocabulary-
-    sized; Spark broadcasts it when small, AQE handles the rest."""
-    return mentions.join(assignments, on="norm_term", how="left").withColumn(
-        "canon", F.coalesce("canon", "norm_term")
-    ).withColumn(
-        "occ", F.struct("conv_id", "turn_idx", "start")
-    )
-
-
-def entity_chunk_counts(mentions_c: DataFrame) -> DataFrame:
-    """|distinct chunks| per canonical entity — two-phase (distinct on the
-    full key, then count) so hot entities never funnel into one task."""
-    return (
-        mentions_c.select("canon", "conv_id", "turn_idx").distinct()
-        .groupBy("canon").count().withColumnRenamed("count", "n_chunks")
-    )
-
-
-def representative_norms(mentions_c: DataFrame) -> DataFrame:
-    """Per canonical group, the member norm_term whose first occurrence is
-    earliest — the reference's group[0] entity. known_alias_resolution
-    (graph_tools.py:137-149) keeps ONLY that member's evidence list when
-    merging, so the reference's co-occurrence stage sees only the first
-    member's chunk set; we reproduce that exactly for edge parity."""
-    by_norm = mentions_c.groupBy("canon", "norm_term").agg(F.min("occ").alias("first_occ"))
-    return by_norm.groupBy("canon").agg(
-        F.min_by("norm_term", "first_occ").alias("rep_norm"))
+    sized; Spark broadcasts it when small, AQE handles the rest. Mentions
+    without an `occ` key get struct(conv_id, turn_idx, start)."""
+    mc = mentions.join(assignments, on="norm_term", how="left").withColumn(
+        "canon", F.coalesce("canon", "norm_term"))
+    if "occ" in mentions.columns:
+        return mc
+    return mc.withColumn("occ", F.struct("conv_id", "turn_idx", "start"))
 
 
 def entity_profile(mentions_c: DataFrame) -> DataFrame:
-    """Per-canonical first-occurrence key + first-occurrence category (the
-    reference's base_concept semantics: first concept in group order,
-    graph_tools.py:58-63)."""
-    return mentions_c.groupBy("canon").agg(
+    """Per canonical entity, from its earliest occurrence: rep_norm, the
+    member norm_term that occurs first — the reference's group[0] entity —
+    plus first_occ and that mention's category (the reference's
+    base_concept semantics: first concept in group order,
+    graph_tools.py:58-63), and n_chunks, the number of distinct chunks
+    rep_norm occurs in. known_alias_resolution (graph_tools.py:137-149)
+    keeps ONLY group[0]'s evidence list when merging, so the reference's
+    co-occurrence stage sees only the first member's chunk set; edges
+    reproduce that exactly for parity.
+
+    Two phases, per (canon, norm_term) then per canon; the distinct chunk
+    count is itself two-phase (distinct on the full key, then count), so
+    hot entities never funnel into one task."""
+    by_norm = mentions_c.groupBy("canon", "norm_term").agg(
         F.min("occ").alias("first_occ"),
         F.min_by("category", "occ").alias("category"),
-        F.min_by("importance", "occ").alias("importance"),
-    )
+        F.count_distinct("conv_id", "turn_idx").alias("n_chunks"))
+    return by_norm.groupBy("canon").agg(
+        F.min_by("norm_term", "first_occ").alias("rep_norm"),
+        F.min("first_occ").alias("first_occ"),
+        F.min_by("category", "first_occ").alias("category"),
+        F.min_by("n_chunks", "first_occ").alias("n_chunks"))
 
 
 def _salted_topk(df: DataFrame, key: str, sort_cols: list[str],
@@ -133,8 +183,8 @@ def build_nodes(mentions_c: DataFrame,
         mentions_c_quotes = mentions_c
     # groupBy(canon, term) first: output cardinality = surface variants per
     # entity (small), so the follow-up name window is over tiny groups. The
-    # same pass also partial-aggregates confidence/category/count, so the
-    # confidence rollup is a second-phase aggregate over this tiny table.
+    # same pass also partial-aggregates confidence/category/count for the
+    # canon-level rollup that rides on that window.
     by_term = mentions_c.groupBy("canon", "term").agg(
         F.count(F.lit(1)).alias("cnt"), F.min("occ").alias("first_occ"),
         F.sum("confidence").alias("_conf_sum"),
@@ -159,7 +209,9 @@ def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
                 ev: DataFrame, by_src: DataFrame) -> DataFrame:
     """Second phase of the node build: canon-level names, definitions,
     category/importance modes, evidence, sources and the confidence rollup,
-    joined into one row per canonical entity. Inputs, all keyed by canon:
+    joined into one row per canonical entity. `first_occ` (and ev's `occ`)
+    may be the packed BIGINT key or struct(conv_id, turn_idx, start); only
+    their order is used. Inputs, all keyed by canon:
 
       by_term  (canon, term, cnt, first_occ, _conf_sum, _conf_n, _first_cat)
       by_quote (canon, quote, first_occ)
@@ -170,19 +222,34 @@ def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
 
     build_nodes derives them from mentions; plans/ivm from its norm_term
     summaries."""
-    by_term = by_term.persist()  # tiny; read by names AND conf
     # canonical_term: modal original casing, ties → earliest occurrence
-    # (entity_resolver.py:462-465 uses the most common surface form)
+    # (entity_resolver.py:462-465 uses the most common surface form). The
+    # profile, confidence and count rollup rides on the same canon
+    # partitioning as whole-canon window aggregates — the term whose
+    # first_occ is the global minimum contains the globally earliest
+    # mention, so its _first_cat is the reference's base category
     w_term = Window.partitionBy("canon").orderBy(
         F.desc("cnt"), F.asc("first_occ"), F.asc("term")
     )
-    ranked_terms = by_term.withColumn("rn", F.row_number().over(w_term)).filter(
-        F.col("rn") <= 21
-    )
+    w_canon = Window.partitionBy("canon")
+    ranked_terms = by_term.select(
+        "canon", "term",
+        F.row_number().over(w_term).alias("rn"),
+        F.sum("_conf_sum").over(w_canon).alias("_conf_sum"),
+        F.sum("_conf_n").over(w_canon).alias("_conf_n"),
+        F.sum("cnt").over(w_canon).alias("mention_count"),
+        F.min("first_occ").over(w_canon).alias("first_occ"),
+        F.min_by("_first_cat", "first_occ").over(w_canon).alias("category"),
+    ).filter(F.col("rn") <= 21)
     names = ranked_terms.groupBy("canon").agg(
         F.min_by("term", "rn").alias("canonical_term"),
         F.array_sort(F.collect_list(
             F.when(F.col("rn") > 1, F.col("term")))).alias("aliases"),
+        # constant per canon: max() just carries them through
+        F.round(F.max("_conf_sum") / F.max("_conf_n"), 6).alias("avg_confidence"),
+        F.max("mention_count").alias("mention_count"),
+        F.max("first_occ").alias("first_occ"),
+        F.max("category").alias("category"),
     )
 
     # definitions: distinct quotes, first DEFINITIONS_CAP by occurrence
@@ -190,18 +257,24 @@ def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
                         DEFINITIONS_CAP, "_defs").select(
         "canon", F.transform(F.col("_defs"), lambda x: x["quote"]).alias("definitions"))
 
-    # category / importance histograms → mode
-    by_ci = by_ci.persist()  # tiny (≤ |canon|·28 rows), reused twice
-    by_cat = by_ci.groupBy("canon", "category").agg(F.sum("count").alias("count"))
-    w_cat = Window.partitionBy("canon").orderBy(F.desc("count"), "category")
-    cats = by_cat.withColumn("rn", F.row_number().over(w_cat)).groupBy("canon").agg(
-        F.min_by("category", "rn").alias("primary_category"),
-        F.map_from_entries(F.collect_list(F.struct("category", "count"))).alias("categories"),
-    )
-    by_imp = by_ci.groupBy("canon", "importance").agg(F.sum("count").alias("count"))
-    w_imp = Window.partitionBy("canon").orderBy(F.desc("count"), "importance")
-    imps = by_imp.withColumn("rn", F.row_number().over(w_imp)).groupBy("canon").agg(
-        F.min_by("importance", "rn").alias("primary_importance"),
+    # category / importance histograms → modes (count desc, then value).
+    # by_ci holds at most |categories|·|importance levels| rows per canon,
+    # so one bounded collect per canon feeds both histograms
+    def hist(field: str) -> Column:
+        """array<struct(n = -count, field)> of _ci summed by field, sorted."""
+        return F.expr(
+            f"array_sort(transform(array_distinct(transform(_ci, x -> x.{field})),"
+            f" v -> struct(-aggregate(filter(_ci, x -> x.{field} <=> v), 0L,"
+            f" (acc, x) -> acc + x.count) AS n, v AS {field})))")
+    cis = by_ci.groupBy("canon").agg(F.collect_list(
+        F.struct("category", "importance", "count")).alias("_ci")).select(
+        "canon", hist("category").alias("_cats"), hist("importance").alias("_imps"))
+    cis = cis.select(
+        "canon",
+        F.col("_cats")[0]["category"].alias("primary_category"),
+        F.col("_imps")[0]["importance"].alias("primary_importance"),
+        F.map_from_entries(F.transform(F.col("_cats"), lambda c: F.struct(
+            c["category"], -c["n"]))).alias("categories"),
     )
 
     # evidence sample (<= EVIDENCE_SAMPLE earliest mentions) + sources (<=20)
@@ -215,20 +288,11 @@ def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
                         "_srcs").select(
         "canon", F.transform(F.col("_srcs"), lambda x: x["conv_id"]).alias("sources"))
 
-    # profile + confidence + counts: second-phase rollup of by_term — the
-    # term whose first_occ is the global minimum contains the globally
-    # earliest mention, so its _first_cat is the reference's base category
-    conf = by_term.groupBy("canon").agg(
-        F.round(F.sum("_conf_sum") / F.sum("_conf_n"), 6)
-        .alias("avg_confidence"),
-        F.sum("cnt").alias("mention_count"),
-        F.min("first_occ").alias("first_occ"),
-        F.min_by("_first_cat", "first_occ").alias("category"),
-    )
-
+    # every part is already hash-partitioned by canon by its last
+    # aggregate, so sort-merge joins need no shuffle and no broadcast job
     return (
-        names.join(defs, "canon").join(cats, "canon").join(imps, "canon")
-        .join(ev, "canon").join(srcs, "canon").join(conf, "canon")
+        names.join(defs.hint("merge"), "canon").join(cis.hint("merge"), "canon")
+        .join(ev.hint("merge"), "canon").join(srcs.hint("merge"), "canon")
         .select(
             F.xxhash64("canon").alias("canonical_id"),
             F.col("canon"),
@@ -238,20 +302,6 @@ def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
             "avg_confidence", "mention_count", "evidence", "sources", "first_occ",
         )
     )
-
-
-def typing_table(spark: SparkSession, categories: list[str] | None = None) -> DataFrame:
-    """Full (cat_subj, cat_obj) → pred table with the reference's
-    direct-then-reverse-else-default lookup pre-resolved, broadcastable."""
-    cats = sorted(set(categories or CATEGORIES)
-                  | {c for k in CATEGORY_RELATIONSHIPS for c in k})
-    rows = []
-    for a in cats:
-        for b in cats:
-            pred = CATEGORY_RELATIONSHIPS.get(
-                (a, b), CATEGORY_RELATIONSHIPS.get((b, a), DEFAULT_RELATIONSHIP_TYPE))
-            rows.append((a, b, pred))
-    return spark.createDataFrame(rows, "cat_subj string, cat_obj string, pred string")
 
 
 def build_edges(
@@ -266,12 +316,18 @@ def build_edges(
     A canonical entity's chunk set is its first-occurring member norm's
     chunks, byte-matching the reference's alias-merge behavior
     (graph_tools.py:137-149 copies group[0] and never merges the evidence
-    lists)."""
-    # vocabulary-sized; materialized so the four consumers below don't
-    # each rescan the mentions table
-    rep = representative_norms(mentions_c).persist()
-    rep_map = rep.select(F.col("rep_norm").alias("norm_term"), "canon")
-    mentions_used = mentions_c.drop("canon").join(rep_map, "norm_term")
+    lists).
+
+    Pair evidence is the earliest EVIDENCE_SAMPLE chunks by the triples'
+    `occ` (a packed (conv_id, turn_idx) key), else by
+    struct(conv_id, turn_idx)."""
+    if "occ" not in triples_raw.columns:
+        triples_raw = triples_raw.withColumn("occ", F.struct("conv_id", "turn_idx"))
+    # vocabulary-sized; materialized once, eagerly, so the four joins below
+    # neither rescan the mentions nor each rebuild it
+    prof = entity_profile(mentions_c).persist()
+    prof.count()
+    rep_map = prof.select(F.col("rep_norm").alias("norm_term"), "canon")
     a_map = rep_map.select(F.col("norm_term").alias("subj"), F.col("canon").alias("ca"))
     b_map = rep_map.select(F.col("norm_term").alias("obj"), F.col("canon").alias("cb"))
     # inner joins: pairs whose endpoint norms are not group representatives
@@ -283,7 +339,7 @@ def build_edges(
         .select(
             F.least("ca", "cb").alias("a"),
             F.greatest("ca", "cb").alias("b"),
-            "conv_id", "turn_idx",
+            "occ", "conv_id", "turn_idx",
         )
         .distinct()  # one (pair, chunk) row — full-key shuffle, skew-free
     )
@@ -292,30 +348,23 @@ def build_edges(
     )
     partial = salted.groupBy("a", "b", "salt").agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.slice(F.array_sort(F.collect_list(F.struct("conv_id", "turn_idx"))),
+        F.slice(F.array_sort(F.collect_list(F.struct("occ", "conv_id", "turn_idx"))),
                 1, EVIDENCE_SAMPLE).alias("ev"),
     )
     agg = partial.groupBy("a", "b").agg(
         F.sum("cnt").alias("common"),
-        F.slice(F.array_sort(F.flatten(F.collect_list("ev"))),
-                1, EVIDENCE_SAMPLE).alias("evidence"),
+        F.transform(
+            F.slice(F.array_sort(F.flatten(F.collect_list("ev"))), 1, EVIDENCE_SAMPLE),
+            lambda x: F.struct(x["conv_id"].alias("conv_id"),
+                               x["turn_idx"].alias("turn_idx"))).alias("evidence"),
     ).filter(F.col("common") >= min_cooccurrences)
 
-    # entity-level (small) aggregates, each consumed twice below —
-    # materialize once instead of recomputing per join branch
-    counts = entity_chunk_counts(mentions_used).persist()
-    prof = entity_profile(mentions_c).select("canon", "first_occ", "category") \
-        .persist()
+    def side(x: str) -> DataFrame:
+        return prof.select(F.col("canon").alias(x), F.col("n_chunks").alias(f"n_{x}"),
+                           F.col("first_occ").alias(f"occ_{x}"),
+                           F.col("category").alias(f"cat_{x}"))
 
-    agg = (
-        agg
-        .join(counts.select(F.col("canon").alias("a"), F.col("n_chunks").alias("n_a")), "a")
-        .join(counts.select(F.col("canon").alias("b"), F.col("n_chunks").alias("n_b")), "b")
-        .join(prof.select(F.col("canon").alias("a"), F.col("first_occ").alias("occ_a"),
-                          F.col("category").alias("cat_a")), "a")
-        .join(prof.select(F.col("canon").alias("b"), F.col("first_occ").alias("occ_b"),
-                          F.col("category").alias("cat_b")), "b")
-    )
+    agg = agg.join(side("a"), "a").join(side("b"), "b")
     first_is_a = F.col("occ_a") <= F.col("occ_b")
     return agg.select(
         F.when(first_is_a, F.col("a")).otherwise(F.col("b")).alias("subj"),
@@ -331,15 +380,17 @@ def build_edges(
     )
 
 
-def type_edges(edges: DataFrame, typing: DataFrame) -> DataFrame:
-    """Upgrade CO_OCCURS to semantic types via a broadcast join against the
-    pre-resolved category-pair table."""
-    return (
-        edges.drop("pred")
-        .join(F.broadcast(typing), on=["cat_subj", "cat_obj"], how="left")
-        .withColumn("pred", F.coalesce("pred", F.lit(DEFAULT_RELATIONSHIP_TYPE)))
-        .select("subj", "pred", "obj", "common", "strength", "confidence", "evidence")
-    )
+def type_edges(edges: DataFrame) -> DataFrame:
+    """Upgrade CO_OCCURS to semantic types: the category-pair rule table
+    with its direct-then-reverse-else-default lookup pre-resolved into one
+    map literal keyed by "cat_subj|cat_obj" — a lookup, no join."""
+    cats = sorted(set(CATEGORIES) | {c for k in CATEGORY_RELATIONSHIPS for c in k})
+    rules = {f"{a}|{b}": t for a in cats for b in cats
+             if (t := CATEGORY_RELATIONSHIPS.get((a, b), CATEGORY_RELATIONSHIPS.get((b, a))))}
+    pred = literal_map(rules)[F.concat_ws("|", "cat_subj", "cat_obj")]
+    return edges.select(
+        "subj", F.coalesce(pred, F.lit(DEFAULT_RELATIONSHIP_TYPE)).alias("pred"),
+        "obj", "common", "strength", "confidence", "evidence")
 
 
 def materialize_stage(
@@ -355,26 +406,35 @@ def materialize_stage(
     (subj/obj) are alias-canonical normalized terms, exactly like the
     reference's relationship source/target (graph_tools.py:223-231); join
     edges→nodes through `assignments` (norm_term → canon) when graph-level
-    consistency is needed."""
-    # slim projection cached once (columnar, prunable): the eight quote-free
+    consistency is needed. `spark` is unused; it stays for the stage
+    functions' common call shape."""
+    # every mention is ordered by its packed occurrence key (module
+    # docstring). The tables shared by several branches are materialized
+    # here, eagerly: a lazy cache that stages of the nodes and edges plans
+    # reach at once is built once per reading job, not once. Counting slim
+    # builds the ordinals too, as its only reader so far.
+    ordinals = conv_ordinals(mentions).persist()
+    # slim projection cached once (columnar, prunable): the quote-free
     # aggregation branches read this instead of recomputing the explode or
-    # dragging quote strings through every shuffle
-    slim = mentions.drop("quote").persist()
+    # dragging quote strings through every shuffle; `start` lives on in occ
+    slim = with_occ_key(mentions.drop("quote"), ordinals).drop("start").persist()
+    slim.count()
 
     mc_nodes = canonical_mentions(slim, assignments)
     # the quote-carrying projection feeds the two quote aggregates
     # (definitions distinct + evidence top-k); it is recomputed rather than
     # cached — on an idle machine the cache write costs more than the
     # recompute of one cheap explode+join
-    mc_nodes_q = canonical_mentions(
+    mc_nodes_q = canonical_mentions(with_occ_key(
         mentions.select("conv_id", "turn_idx", "norm_term", "start", "quote"),
-        assignments)
-    nodes = build_nodes(mc_nodes, mc_nodes_q)
+        ordinals), assignments)
+    nodes = occ_struct(build_nodes(mc_nodes, mc_nodes_q), mentions)
 
     # exact+alias canonicalization for the edge path — derived from the
     # vocabulary already in `assignments`, NOT another scan of mentions
     edge_asn = assignments.select("norm_term").withColumn(
         "canon", apply_alias(F.col("norm_term")))
     mc_edges = canonical_mentions(slim, edge_asn)
-    edges = type_edges(build_edges(triples_raw, mc_edges), typing_table(spark))
+    triples = with_occ_key(triples_raw, ordinals, (("turn_idx", TURN_BITS),))
+    edges = type_edges(build_edges(triples, mc_edges))
     return nodes, edges

@@ -19,14 +19,18 @@ and the finalize's canon-level aggregates consume exactly these statistics
 
   finalize_nodes(node_summaries(M), A) ≡ build_nodes(canonical_mentions(M, A))
 
-row-for-row — pinned by tests/test_pipeline_resume.py::test_ivm_*. State
+row-for-row — pinned by tests/test_pipeline_resume.py::test_ivm_*. The
+summaries order occurrences by struct(conv_id, turn_idx, start), not by
+materialize_stage's packed BIGINT key: that key's conversation ordinal is
+a rank over the whole conv_id set, so a delta would renumber stored state
+(node_rollup takes either form). State
 size is vocabulary × surface-variant granular (quotes/evidence capped or
 naturally bounded), orders of magnitude below the mention stream; merges are
 narrow co-partitioned aggregates.
 
 EDGES are deliberately NOT summarized at pair granularity: the reference's
 first_member evidence scope gates which raw triples count by a GLOBAL
-argmin (the group representative, materialize.representative_norms), so
+argmin (the group representative, materialize.entity_profile), so
 pair-level counts are not a semigroup — a delta can change the
 representative and retroactively re-gate history. The exact mergeable unit
 for edges is the deduped (pair, chunk) set, i.e. the triples_raw

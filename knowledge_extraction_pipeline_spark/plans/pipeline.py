@@ -100,12 +100,15 @@ def append_transcripts(
     scale, where stage 1 (the regex/UDF scan over raw text) dominates cost
     and must only ever touch new data.
 
-    Exact by construction: extraction is row-local and the mention ordering
-    key `occ` is a pure function of row content (struct(conv_id, turn_idx,
-    start), materialize.py:67) — never a run-global counter — so
-    union(extract(old), extract(delta)) ≡ extract(old ∪ delta) and every
-    downstream stage sees identical input (equality with the full recompute
-    is pinned by tests/test_pipeline_resume.py::test_append_equals_full).
+    Exact by construction: extraction is row-local and its rows carry no
+    run-global counter — mentions are ordered by (conv_id, turn_idx,
+    start), row content — so union(extract(old), extract(delta)) ≡
+    extract(old ∪ delta) and every downstream stage sees identical input
+    (equality with the full recompute is pinned by
+    tests/test_pipeline_resume.py::test_append_equals_full). The packed
+    occurrence key `occ`, whose conversation ordinal depends on the whole
+    conv_id set, is internal to materialize_stage: it is recomputed from
+    the merged mentions on every run and never stored.
     Stages 2-4 DO recompute: linking/CC are vocabulary-sized (constant-ish
     in corpus growth) and the merge aggregates are additive shuffles over
     mention summaries; summary-level IVM (persisting by_term/by_quote/by_ci

@@ -19,7 +19,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    if master is None:
+        # one task slot per CPU this process may run on
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        master = f"local[{cpus}]"
     # local[N] → N concurrent tasks; match shuffle width to it locally.
     if shuffle_partitions is None:
         if master.startswith("local["):

@@ -9,6 +9,11 @@ analog of the reference's skip-if-processed resume,
 scripts/batch_process.py:357-360, and stage-file caching,
 mcp/graph_tools.py:503-529).
 
+A checkpoint costs one Spark job: the table write. Its row counts are read
+from the written files' metadata, and its per-partition metrics rows are
+written by the driver as one file per (stage, table) under
+`<run_dir>/metrics/`, replaced whole when a crashed write is retried.
+
 When the Iceberg classes ARE on the classpath AND a `kg_ckpt` Spark catalog
 is configured (spark.sql.catalog.kg_ckpt=org.apache.iceberg.spark.SparkCatalog
 plus type/warehouse — the standard hadoop-catalog setup), checkpoint tables
@@ -26,7 +31,6 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
 
@@ -91,62 +95,102 @@ def stage_committed(run_dir: str, stage: str, table: str) -> bool:
     return table in m["stages"].get(stage, {}).get("tables", {})
 
 
-def checkpoint_write(
-    df: DataFrame,
-    run_dir: str,
-    stage: str,
-    table: str,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """Write a stage output table, record it in the manifest with row count
-    and wall time, append per-partition metrics rows, and return the
-    re-read DataFrame (truncated lineage — downstream stages read parquet,
-    never recompute upstream plans)."""
+def _parquet_part_rows(path: str) -> dict[int, int]:
+    """Rows per writing task of a just-written Parquet table, read from the
+    footers of its `part-<task partition>-<uuid>...` files on the driver —
+    no Spark job."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for f in Path(path).glob("part-*"):
+        pid = int(f.name.split("-")[1])
+        rows[pid] = rows.get(pid, 0) + pq.read_metadata(f).num_rows
+    return rows
+
+
+def _iceberg_part_rows(spark: SparkSession, ident: str) -> dict[int, int]:
+    """Rows per writing task of an Iceberg table, from its `files` metadata
+    table (data files are named `<task partition>-<task id>-...`). No test
+    runs this: the test and benchmark hosts have no Iceberg runtime."""
+    rows: dict[int, int] = {}
+    for r in spark.read.table(f"{ident}.files") \
+            .select("file_path", "record_count").collect():
+        pid = int(Path(r["file_path"]).name.split("-")[0])
+        rows[pid] = rows.get(pid, 0) + r["record_count"]
+    return rows
+
+
+def _write_metrics(run_dir: str, stage: str, table: str,
+                   part_rows: dict[int, int], wall_ms: int) -> None:
+    """The (stage, table)'s metrics rows, one per writing task, as ONE file
+    `metrics/<stage>-<table>.parquet` written by the driver. It goes to a
+    hidden temp name first (Spark's reader skips names starting with '.'),
+    then is renamed over the final name, so a retried write replaces the
+    rows of the attempt it retries instead of adding to them."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pids = sorted(part_rows)
+    n = len(pids)
+    ts = datetime.datetime.now(datetime.timezone.utc)
+    rows = pa.table({
+        "run_id": pa.array([Path(run_dir).name] * n, pa.string()),
+        "stage": pa.array([stage] * n, pa.string()),
+        "table": pa.array([table] * n, pa.string()),
+        "partition_id": pa.array(pids, pa.int32()),
+        "rows_out": pa.array([part_rows[p] for p in pids], pa.int64()),
+        "wall_ms": pa.array([wall_ms] * n, pa.int64()),
+        "ts": pa.array([ts] * n, pa.timestamp("us", tz="UTC")),
+    })
+    out = Path(run_dir) / "metrics"
+    out.mkdir(parents=True, exist_ok=True)
+    final = out / f"{stage}-{table}.parquet"
+    tmp = out / f".{final.name}.tmp"
+    pq.write_table(rows, tmp)
+    tmp.replace(final)  # atomic on POSIX
+
+
+def checkpoint_write(df: DataFrame, run_dir: str, stage: str,
+                     table: str) -> DataFrame:
+    """Write a stage output table (for Parquet, the only Spark job here),
+    record it in the manifest with its row count and write wall time, write
+    its per-partition metrics rows, and return the re-read DataFrame
+    (truncated lineage — downstream stages read the checkpoint, never
+    recompute upstream plans).
+
+    Row counts come from the written files' own metadata (Parquet footers,
+    or Iceberg's `files` table), so nothing is re-scanned; `partition_id`
+    in the metrics rows is the partition of the task that wrote the rows."""
     spark = df.sparkSession
     path = f"{run_dir}/{stage}/{table}"
     t0 = time.time()
     use_iceberg = iceberg_available(spark)
     if use_iceberg:
         ident = _ckpt_table_ident(run_dir, stage, table)
-        w = df.writeTo(ident).using("iceberg")
-        if partition_by:
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        w.createOrReplace()
+        df.writeTo(ident).using("iceberg").createOrReplace()
     else:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        df.write.mode("overwrite").parquet(path)
     wall_ms = int((time.time() - t0) * 1000)
 
-    out = (spark.read.table(_ckpt_table_ident(run_dir, stage, table))
-           if use_iceberg else spark.read.parquet(path))
-    # Per-partition lineage/metrics rows (north rule; reference analog:
-    # core/monitoring.py PhaseMetrics) — one extra cheap scan of the
-    # just-written parquet.
-    run_id = Path(run_dir).name
-    metrics = (
-        out.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows_out"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.lit(table).alias("table"),
-            F.col("partition_id").cast("int"),
-            F.col("rows_out").cast("long"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.current_timestamp().alias("ts"),
-        )
-    )
-    metrics.write.mode("append").parquet(f"{run_dir}/metrics")
+    if use_iceberg:
+        part_rows = _iceberg_part_rows(spark, ident)
+        out = spark.read.table(ident)
+    else:
+        part_rows = _parquet_part_rows(path)
+        # the schema is known: passing it skips the schema-inference job
+        out = spark.read.schema(df.schema).parquet(path)
+    # per-partition lineage/metrics rows (north rule; reference analog:
+    # core/monitoring.py PhaseMetrics)
+    _write_metrics(run_dir, stage, table, part_rows, wall_ms)
 
     manifest = read_manifest(run_dir)
     st = manifest["stages"].setdefault(stage, {"tables": {}})
     st["tables"][table] = {
-        "path": (_ckpt_table_ident(run_dir, stage, table)
-                 if use_iceberg else path),
+        "path": ident if use_iceberg else path,
         "format": "iceberg" if use_iceberg else "parquet",
-        "rows": out.count(),
+        "rows": sum(part_rows.values()),
         "wall_ms": wall_ms,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }

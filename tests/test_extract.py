@@ -92,3 +92,25 @@ def test_triples_raw_pairs(spark, transcripts):
     mm = m.select("conv_id", "turn_idx", "norm_term").distinct()
     j = tr.join(mm.withColumnRenamed("norm_term", "subj"), ["conv_id", "turn_idx", "subj"], "left_anti")
     assert j.count() == 0
+
+
+def test_literal_maps_return_the_lexicon_values(spark):
+    """The one-call category and importance maps of the JVM path return
+    surface_map()'s values for every key."""
+    from knowledge_extraction_pipeline_spark.functions.lexicon import surface_map
+    from knowledge_extraction_pipeline_spark.operators.extract import _lookup_maps
+
+    cat_map, imp_map = _lookup_maps()
+    keys = spark.createDataFrame([(k,) for k in surface_map()], "k string")
+    got = {r["k"]: (r["c"], r["i"]) for r in keys.select(
+        "k", cat_map[F.col("k")].alias("c"), imp_map[F.col("k")].alias("i")).collect()}
+    assert got == {k: (c, i) for k, (_b, _kind, c, i) in surface_map().items()}
+
+
+def test_literal_map_escapes_quotes_and_backslashes(spark):
+    from knowledge_extraction_pipeline_spark.functions.lexicon import literal_map
+
+    d = {"it's": "a\\b", "back\\slash": "q'uote", "both\\'": "\\n'", "plain": "x"}
+    keys = spark.createDataFrame([(k,) for k in [*d, "missing"]], "k string")
+    got = dict(keys.select("k", literal_map(d)[F.col("k")].alias("v")).collect())
+    assert got == {**d, "missing": None}

@@ -3,6 +3,8 @@ recompute) + per-partition metrics rows."""
 
 import shutil
 
+from pyspark.sql import functions as F
+
 from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
 from knowledge_extraction_pipeline_spark.sources.tables import (
     read_manifest,
@@ -101,6 +103,21 @@ def test_partial_write_is_overwritten(spark, transcripts, tmp_path):
     r2 = run_pipeline(spark, transcripts, run_dir)
     assert r2.recomputed_stages == ["materialize"]
     assert r2.edges.count() == n_edges
+    # the retried writes replaced their metrics rows instead of adding to them
+    assert _metrics_rows(spark, run_dir) == _manifest_rows(run_dir)
+
+
+def _metrics_rows(spark, run_dir):
+    """rows_out of the metrics rows, summed per (stage, table)."""
+    return {(r["stage"], r["table"]): r["total"] for r in
+            read_metrics(spark, run_dir).groupBy("stage", "table")
+            .agg(F.sum("rows_out").alias("total")).collect()}
+
+
+def _manifest_rows(run_dir):
+    return {(stage, table): meta["rows"]
+            for stage, info in read_manifest(run_dir)["stages"].items()
+            for table, meta in info["tables"].items()}
 
 
 def test_metrics_lineage_rows(spark, transcripts, tmp_path):
@@ -112,15 +129,7 @@ def test_metrics_lineage_rows(spark, transcripts, tmp_path):
     cols = set(metrics.columns)
     assert {"run_id", "stage", "table", "partition_id", "rows_out", "wall_ms", "ts"} <= cols
     # rows_out in metrics sums to the committed row counts in the manifest
-    man = read_manifest(run_dir)
-    got = {
-        (r["stage"], r["table"]): r["total"]
-        for r in metrics.groupBy("stage", "table").sum("rows_out")
-        .withColumnRenamed("sum(rows_out)", "total").collect()
-    }
-    for stage, info in man["stages"].items():
-        for table, meta in info["tables"].items():
-            assert got[(stage, table)] == meta["rows"]
+    assert _metrics_rows(spark, run_dir) == _manifest_rows(run_dir)
 
 
 def test_iceberg_probe_and_fallback(spark):

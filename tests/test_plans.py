@@ -233,3 +233,111 @@ def test_bloom_probe_broadcasts_bits(spark):
     plan = _plan(QUERIES["sketch_bloom_prune"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def _shape(spark, df) -> dict:
+    """Exchange and SortAggregate nodes of a DataFrame's physical plan,
+    counted inside the plan of every cached relation it scans (each cached
+    plan once, since it runs once)."""
+    identity = spark.sparkContext._jvm.System.identityHashCode
+    counts = {"Exchange": 0, "SortAggregate": 0}
+    seen = set()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name in counts:
+            counts[name] += 1
+        if name == "InMemoryTableScan":
+            cached = node.relation().cachedPlan()
+            if identity(cached) not in seen:
+                seen.add(identity(cached))
+                stack.append(cached)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return counts
+
+
+def test_materialize_plan_shape(spark, transcripts, tmp_path):
+    """Shuffles and sort-based aggregates of the nodes and edges plans as
+    Spark plans them for multi-file stage inputs, before adaptive execution
+    re-plans them for the data at hand (a single-partition input needs
+    almost no shuffle). The packed BIGINT occurrence key keeps the
+    min/min_by buffers fixed-width, so they hash-aggregate; only min_by
+    over a string value still sorts. The counts are pinned: a change must
+    be deliberate."""
+    from knowledge_extraction_pipeline_spark.operators.materialize import (
+        materialize_stage,
+    )
+    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(spark, transcripts)
+    inputs = []
+    for name in ("mentions", "triples_raw", "assignments"):
+        path = str(tmp_path / name)
+        getattr(res, name).repartition(4).write.parquet(path)
+        inputs.append(spark.read.parquet(path))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        nodes, edges = materialize_stage(spark, *inputs)
+        got = {"nodes": _shape(spark, nodes), "edges": _shape(spark, edges)}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert got == {"nodes": {"Exchange": 13, "SortAggregate": 2},
+                   "edges": {"Exchange": 7, "SortAggregate": 6}}
+
+
+def test_occ_key_orders_like_the_struct(spark):
+    from knowledge_extraction_pipeline_spark.operators.materialize import (
+        CONV_BITS,
+        START_BITS,
+        TURN_BITS,
+        with_occ_key,
+    )
+    top_turn, top_start = (1 << TURN_BITS) - 1, (1 << START_BITS) - 1
+    occs = [("a", 0, 5), ("a", 1, 0), ("a", top_turn, top_start),
+            ("b", 0, 0), ("b", 0, 1), ("b", top_turn, top_start)]
+    df = spark.createDataFrame(occs, "conv_id string, turn_idx int, start int")
+    # the widest ordinal the key holds
+    ords = spark.createDataFrame([("a", 0), ("b", (1 << CONV_BITS) - 1)],
+                                 "conv_id string, _ord long")
+    rows = with_occ_key(df, ords).collect()
+    assert all(r["occ"] >= 0 for r in rows)
+    by_key = [(r["conv_id"], r["turn_idx"], r["start"])
+              for r in sorted(rows, key=lambda r: r["occ"])]
+    assert by_key == sorted(occs)
+
+
+def test_occ_key_overflow_fails_loudly(spark, transcripts):
+    """A field beyond its bit width raises instead of silently reordering
+    occurrences — in the key itself and through materialize_stage."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from knowledge_extraction_pipeline_spark.operators.materialize import (
+        CONV_BITS,
+        START_BITS,
+        TURN_BITS,
+        conv_ordinals,
+        materialize_stage,
+        with_occ_key,
+    )
+    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
+
+    schema = "conv_id string, turn_idx int, start int"
+    for turn, start in [(1 << TURN_BITS, 0), (0, 1 << START_BITS), (-1, 0), (None, 0)]:
+        df = spark.createDataFrame([("c0", 0, 0), ("c1", turn, start)], schema)
+        with pytest.raises(Exception, match="occurrence key field out of range"):
+            with_occ_key(df, conv_ordinals(df)).collect()
+    df = spark.createDataFrame([("c0", 0, 0)], schema)
+    wide = spark.createDataFrame([("c0", 1 << CONV_BITS)], "conv_id string, _ord long")
+    with pytest.raises(Exception, match="occurrence key field out of range"):
+        with_occ_key(df, wide).collect()
+
+    res = run_pipeline(spark, transcripts)
+    first = res.mentions.agg(F.min("conv_id")).first()[0]
+    m = res.mentions.withColumn("turn_idx", F.when(
+        F.col("conv_id") == first, F.lit(1 << TURN_BITS)).otherwise(F.col("turn_idx")))
+    with pytest.raises(Exception, match="occurrence key field out of range"):
+        for out in materialize_stage(spark, m, res.triples_raw, res.assignments):
+            out.collect()
