@@ -10,7 +10,7 @@ comment block above _scale_run_large and BENCH/BASELINE.md.
 
 Env:
   SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    (default 32)
+  SPARK_GRAFT_CPUS    (default: the CPUs this process may run on)
   BENCH_SKIP_SCALING  (set to skip the second, smaller-parallelism run)
 """
 
@@ -29,7 +29,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
 
 # ~10M turns/sf-unit, ~8 turns/conv → 1M turns at the sf0.1 bench point:

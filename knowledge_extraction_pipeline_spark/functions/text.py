@@ -143,32 +143,28 @@ def char_shingles(c: Column, k: int = 3) -> Column:
     return F.transform(idx, lambda i: s.substr(i, F.lit(k)))
 
 
-def minhash_signature(shingles: Column, num_hashes: int, seed: int = 42) -> Column:
-    """MinHash signature as array<long>: per hash i, min over shingles of
-    xxhash64(shingle, seed+i). Single fold over the shingle array (one pass,
-    vs num_hashes separate transform+min passes). All JVM expressions."""
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
+def minhash_signature(shingles: str, num_hashes: int, seed: int = 42) -> Column:
+    """MinHash signature as array<long> of the array<string> column named
+    `shingles`: per hash i, min over shingles of xxhash64(shingle, seed+i).
+    Single fold over the shingle array (one pass, vs num_hashes separate
+    transform+min passes). One SQL expression, so building it is one JVM
+    call."""
+    return F.expr(
+        f"aggregate(`{shingles}`, "
+        f"array_repeat(CAST({2**63 - 1} AS BIGINT), {num_hashes}), "
+        f"(acc, s) -> zip_with(acc, "
+        f"transform(sequence(0, {num_hashes - 1}), i -> xxhash64(s, i + {seed})), "
+        f"(x, y) -> least(x, y)))")
 
-    def step(acc: Column, s: Column) -> Column:
-        hs = F.transform(F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                         lambda i: F.xxhash64(s, i + seed))
-        return F.zip_with(acc, hs, lambda x, y: F.least(x, y))
 
-    return F.aggregate(shingles, init, step)
-
-
-def lsh_bands(signature: Column, num_hashes: int, num_bands: int) -> Column:
-    """Split a MinHash signature (array<long>, length num_hashes) into band
-    hashes: array<long> of length num_bands; band b hashes its contiguous
-    slice of the signature. Two sets collide in band b iff their slices are
-    identical — the standard LSH banding scheme."""
+def lsh_bands(signature: str, num_hashes: int, num_bands: int) -> Column:
+    """Split the MinHash signature column named `signature` (array<long>,
+    length num_hashes) into band hashes: array<long> of length num_bands;
+    band b hashes its contiguous slice of the signature. Two sets collide in
+    band b iff their slices are identical — the standard LSH banding scheme.
+    One SQL expression, so building it is one JVM call."""
     rows = num_hashes // num_bands
-    return F.array(*[
-        F.xxhash64(
-            F.lit(b),
-            F.concat_ws(",", F.transform(
-                F.slice(signature, b * rows + 1, rows),
-                lambda x: x.cast("string"))),
-        )
-        for b in range(num_bands)
-    ])
+    return F.expr("array(" + ", ".join(
+        f"xxhash64({b}, concat_ws(',', transform(slice(`{signature}`, {b * rows + 1}, "
+        f"{rows}), x -> CAST(x AS STRING))))"
+        for b in range(num_bands)) + ")")

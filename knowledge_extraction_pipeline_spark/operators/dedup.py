@@ -178,8 +178,8 @@ def minhash_near_dup_pairs(
     ).persist()
     # bands stay NARROW (id + band key only) — the shingle arrays would be
     # replicated x num_bands through the explode and the bucket shuffle
-    bands = sh.withColumn("sig", minhash_signature(F.col("sh"), num_hashes)) \
-        .select("id", F.posexplode(lsh_bands(F.col("sig"), num_hashes, num_bands))
+    bands = sh.withColumn("sig", minhash_signature("sh", num_hashes)) \
+        .select("id", F.posexplode(lsh_bands("sig", num_hashes, num_bands))
                 .alias("band_idx", "band_hash"))
     if bucket_cap is not None:
         sizes = bands.groupBy("band_idx", "band_hash").agg(

@@ -148,10 +148,10 @@ def minhash_candidate_edges(
         terms
         .withColumn("shingles", F.array_distinct(
             char_shingles(F.col("norm_term"), shingle_size)))
-        .withColumn("sig", minhash_signature(F.col("shingles"), num_hashes))
+        .withColumn("sig", minhash_signature("shingles", num_hashes))
         .select(
             "norm_term", "shingles",
-            F.posexplode(lsh_bands(F.col("sig"), num_hashes, num_bands))
+            F.posexplode(lsh_bands("sig", num_hashes, num_bands))
             .alias("band_idx", "band_hash"),
         )
     )

@@ -2,7 +2,8 @@
 
 Scale posture: AQE on (runtime re-plan + skew-join splitting), Arrow on
 (every UDF in this engine is Arrow-batched), shuffle partitions sized to the
-parallelism at hand.  On a real cluster these settings come from
+parallelism at hand, a generated-class cache that holds a whole pipeline's
+classes.  On a real cluster these settings come from
 spark-submit --conf; this factory is the local/test entry point.
 """
 
@@ -27,7 +28,8 @@ def get_spark(
     if shuffle_partitions is None:
         if master.startswith("local["):
             n = master[len("local["):-1]
-            shuffle_partitions = 32 if n == "*" else int(n)
+            shuffle_partitions = (len(os.sched_getaffinity(0)) if n == "*"
+                                  else int(n))
         else:
             shuffle_partitions = 200
 
@@ -48,6 +50,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # generated-class cache, per JVM: one run_pipeline compiles ~300
+        # distinct whole-stage-codegen classes against Spark's default of 100
+        # entries, so every repeat of a plan in the session (append, streaming
+        # micro-batches, API calls, tests) evicted the previous run's classes
+        # and paid a Janino recompile plus a fresh JIT warm-up for each
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # shuffle/spill on tmpfs — OPT-IN (SPARK_GRAFT_TMPFS=1, set by bench.py /
     # cluster_scale.py): local mode funnels every task's shuffle file through

@@ -12,7 +12,9 @@ mcp/graph_tools.py:503-529).
 A checkpoint costs one Spark job: the table write. Its row counts are read
 from the written files' metadata, and its per-partition metrics rows are
 written by the driver as one file per (stage, table) under
-`<run_dir>/metrics/`, replaced whole when a crashed write is retried.
+`<run_dir>/metrics/`, replaced whole when a crashed write is retried. The
+manifest records each table's schema, so reading a checkpoint back on resume
+runs no job.
 
 When the Iceberg classes ARE on the classpath AND a `kg_ckpt` Spark catalog
 is configured (spark.sql.catalog.kg_ckpt=org.apache.iceberg.spark.SparkCatalog
@@ -31,6 +33,7 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 
@@ -191,6 +194,7 @@ def checkpoint_write(df: DataFrame, run_dir: str, stage: str,
         "path": ident if use_iceberg else path,
         "format": "iceberg" if use_iceberg else "parquet",
         "rows": sum(part_rows.values()),
+        "schema": df.schema.jsonValue(),
         "wall_ms": wall_ms,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
@@ -204,13 +208,18 @@ def checkpoint_read(spark: SparkSession, run_dir: str, stage: str, table: str) -
     # between the write and the restart (e.g. parquet checkpoints resumed
     # from a session that now has the kg_ckpt catalog, or vice versa)
     m = read_manifest(run_dir)
-    fmt = m["stages"].get(stage, {}).get("tables", {}).get(table, {}) \
-        .get("format")
+    entry = m["stages"].get(stage, {}).get("tables", {}).get(table, {})
+    fmt = entry.get("format")
     if fmt is None:
         fmt = "iceberg" if iceberg_available(spark) else "parquet"
     if fmt == "iceberg":
         return spark.read.table(_ckpt_table_ident(run_dir, stage, table))
-    return spark.read.parquet(f"{run_dir}/{stage}/{table}")
+    reader = spark.read
+    # a recorded schema skips the schema-inference job; manifests written
+    # before tables carried one fall back to inference
+    if "schema" in entry:
+        reader = reader.schema(StructType.fromJson(entry["schema"]))
+    return reader.parquet(f"{run_dir}/{stage}/{table}")
 
 
 def read_metrics(spark: SparkSession, run_dir: str) -> DataFrame:

@@ -183,10 +183,10 @@ def start_stream_near_dup(
             batch_df.select(
                 F.col(id_col).alias("id"), F.col(ts_col).alias("ts"),
                 F.struct(*batch_df.columns).alias("row"),
-                minhash_signature(
-                    F.array_distinct(word_shingles(F.col(text_col), k)),
-                    num_hashes).alias("sig"))
-            .withColumn("bands", lsh_bands(F.col("sig"), num_hashes, num_bands))
+                F.array_distinct(word_shingles(F.col(text_col), k)).alias("sh"))
+            .select("id", "ts", "row",
+                    minhash_signature("sh", num_hashes).alias("sig"))
+            .withColumn("bands", lsh_bands("sig", num_hashes, num_bands))
             .localCheckpoint(eager=True)  # one pass over the text
         )
         bands_b = batch.select(

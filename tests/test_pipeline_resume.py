@@ -132,6 +132,51 @@ def test_metrics_lineage_rows(spark, transcripts, tmp_path):
     assert _metrics_rows(spark, run_dir) == _manifest_rows(run_dir)
 
 
+def _jobs_started(spark, fn):
+    """Spark jobs started while fn() runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("jobs-started-probe", "checkpoint read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup("jobs-started-probe"))
+
+
+def test_checkpoint_read_starts_no_job(spark, tmp_path):
+    """Resume reads a committed table with the schema its manifest entry
+    recorded, so no schema-inference job runs; a manifest entry without a
+    schema still reads, by inference."""
+    import json
+    from pathlib import Path
+
+    from knowledge_extraction_pipeline_spark.sources.tables import (
+        checkpoint_read,
+        checkpoint_write,
+    )
+
+    run_dir = str(tmp_path / "run_read")
+    df = spark.range(40).select(F.col("id"), (F.col("id") % 3).alias("k"),
+                                F.array(F.col("id").cast("string")).alias("a"))
+    written = checkpoint_write(df, run_dir, "extract", "mentions")
+    want = sorted(written.collect())
+
+    out, jobs = _jobs_started(
+        spark, lambda: checkpoint_read(spark, run_dir, "extract", "mentions"))
+    assert jobs == 0
+    assert out.schema == written.schema
+    assert sorted(out.collect()) == want
+
+    m = read_manifest(run_dir)
+    del m["stages"]["extract"]["tables"]["mentions"]["schema"]
+    (Path(run_dir) / "_manifest.json").write_text(json.dumps(m))
+    out, jobs = _jobs_started(
+        spark, lambda: checkpoint_read(spark, run_dir, "extract", "mentions"))
+    assert jobs >= 1
+    assert sorted(out.collect()) == want
+
+
 def test_iceberg_probe_and_fallback(spark):
     """No Iceberg runtime jar in this sandbox: the probe must report False
     (parquet fallback — exercised by the resume tests above); when a jar IS

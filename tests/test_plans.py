@@ -287,6 +287,27 @@ def test_materialize_plan_shape(spark, transcripts, tmp_path):
                    "edges": {"Exchange": 7, "SortAggregate": 6}}
 
 
+def test_warm_pipeline_reuses_generated_code(spark, transcripts):
+    """A repeated run_pipeline in one session reuses the whole-stage-codegen
+    classes of the run before: the session's generated-class cache holds a
+    pipeline's ~300 classes (Spark's default of 100 did not, so every run
+    recompiled nearly all of them), counted by Spark's own compile metric."""
+    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
+
+    compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def build():
+        res = run_pipeline(spark, transcripts)
+        res.nodes.collect()
+        res.edges.collect()
+
+    build()
+    before = compiled.getCount()
+    build()
+    assert compiled.getCount() - before <= 20
+
+
 def test_occ_key_orders_like_the_struct(spark):
     from knowledge_extraction_pipeline_spark.operators.materialize import (
         CONV_BITS,
