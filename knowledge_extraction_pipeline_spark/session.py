@@ -51,10 +51,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # generated-class cache, per JVM: one run_pipeline compiles ~300
-        # distinct whole-stage-codegen classes against Spark's default of 100
-        # entries, so every repeat of a plan in the session (append, streaming
-        # micro-batches, API calls, tests) evicted the previous run's classes
-        # and paid a Janino recompile plus a fresh JIT warm-up for each
+        # distinct whole-stage-codegen classes. At Spark's default of 100
+        # entries every repeat of a plan in the session (append, streaming
+        # micro-batches, API calls, tests) evicts the previous run's classes
+        # and pays a Janino recompile plus a fresh JIT warm-up for each
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # shuffle/spill on tmpfs — OPT-IN (SPARK_GRAFT_TMPFS=1, set by bench.py /
