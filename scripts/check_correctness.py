@@ -54,6 +54,7 @@ def main():
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    t_sweep = time.time()
 
     from knowledge_extraction_pipeline_spark.queries import ORACLE, QUERIES
     from knowledge_extraction_pipeline_spark.session import get_spark
@@ -113,7 +114,8 @@ def main():
             for x in list(dset - sset)[:3]:
                 print("   duck-only: ", x.replace("\x1f", " | "))
 
-    print(f"\n{len(names) - failures}/{len(names)} ok")
+    print(f"\n{len(names) - failures}/{len(names)} ok"
+          f" in {time.time() - t_sweep:.1f}s")
     spark.stop()
     return 1 if failures else 0
 

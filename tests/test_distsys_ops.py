@@ -1,59 +1,11 @@
-"""Distributed-infrastructure primitive pins: consistent-hash /
-rendezvous shard placement (minimal-disruption theorem, load spread)
-and the Merkle anti-entropy diff (one differing node per level, leaf
-localization)."""
+"""Index, coding and sampling primitive pins: Elias-Fano, Roaring and
+Golomb postings, weighted reservoir sampling, Hamming SECDED and
+Reed-Solomon erasure coding, length batching, FM-index and wavelet-tree
+search, and the 2-SAT implication graph."""
 
 from knowledge_extraction_pipeline_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_shard_placement_min_disruption_and_spread(spark):
-    rows = QUERIES["q_shard_placement_ring"](spark, SF).collect()
-    assert len(rows) == 15
-    # the theorem both schemes exist for: adding n4 only moves keys TO n4
-    assert all(r["ring_min_disruption"] for r in rows)
-    assert all(r["hrw_min_disruption"] for r in rows)
-    for r in rows:
-        if r["ring_moved"]:
-            assert r["ring_after"] == "n4"
-        if r["hrw_moved"]:
-            assert r["hrw_after"] == "n4"
-    # before the join, nothing is ever placed on n4
-    assert all(r["ring_before"] != "n4" for r in rows)
-    assert all(r["hrw_before"] != "n4" for r in rows)
-    # every key gets exactly one owner per scheme, owners drawn from the
-    # node set; with 15 keys on 4 nodes at least 2 nodes must be in use
-    nodes = {"n0", "n1", "n2", "n3", "n4"}
-    assert {r["ring_after"] for r in rows} <= nodes
-    assert {r["hrw_after"] for r in rows} <= nodes
-    assert len({r["ring_before"] for r in rows}) >= 2
-    assert len({r["hrw_before"] for r in rows}) >= 2
-
-
-def test_merkle_diff_one_node_per_level_localizes_leaf(spark):
-    rows = QUERIES["q_events_merkle_diff"](spark, SF).collect()
-    by_level = {}
-    for r in rows:
-        by_level.setdefault(r["level"], []).append(r)
-    # 30 day-leaves fold to a single root
-    assert len(by_level[0]) == 30
-    top = max(by_level)
-    assert len(by_level[top]) == 1
-    # O(log n) sync property: exactly ONE differing node per level (the
-    # corrupted leaf's ancestor path), root included
-    for lvl, rs in by_level.items():
-        assert sum(1 for r in rs if r["differs"]) == 1, lvl
-        assert all(r["n_diff_level"] == 1 for r in rs)
-    assert by_level[top][0]["differs"]
-    # the differing leaf localizes to the day of the planted missing row
-    assert all(r["locate_ok"] for r in rows)
-    # parent linkage: each differing non-leaf is the parent of the
-    # differing node one level down
-    for lvl in range(1, top + 1):
-        child = next(r for r in by_level[lvl - 1] if r["differs"])
-        parent = next(r for r in by_level[lvl] if r["differs"])
-        assert parent["idx"] == child["idx"] // 2
 
 
 def test_elias_fano_tiers_reconstruction_and_bound(spark):
@@ -78,26 +30,6 @@ def test_elias_fano_tiers_reconstruction_and_bound(spark):
         assert all(s == r["i"] + r["hi"] for s, r in zip(sel, rs))
         # total_bits is the same constant on every row of a list
         assert len({r["total_bits"] for r in rs}) == 1
-
-
-def test_fenwick_tree_cells_and_probe_decomposition(spark):
-    rows = sorted(QUERIES["q_events_fenwick_tree"](spark, SF).collect(),
-                  key=lambda r: r["i"])
-    assert len(rows) == 30
-    assert all(r["b_ok"] for r in rows)
-    # lowbit and popcount re-derived independently
-    for r in rows:
-        i = r["i"]
-        assert r["lowbit"] == i & -i
-        assert r["bits"] == bin(i).count("1")
-        # the BIT cell covers exactly (i - lowbit, i]
-        assert r["b"] == sum(x["c"] for x in rows
-                             if i - r["lowbit"] < x["i"] <= i)
-    # probe decompositions: sum and node-count theorems
-    for q in (5, 17, 23, 30):
-        assert all(r[f"p{q}_ok"] for r in rows)
-        direct = sum(x["c"] for x in rows if x["i"] <= q)
-        assert rows[0][f"p{q}_sum"] == direct
 
 
 def test_weighted_reservoir_orders_by_priority(spark):
@@ -126,24 +58,6 @@ def test_weighted_reservoir_orders_by_priority(spark):
         assert r["pr_e6"] == math.floor(1000000.0 * math.log(u) / w)
 
 
-def test_cache_replacement_belady_dominates(spark):
-    rows = sorted(QUERIES["q_events_cache_replacement"](spark, SF)
-                  .collect(), key=lambda r: r["i"])
-    assert len(rows) == 300
-    assert all(r["opt_ge_lru"] for r in rows)
-    assert rows[-1]["lru_hits"] == rows[-1]["lru_total"]
-    assert rows[-1]["opt_hits"] == rows[-1]["opt_total"]
-    assert rows[-1]["opt_total"] >= rows[-1]["lru_total"]
-    # running counts are consistent with the per-step hit flags
-    lh = oh = 0
-    for r in rows:
-        lh += r["lru_hit"]
-        oh += r["opt_hit"]
-        assert r["lru_hits"] == lh and r["opt_hits"] == oh
-    # with 15 users on an 8-slot cache there are real hits AND misses
-    assert 0 < rows[-1]["lru_total"] < 300
-
-
 def test_roaring_layout_regimes_and_minimality(spark):
     rows = QUERIES["search_roaring_layout"](spark, SF).collect()
     assert all(r["minimal_ok"] for r in rows)
@@ -157,96 +71,6 @@ def test_roaring_layout_regimes_and_minimality(spark):
         assert r["chosen_bytes"] <= r["bitmap_bytes"]
     # roaring total beats plain 4-byte ids on every scale tested here
     assert rows[0]["total_bytes"] < rows[0]["plain_bytes"]
-
-
-def test_zonemap_pruning_soundness(spark):
-    rows = QUERIES["q_events_zonemap_pruning"](spark, SF).collect()
-    assert len(rows) == 120  # 30 days x 4 probes
-    assert all(r["sound_ok"] for r in rows)
-    # the narrow probe (4) must prune most partitions; the broad low
-    # probe (1) keeps most (values start at cents)
-    by_probe = {}
-    for r in rows:
-        by_probe.setdefault(r["probe"], []).append(r)
-    assert by_probe[3][0]["pruned_parts"] >= 20
-    # window totals agree with per-row recount
-    for p, rs in by_probe.items():
-        assert rs[0]["total_parts"] == 30
-        assert rs[0]["pruned_parts"] == sum(1 for r in rs if r["pruned"])
-        assert rs[0]["false_keeps"] == sum(
-            1 for r in rs if r["false_keep"])
-        # zone maps bound the data
-        for r in rs:
-            assert r["zmin_e2"] <= r["zmax_e2"]
-            if r["matches"] > 0:
-                assert not r["pruned"]
-
-
-def test_lsm_compaction_conservation_and_tradeoff(spark):
-    rows = sorted(QUERIES["q_events_lsm_compaction"](spark, SF)
-                  .collect(), key=lambda r: r["flush"])
-    assert len(rows) == 30
-    assert all(r["leveled_conserved"] and r["tiered_conserved"]
-               for r in rows)
-    assert all(r["leveled_writes_more"] for r in rows)
-    # WA factors: every byte is written at least once (wa >= 1)
-    assert rows[0]["wa_leveled_e6"] >= 1000000
-    assert rows[0]["wa_tiered_e6"] >= 1000000
-    assert rows[0]["wa_leveled_e6"] > rows[0]["wa_tiered_e6"]
-    # cumulative sums consistent with per-flush writes
-    lc = tc = 0
-    for r in rows:
-        lc += r["leveled_written"]
-        tc += r["tiered_written"]
-        assert r["leveled_cum"] == lc and r["tiered_cum"] == tc
-        # each flush writes at least its own bytes in both strategies
-        assert r["leveled_written"] >= r["bytes_in"]
-        assert r["tiered_written"] >= r["bytes_in"]
-
-
-def test_robin_hood_theorems(spark):
-    rows = QUERIES["q_docs_robin_hood_probing"](spark, SF).collect()
-    assert len(rows) == 200
-    r0 = rows[0]
-    # the three classic linear-probing theorems
-    assert r0["slots_equal_ok"]      # same occupied slot set
-    assert r0["mean_equal_ok"]       # same total displacement
-    assert r0["variance_ok"]         # RH minimizes variance
-    assert r0["total_disp_lp"] == r0["total_disp_rh"]
-    assert r0["sumsq_rh"] <= r0["sumsq_lp"]
-    # at 78% load RH visibly flattens the tail
-    assert r0["max_disp_rh"] < r0["max_disp_lp"]
-    # per-key displacement consistency
-    for r in rows:
-        assert (r["home"] + r["lp_disp"]) % 256 == r["lp_slot"]
-        assert (r["home"] + r["rh_disp"]) % 256 == r["rh_slot"]
-    # one key per slot in each layout
-    assert len({r["lp_slot"] for r in rows}) == 200
-    assert len({r["rh_slot"] for r in rows}) == 200
-
-
-def test_bptree_bulkload_structure(spark):
-    rows = QUERIES["q_docs_bptree_bulkload"](spark, SF).collect()
-    assert all(r["full_ok"] and r["sep_ok"] and r["root_single_ok"]
-               for r in rows)
-    by_level = {}
-    for r in rows:
-        by_level.setdefault(r["level"], []).append(r)
-    # 500 keys, cap 8: 63 leaves, 8 internals, 1 root
-    assert sorted(len(v) for v in by_level.values()) == [1, 8, 63]
-    assert rows[0]["height"] == 3 and rows[0]["n_keys"] == 500
-    # level ranges nest: parent min/max covers children
-    for lvl in range(1, 3):
-        for p in by_level[lvl]:
-            ch = [c for c in by_level[lvl - 1]
-                  if c["idx"] // 8 == p["idx"]]
-            assert p["min_key"] == min(c["min_key"] for c in ch)
-            assert p["max_key"] == max(c["max_key"] for c in ch)
-            assert p["n_entries"] == len(ch)
-    # leaves partition the key space in order
-    leaves = sorted(by_level[0], key=lambda r: r["idx"])
-    for a, b in zip(leaves, leaves[1:]):
-        assert a["max_key"] < b["min_key"]
 
 
 def test_hamming_secded_contract(spark):
@@ -282,22 +106,6 @@ def test_rs_erasure_recovers_and_reencodes(spark):
         assert r["s0"] == r["d0"] ^ r["d1"] ^ r["d2"] ^ r["d3"]
 
 
-def test_bounded_loads_cap_and_walk(spark):
-    rows = QUERIES["q_shard_bounded_loads"](spark, SF).collect()
-    assert len(rows) == 15  # sf0.001 has 15 users
-    r0 = rows[0]
-    assert all(r["cap_ok"] and r["all_caps_ok"] and r["conservation_ok"]
-               for r in rows)
-    # cap = ceil(1.25 * 15 / 5) = ceil(15/4) = 4
-    assert r0["cap"] == 4
-    assert r0["max_load"] <= 4
-    assert r0["total_placed"] == 15
-    # the majority of keys take their first choice; the tight cap
-    # (ceil(K/4) on 15 keys) forces a few shallow overflow walks
-    assert sum(1 for r in rows if r["choice_rank"] == 1) >= 8
-    assert all(1 <= r["choice_rank"] <= 5 for r in rows)
-
-
 def test_length_batching_budget_and_bucketing_wins(spark):
     rows = QUERIES["data_length_batching"](spark, SF).collect()
     assert len(rows) == 1000  # 500 docs x 2 variants
@@ -318,69 +126,6 @@ def test_length_batching_budget_and_bucketing_wins(spark):
         padded = len(g) * max(r["n_tokens"] for r in g)
         assert all(r["batch_padded"] == padded for r in g)
         assert padded <= 4096
-
-
-def test_selinger_dp_exactly_optimal(spark):
-    import itertools
-
-    rows = {r["mask"]: r for r in
-            QUERIES["q_join_order_selinger"](spark, SF).collect()}
-    assert len(rows) == 31
-    full = rows[31]
-    assert full["dp_equals_brute"]
-    assert full["best_cost"] == full["full_best"] == full["brute_min"]
-    # independent re-derivation of the brute-force optimum from the
-    # emitted per-subset cardinalities
-    card = {m: rows[m]["cardinality"] for m in rows}
-    best = None
-    for perm in itertools.permutations(range(5)):
-        msk, tot = 0, 0
-        for k, t in enumerate(perm):
-            msk |= 1 << t
-            if k >= 1:
-                tot += card[msk]
-        best = tot if best is None else min(best, tot)
-    assert best == full["best_cost"]
-    assert full["worst_perm"] >= full["best_cost"]
-    # plan string is a permutation of the five tables
-    assert sorted(full["best_plan"].split(">")) == \
-        sorted(["R", "N", "C", "O", "L"])
-    # singleton subsets scan for free; cardinalities are multiplicative
-    # across disconnected components (spot check: {R, L} = |R| * |L|)
-    assert rows[1]["best_cost"] == 0
-    assert rows[17]["cardinality"] == \
-        rows[1]["cardinality"] * rows[16]["cardinality"]
-    # DP costs are monotone under taking the best predecessor
-    for m, r in rows.items():
-        if bin(m).count("1") > 1:
-            preds = [rows[m ^ (1 << t)]["best_cost"]
-                     for t in range(5) if m >> t & 1]
-            assert r["best_cost"] == min(preds) + r["cardinality"]
-
-
-def test_threshold_algorithm_exact_and_early(spark):
-    rows = sorted(QUERIES["q_events_ta_topk"](spark, SF).collect(),
-                  key=lambda r: r["d"])
-    r0 = rows[0]
-    assert r0["ta_exact_ok"]
-    assert r0["ta_top5"] == r0["brute_top5"]
-    # the walk stops exactly once, at the last emitted row
-    assert rows[-1]["stopped"] and rows[-1]["d"] == r0["stop_step"]
-    assert all(not r["stopped"] for r in rows[:-1])
-    # thresholds are non-increasing (both lists are sorted descending)
-    ths = [r["threshold"] for r in rows]
-    assert all(a >= b for a, b in zip(ths, ths[1:]))
-    # kth-best never decreases once defined
-    ks = [r["kth_best"] for r in rows if r["kth_best"] is not None]
-    assert all(a <= b for a, b in zip(ks, ks[1:]))
-    # stop condition truly holds at the stop row and fails just before
-    assert rows[-1]["kth_best"] >= rows[-1]["threshold"]
-    if len(rows) > 1:
-        prev = rows[-2]
-        assert prev["kth_best"] is None or \
-            prev["kth_best"] < prev["threshold"]
-    # top-5 serialization carries 5 entries
-    assert len(r0["ta_top5"].split(",")) == 5
 
 
 def test_fm_index_search_matches_regex(spark):
@@ -425,45 +170,6 @@ def test_wavelet_tree_rank_battery(spark):
         assert rs[0]["wavelet_rank"] <= rs[1]["wavelet_rank"]
 
 
-def test_learned_index_error_bound_and_win(spark):
-    rows = sorted(QUERIES["q_docs_learned_index"](spark, SF).collect(),
-                  key=lambda r: r["segment"])
-    assert len(rows) == 8
-    assert all(r["all_covered"] and r["never_worse"] for r in rows)
-    assert sum(r["n_keys"] for r in rows) == rows[0]["n_total"] == 500
-    # uniform md5 keys: the CDF line is tight — far better than log2(n)
-    assert all(r["search_bits"] < r["full_bits"] for r in rows)
-    assert max(r["max_err"] for r in rows) <= 32
-    # segments partition the key space in order
-    for a, b in zip(rows, rows[1:]):
-        assert a["key_hi"] < b["key_lo"]
-
-
-def test_apriori_antimonotone_and_maximal(spark):
-    from itertools import combinations
-
-    rows = {r["iset"]: r for r in
-            QUERIES["q_events_apriori_itemsets"](spark, SF).collect()}
-    assert len(rows) == 31
-    assert all(r["antimonotone_ok"] for r in rows.values())
-    # independent antimonotonicity re-check across the whole lattice
-    for s, r in rows.items():
-        for t in range(1, 32):
-            if t != s and (s & t) == t:
-                assert rows[t]["support"] >= r["support"], (s, t)
-    # maximal-frequent frontier is consistent
-    for s, r in rows.items():
-        if r["is_maximal"]:
-            assert r["frequent"]
-            for t in range(1, 32):
-                if t != s and (t & s) == s:
-                    assert not rows[t]["frequent"]
-    # the singletons cover everyone who ever did that action
-    assert rows[1]["k"] == 1 and rows[31]["k"] == 5
-    assert rows[31]["support"] <= min(
-        rows[1 << b]["support"] for b in range(5))
-
-
 def test_golomb_gap_coding_optimality(spark):
     rows = sorted(QUERIES["search_golomb_gaps"](spark, SF).collect(),
                   key=lambda r: r["b"])
@@ -475,22 +181,6 @@ def test_golomb_gap_coding_optimality(spark):
     # size curve is unimodal-ish around b*: endpoints are worse
     assert rows[0]["total_bits"] > r0["best_bits"]
     assert rows[16]["total_bits"] > r0["best_bits"]
-
-
-def test_treap_shape_canonical(spark):
-    rows = {r["key"]: r for r in
-            QUERIES["q_docs_treap_shape"](spark, SF).collect()}
-    assert len(rows) == 500
-    assert all(r["heap_ok"] and r["bst_ok"] and r["unique_child_ok"]
-               for r in rows.values())
-    assert next(iter(rows.values()))["n_roots"] == 1
-    # the root carries the global minimum priority
-    root = next(r for r in rows.values() if r["parent_key"] == -1)
-    assert root["prio"] == min(r["prio"] for r in rows.values())
-    # every non-root's parent exists and the edge count is n-1
-    edges = [r for r in rows.values() if r["parent_key"] != -1]
-    assert len(edges) == 499
-    assert all(e["parent_key"] in rows for e in edges)
 
 
 def test_2sat_certificate_checks_formula(spark):
@@ -512,43 +202,3 @@ def test_2sat_certificate_checks_formula(spark):
     # clause variables are distinct by construction
     assert all(r["var_a"] != r["var_b"] for r in rows)
     assert 1 <= r0["n_components"] <= 24
-
-
-def test_crt_checksum_reconstructs_exact_sum(spark):
-    rows = QUERIES["q_orders_crt_checksum"](spark, SF).collect()
-    assert len(rows) == 3
-    M = 281170132523303
-    assert all(r["inverse_ok"] for r in rows)
-    assert all(r["crt_ok"] for r in rows)
-    assert all(r["fits_modulus"] for r in rows)
-    # re-derive the reconstruction independently from the emitted
-    # residues: CRT uniqueness on [0, M)
-    s_crt = sum(((r["residue"] * r["y_j"]) % r["prime"]) * r["m_j"]
-                for r in rows) % M
-    assert s_crt == rows[0]["s_direct"] == rows[0]["s_crt"]
-    # residues really are the direct sum's residues
-    for r in rows:
-        assert r["s_direct"] % r["prime"] == r["residue"]
-    # pairwise coprime moduli (the CRT premise)
-    import math
-    ps = [r["prime"] for r in rows]
-    assert math.gcd(ps[0], ps[1]) == math.gcd(ps[0], ps[2]) \
-        == math.gcd(ps[1], ps[2]) == 1
-
-
-def test_yannakakis_full_reducer_guarantees(spark):
-    rows = {r["relation"]: r for r in
-            QUERIES["q_yannakakis_reduction"](spark, SF).collect()}
-    assert set(rows) == {"customer", "orders", "lineitem"}
-    for r in rows.values():
-        # the Yannakakis theorem: after bottom-up + top-down semi-join
-        # sweeps, every surviving tuple joins through
-        assert r["all_participate"], r
-        # and the reduction is lossless
-        assert r["join_preserved"] and r["cents_preserved"]
-        assert r["rows_reduced"] + r["dangling_removed"] \
-            == r["rows_filtered"]
-        assert r["rows_reduced"] >= 0
-    # the filters plant real dangling tuples somewhere in the chain
-    assert sum(r["dangling_removed"] for r in rows.values()) > 0
-    assert rows["customer"]["join_rows"] > 0

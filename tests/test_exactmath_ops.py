@@ -1,106 +1,10 @@
-"""Exact-arithmetic algorithm pins: number-theoretic transform
-(Cooley-Tukey vs defining DFT sum, convolution theorem) and the
-from-scratch SHA-256 (vs hashlib and the JVM-native sha2)."""
+"""Exact-arithmetic algorithm pins: closest pair, canonical Huffman,
+KMP, Manacher, tANS and speculative sampling, each against an
+independent re-derivation."""
 
-import hashlib
-
-import pytest
-
-from knowledge_extraction_pipeline_spark.functions.sha256 import (
-    sha256_batch,
-)
-from knowledge_extraction_pipeline_spark.queries import (
-    QUERIES, _NTT_P, _NTT_W,
-)
+from knowledge_extraction_pipeline_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_ntt_matches_direct_dft_and_convolution_theorem(spark):
-    rows = sorted(QUERIES["q_events_ntt_convolution"](spark, SF)
-                  .collect(), key=lambda r: r["k"])
-    assert len(rows) == 32
-    p, w = _NTT_P, _NTT_W
-    assert pow(w, 32, p) == 1 and pow(w, 16, p) == p - 1  # primitive
-    x = [r["x"] for r in rows]
-    y = [r["y"] for r in rows]
-    # independent direct DFT re-derivation (pure Python pow)
-    for r in rows:
-        k = r["k"]
-        assert r["ntt_x"] == sum(
-            x[i] * pow(w, (i * k) % 32, p) for i in range(32)) % p
-        assert r["ntt_y"] == sum(
-            y[i] * pow(w, (i * k) % 32, p) for i in range(32)) % p
-        assert r["z"] == r["ntt_x"] * r["ntt_y"] % p
-        # the convolution theorem, re-evaluated from raw series
-        direct = sum(x[i] * y[(k - i) % 32] for i in range(32)) % p
-        assert r["conv_direct"] == direct
-        assert r["conv_ntt"] == direct
-        assert r["conv_ok"]
-    # real data reached the transform (hourly activity is nonzero)
-    assert sum(x) > 0 and sum(y) > 0
-
-
-def test_sha256_scratch_unit_vectors():
-    msgs = [b"", b"abc", b"a" * 55, "héllo".encode(), b"0" * 32]
-    assert sha256_batch(msgs) == [
-        hashlib.sha256(m).hexdigest() for m in msgs]
-    with pytest.raises(ValueError):
-        sha256_batch([b"x" * 56])  # two-block input refused honestly
-    assert sha256_batch([]) == []
-
-
-def test_sha256_scratch_agrees_with_jvm_native(spark):
-    rows = QUERIES["text_sha256_scratch"](spark, SF).collect()
-    assert len(rows) == 500
-    assert all(r["match_msg"] and r["match_prefix"] for r in rows)
-    # and with hashlib, independently of both engines
-    for r in rows[:25]:
-        assert r["scratch_sha_msg"] == hashlib.sha256(
-            r["msg"].encode()).hexdigest()
-        assert r["scratch_sha_prefix"] == hashlib.sha256(
-            r["prefix"].encode("utf-8")).hexdigest()
-
-
-def test_conflict_serializability_grouped_schedule_is_serial(spark):
-    rows = QUERIES["q_txn_conflict_serializability"](spark, SF) \
-        .collect()
-    by_var = {}
-    for r in rows:
-        by_var.setdefault(r["variant"], []).append(r)
-    assert set(by_var) <= {"raw", "grouped"}
-    g = by_var["grouped"]
-    # the serial-by-construction rearrangement MUST be acyclic, and
-    # the recovered order must respect every conflict edge
-    assert all(not r["cyclic"] and r["serializable"] for r in g)
-    assert all(r["edge_respected"] for r in g)
-    assert all(r["pos_from"] < r["pos_to"] for r in g)
-    # in the grouped schedule conflicts can only run in txn order
-    assert all(r["txn_from"] < r["txn_to"] for r in g)
-    # verdict coherent within each variant; edge_respected pinned
-    for rs in by_var.values():
-        assert len({r["cyclic"] for r in rs}) == 1
-        assert all(r["edge_respected"] for r in rs)
-        assert all(1 <= r["pos_from"] <= r["n_txns"] for r in rs)
-        assert all(r["n_conflict_pairs"] >= 1 for r in rs)
-
-
-def test_mvcc_snapshot_isolation_guarantees(spark):
-    rows = QUERIES["q_events_mvcc_snapshot"](spark, SF).collect()
-    assert len(rows) == 20  # 4 snapshots x 5 objects
-    assert all(r["no_dirty_read"] for r in rows)
-    assert all(r["monotone_ok"] for r in rows)
-    # later snapshots never lose versions
-    by_obj = {}
-    for r in sorted(rows, key=lambda r: r["snap_pct"]):
-        prev = by_obj.get(r["obj"])
-        if prev is not None:
-            assert r["visible_version"] >= prev
-            assert r["n_candidates"] >= 1
-        by_obj[r["obj"]] = r["visible_version"]
-    # the 100% snapshot sees the global latest write per object
-    last = {r["obj"]: r for r in rows if r["snap_pct"] == 100}
-    assert len(last) == 5
 
 
 def test_closest_pair_grid_exact_and_pruned(spark):
@@ -118,57 +22,6 @@ def test_closest_pair_grid_exact_and_pruned(spark):
     # cell size really bounds the coarse estimate
     assert r["cell_size"] ** 2 >= min(r["coarse_bound_d2"], 1)
     assert r["grid_min_d2"] <= r["coarse_bound_d2"]
-
-
-def test_dfa_minimization_merges_parity_twins(spark):
-    rows = sorted(QUERIES["q_events_dfa_minimization"](spark, SF)
-                  .collect(), key=lambda r: r["state"])
-    assert len(rows) == 6
-    # exactly the three Myhill-Nerode classes {0,1} {2,3} {4,5}
-    assert all(r["n_classes"] == 3 for r in rows)
-    assert [r["class_id"] for r in rows] == [0, 0, 2, 2, 4, 4]
-    assert all(r["class_size"] == 2 for r in rows)
-    assert all(r["merged_with_twin"] for r in rows)
-    # acceptance-uniform classes
-    assert [r["accepting"] for r in rows] == [False] * 4 + [True] * 2
-    # quotient automaton accepts the same users as the original
-    assert all(r["language_preserved"] for r in rows)
-    assert rows[0]["n_accept_orig"] == rows[0]["n_accept_min"]
-    assert 0 < rows[0]["n_users"]
-    # real sessions exist on both sides of the language
-    assert 0 <= rows[0]["n_accept_orig"] <= rows[0]["n_users"]
-
-
-def test_aries_recovery_theorems(spark):
-    rows = sorted(QUERIES["q_orders_aries_recovery"](spark, SF)
-                  .collect(), key=lambda r: r["page"])
-    assert len(rows) == 8
-    r0 = rows[0]
-    assert 5 <= r0["crash_lsn"] <= 18
-    # recovered state == winner-only replay, on every page
-    assert all(r["aries_correct"] for r in rows)
-    # pageLSN protocol: a second redo pass writes nothing
-    assert all(r["redo_idempotent"] for r in rows)
-    assert all(r["n_second_redo_writes"] == 0 for r in rows)
-    for r in rows:
-        assert r["owner_txn"] == r["page"] // 2
-        assert r["n_redone"] == r["n_logged"]
-        if r["txn_status"] == "loser":
-            # every logged loser update is compensated, state rolls
-            # back to the initial before-image chain
-            assert r["n_undone"] == r["n_logged"]
-            assert r["final_value"] == 0
-            if r["n_undone"]:
-                assert r["final_pagelsn"] > r["crash_lsn"]  # CLR lsn
-        elif r["txn_status"] == "winner":
-            assert r["n_undone"] == 0
-            assert r["n_logged"] == 2  # both its page writes logged
-        else:
-            assert r["n_logged"] == r["n_undone"] == 0
-            assert r["final_pagelsn"] == 0
-    # CLR count is the total undone work
-    assert r0["n_clrs"] == sum(r["n_undone"] for r in rows)
-    assert r0["n_winners"] + r0["n_losers"] <= 4
 
 
 def test_canonical_huffman_tiles_the_code_space(spark):
@@ -195,72 +48,6 @@ def test_canonical_huffman_tiles_the_code_space(spark):
     assert {r["word"]: r["code_len"] for r in rows} == hl
 
 
-def test_vector_clocks_fidge_mattern(spark):
-    rows = QUERIES["q_events_vector_clocks"](spark, SF).collect()
-    assert len(rows) == 24  # 4 procs x 6 local steps
-    assert all(r["theorem_ok"] for r in rows)
-    assert all(r["own_component_ok"] for r in rows)
-    # program order is monotone in every component
-    by_proc = {}
-    for r in sorted(rows, key=lambda r: (r["proc"], r["idx"])):
-        prev = by_proc.get(r["proc"])
-        vc = (r["v1"], r["v2"], r["v3"], r["v4"])
-        if prev is not None:
-            assert all(x <= y for x, y in zip(prev, vc))
-            assert prev != vc
-        by_proc[r["proc"]] = vc
-    # messages exist and some pairs are genuinely concurrent
-    assert rows[0]["n_msgs"] >= 1
-    assert rows[0]["n_concurrent_pairs"] >= 1
-
-
-def test_stern_brocot_walk_and_optimality(spark):
-    rows = sorted(QUERIES["q_orders_stern_brocot"](spark, SF)
-                  .collect(), key=lambda r: r["step"])
-    assert rows
-    a, b = rows[0]["frac_num"], rows[0]["frac_den"]
-    assert 0 <= a < b
-    assert all(r["mediant_ok"] for r in rows)
-    assert all(r["optimal_ok"] for r in rows)
-    for r in rows:
-        # the interval always brackets a/b: lo < a/b < hi (or hit)
-        if r["dir"] != "hit":
-            assert r["lo_p"] * b <= a * r["lo_q"]
-            assert r["hi_p"] * b >= a * r["hi_q"]
-        # Stern-Brocot neighbors: hi_p*lo_q - lo_p*hi_q == 1
-        assert r["hi_p"] * r["lo_q"] - r["lo_p"] * r["hi_q"] == 1
-    # denominators strictly grow along the walk
-    qs = [r["med_q"] for r in rows]
-    assert qs == sorted(qs) and len(set(qs)) == len(qs)
-    # final best is within denominator cap and is genuinely closest
-    r0 = rows[0]
-    assert 1 <= r0["best_q"] <= 50
-    best_err = abs(a * r0["best_q"] - r0["best_p"] * b) / (b * r0["best_q"])
-    for q in range(1, 51):
-        for p in (a * q // b, a * q // b + 1):
-            assert best_err <= abs(a * q - p * b) / (b * q) + 1e-18
-
-
-def test_alias_table_invariants(spark):
-    rows = sorted(QUERIES["q_events_alias_table"](spark, SF)
-                  .collect(), key=lambda r: r["bucket"])
-    assert len(rows) == 5
-    cap = rows[0]["cap"]
-    assert cap == sum(r["weight"] for r in rows)
-    for r in rows:
-        assert r["bucket_full"], r
-        assert r["conservation_ok"], r
-        assert r["prim_mass"] >= 0  # every bucket got assigned
-        assert 0 <= r["alias_bucket"] <= 5
-        assert r["alias_bucket"] != r["bucket"]
-        if r["alias_bucket"] == 0:
-            assert r["prim_mass"] == cap
-        assert r["received_mass"] == r["scaled_mass"]
-    # total mass is n*W exactly
-    assert sum(r["prim_mass"] + r["alias_mass"] for r in rows) == 5 * cap
-    assert 1 <= rows[0]["n_steps"] <= 10
-
-
 def test_kmp_prefix_function_definition(spark):
     rows = sorted(QUERIES["text_kmp_prefix_function"](spark, SF)
                   .collect(), key=lambda r: r["i"])
@@ -277,25 +64,6 @@ def test_kmp_prefix_function_definition(spark):
         assert r["period"] == i - pi
         assert r["full_period"] == (i % r["period"] == 0)
     assert rows[0]["pi"] == 0
-
-
-def test_cyk_recognizes_dyck_projection(spark):
-    rows = QUERIES["q_events_cyk_parse"](spark, SF).collect()
-    assert len(rows) == 15  # users at sf0.001
-    # the grammar-correctness pin: CYK == semantic check on every user
-    assert all(r["agree"] for r in rows)
-    for r in rows:
-        # independent python recheck of the Dyck projection
-        depth, ok = 0, True
-        for ch in r["seq"]:
-            depth += 1 if ch == "c" else (-1 if ch == "v" else 0)
-            ok = ok and depth >= 0
-        assert r["dyck_balanced"] == (ok and depth == 0)
-        assert r["cyk_accept"] == r["dyck_balanced"]
-        assert 1 <= r["n"] == len(r["seq"]) <= 10
-        assert r["n_cells"] >= r["n"]  # at least the terminal cells
-    # both verdicts occur on real data
-    assert len({r["cyk_accept"] for r in rows}) >= 1
 
 
 def test_manacher_equals_definition_and_longest(spark):
@@ -317,35 +85,6 @@ def test_manacher_equals_definition_and_longest(spark):
     assert any(r["pal_len"] == rows[0]["best_len"]
                and r["start_pos"] == rows[0]["best_start"]
                for r in rows)
-
-
-def test_hall_konig_duality(spark):
-    rows = sorted(QUERIES["q_events_hall_konig"](spark, SF)
-                  .collect(), key=lambda r: r["mask"])
-    assert len(rows) == 31
-    r0 = rows[0]
-    assert all(r["konig_equal"] for r in rows)
-    assert all(r["cover_ok"] for r in rows)
-    D = max(max(r["deficiency"] for r in rows), 0)
-    assert r0["max_deficiency"] == D
-    assert r0["matching_size"] == 5 - D == r0["cover_size"]
-    # deficiency is consistent with the emitted per-subset data
-    for r in rows:
-        assert r["deficiency"] == r["size_s"] - r["n_neighbors"]
-        assert bin(r["mask"]).count("1") == r["size_s"]
-        assert len(r["subset"]) == r["size_s"]
-    # monotone neighborhoods: supersets see at least as many users
-    by_mask = {r["mask"]: r["n_neighbors"] for r in rows}
-    for m, nb in by_mask.items():
-        for b in range(5):
-            if not m & (1 << b) and (m | (1 << b)) in by_mask:
-                assert by_mask[m | (1 << b)] >= nb
-    # tight set marked iff a positive deficiency exists
-    tights = [r for r in rows if r["is_tight"]]
-    if D > 0:
-        assert len(tights) == 1 and tights[0]["deficiency"] == D
-    else:
-        assert not tights
 
 
 def test_tans_round_trip_and_invariants(spark):
@@ -380,191 +119,6 @@ def test_tans_round_trip_and_invariants(spark):
         assert 0 <= r["bits_val"] < (1 << r["nb_bits"])
 
 
-def test_rsa_roundtrip_and_euler(spark):
-    rows = QUERIES["q_docs_rsa_roundtrip"](spark, SF).collect()
-    assert len(rows) == 500
-    assert all(r["roundtrip_ok"] for r in rows)
-    assert all(r["signature_ok"] for r in rows)
-    assert all(r["euler_ok"] for r in rows)
-    # independent python modpow recheck on a sample
-    for r in rows[:25]:
-        assert r["c"] == pow(r["m"], 17, 3233)
-        assert r["m_decrypted"] == pow(r["c"], 2753, 3233)
-        assert r["signature"] == pow(r["m"], 2753, 3233)
-        if r["coprime"]:
-            assert r["euler_pow"] == 1
-    # both residue populations appear (coprime is the common case)
-    assert sum(r["coprime"] for r in rows) > 400
-
-
-def test_extendible_hashing_invariants(spark):
-    rows = sorted(QUERIES["q_docs_extendible_hashing"](spark, SF)
-                  .collect(), key=lambda r: r["bucket"])
-    r0 = rows[0]
-    assert r0["total_keys"] == 32          # conservation
-    assert sum(r["n_keys"] for r in rows) == 32
-    d = r0["global_depth"]
-    assert r0["dir_size"] == 1 << d
-    assert all(r["capacity_ok"] for r in rows)
-    assert all(r["ptrs_ok"] for r in rows)
-    assert all(r["prefix_ok"] for r in rows)
-    assert all(r["addressed_ok"] for r in rows)
-    # global depth is the max local depth; splits created the buckets
-    assert max(r["local_depth"] for r in rows) == d
-    assert len(rows) == 1 + r0["n_splits"]
-    # directory entries are fully distributed over buckets
-    assert sum(r["n_dir_ptrs"] for r in rows) == r0["dir_size"]
-
-
-def test_josephus_recurrence_equals_simulation(spark):
-    rows = sorted(QUERIES["q_events_josephus"](spark, SF).collect(),
-                  key=lambda r: r["m"])
-    n, k = rows[0]["n"], rows[0]["k"]
-    assert len(rows) == n and 1 <= k <= 8
-    assert all(r["agree"] for r in rows)
-    assert rows[0]["survivor_sim"] == rows[0]["survivor_rec"]
-    # the recurrence really is J(m) = (J(m-1)+k) mod m
-    for a, b in zip(rows, rows[1:]):
-        assert b["j_m"] == (a["j_m"] + k) % b["m"]
-    assert rows[0]["j_m"] == 0
-    # elimination order is a permutation of everyone but the survivor
-    victims = [r["eliminated_at_round"] for r in rows
-               if r["eliminated_at_round"] is not None]
-    assert len(victims) == n - 1
-    assert set(victims) | {rows[0]["survivor_sim"]} == set(range(n))
-
-
-def test_rho_cycle_three_algorithms_agree(spark):
-    rows = sorted(QUERIES["q_docs_rho_cycle"](spark, SF).collect(),
-                  key=lambda r: r["i"])
-    r0 = rows[0]
-    mu, lam = r0["mu"], r0["lambda"]
-    assert len(rows) == mu + lam + 1
-    assert r0["all_agree"]
-    assert r0["lam_minimal"]
-    assert r0["floyd_mu"] == mu and r0["floyd_lambda"] == lam
-    assert r0["brent_lambda"] == lam
-    # the trajectory really follows f and really closes at mu
-    import hashlib
-    def f(x):
-        return int(hashlib.md5(f"rho:{x}".encode()).hexdigest()[:8],
-                   16) % 256
-    xs = [r["x"] for r in rows]
-    for a, b in zip(xs, xs[1:]):
-        assert b == f(a)
-    assert xs[mu + lam] == xs[mu]          # cycle closes
-    assert len(set(xs[:mu + lam])) == mu + lam  # all earlier distinct
-    assert [r["is_cycle_entry"] for r in rows].count(True) >= 1
-
-
-def test_nash_hawk_dove_best_response(spark):
-    rows = {r["cell"]: r for r in
-            QUERIES["q_events_nash_hawk_dove"](spark, SF).collect()}
-    assert set(rows) == {"HH", "HD", "DH", "DD"}
-    r0 = rows["HH"]
-    v, c = r0["v_cents"], r0["c_cents"]
-    assert v > 0 and c > 0
-    assert r0["indifference_ok"]
-    assert r0["anticoordination_ok"]
-    assert r0["pstar_num"] == v and r0["pstar_den"] == c
-    # independent best-response recheck from the emitted payoffs
-    pay = {cell: (r["pay_row"], r["pay_col"])
-           for cell, r in rows.items()}
-    opp = {"HH": ("DH", "HD"), "HD": ("DD", "HH"),
-           "DH": ("HH", "DD"), "DD": ("HD", "DH")}
-    for cell, r in rows.items():
-        rdev, cdev = opp[cell]
-        assert r["row_br"] == (pay[cell][0] >= pay[rdev][0])
-        assert r["col_br"] == (pay[cell][1] >= pay[cdev][1])
-        assert r["is_pure_ne"] == (r["row_br"] and r["col_br"])
-    if r0["hawk_dove_regime"]:
-        assert rows["HD"]["is_pure_ne"] and rows["DH"]["is_pure_ne"]
-        assert not rows["HH"]["is_pure_ne"]
-        assert 0 < v < c  # p* is a genuine probability
-    # at least one pure NE always exists in this 2x2 family
-    assert any(r["is_pure_ne"] for r in rows.values())
-
-
-def test_zeckendorf_theorem(spark):
-    rows = QUERIES["q_orders_zeckendorf"](spark, SF).collect()
-    assert rows
-    by_order = {}
-    for r in rows:
-        by_order.setdefault(r["okey"], []).append(r)
-    assert len(by_order) == 20
-    fib = [1, 2]
-    while len(fib) < 40:
-        fib.append(fib[-1] + fib[-2])
-    for okey, rs in by_order.items():
-        rs = sorted(rs, key=lambda r: r["step"])
-        val = rs[0]["val"]
-        assert all(r["reconstruction_ok"] for r in rs)
-        assert all(r["non_consecutive_ok"] for r in rs)
-        assert all(r["greedy_invariant_ok"] for r in rs)
-        # independent recheck: values, indices, sums
-        assert sum(r["fib_value"] for r in rs) == val
-        idxs = [r["fib_index"] for r in rs]
-        assert all(a - b >= 2 for a, b in zip(idxs, idxs[1:]))
-        for r in rs:
-            assert r["fib_value"] == fib[r["fib_index"] - 1]
-        assert rs[0]["n_terms"] == len(rs)
-        # greedy picks strictly decreasing remainders to zero
-        assert rs[-1]["remainder_after"] == 0
-
-
-def test_skiplist_search_invariant_and_correctness(spark):
-    rows = QUERIES["q_docs_skiplist_search"](spark, SF).collect()
-    by_probe = {}
-    for r in rows:
-        by_probe.setdefault(r["pid"], []).append(r)
-    assert len(by_probe) == 8
-    lm = rows[0]["lmax"]
-    assert 1 <= lm <= 5 and rows[0]["n_keys"] == 64
-    for pid, rs in by_probe.items():
-        rs = sorted(rs, key=lambda r: r["level"])
-        assert len(rs) == lm
-        assert all(r["search_ok"] for r in rs)
-        assert all(r["invariant_ok"] for r in rs)
-        assert all(r["no_higher_in_range"] for r in rs)
-        # predecessors tighten monotonically as levels descend:
-        # pred(level l) >= pred(level l+1); rs is ascending by level
-        preds = [r["pred_at_level"] for r in rs]
-        assert all(a >= b for a, b in zip(preds, preds[1:]))
-        # level-1 predecessor IS the direct predecessor
-        assert rs[0]["pred_at_level"] == rs[0]["direct_pred"]
-        # path accounting
-        assert rs[0]["total_steps"] == \
-            sum(r["h_steps"] for r in rs) + lm
-        assert all(r["pred_at_level"] < r["q"] for r in rs)
-
-
-def test_buddy_allocator_invariants(spark):
-    rows = sorted(QUERIES["q_events_buddy_allocator"](spark, SF)
-                  .collect(), key=lambda r: r["step"])
-    assert rows
-    r0 = rows[0]
-    assert all(r["conservation_ok"] for r in rows)
-    assert all(r["aligned_ok"] for r in rows)
-    assert all(r["disjoint_ok"] for r in rows)
-    assert all(r["fully_coalesced_ok"] for r in rows)
-    assert r0["free_units"] + r0["live_units"] == 64
-    # trace sanity: steps are contiguous, ops advance monotonically
-    assert [r["step"] for r in rows] == list(range(1, len(rows) + 1))
-    opis = [r["opi"] for r in rows]
-    assert all(a <= b for a, b in zip(opis, opis[1:]))
-    assert opis[-1] == 20
-    acts = {r["action"] for r in rows}
-    assert "alloc_done" in acts or "alloc_fail" in acts
-    # every split names a block that is then halved: order >= 1
-    for r in rows:
-        if r["action"] == "split":
-            assert r["block_order"] >= 1
-        if r["action"] in ("alloc_done", "free_done", "merge"):
-            # reported blocks respect buddy alignment
-            assert r["block_addr"] % (1 << max(r["block_order"], 0)) \
-                == 0
-
-
 def test_speculative_sampling_identity(spark):
     rows = QUERIES["data_speculative_sampling"](spark, SF).collect()
     assert len(rows) == 5
@@ -587,25 +141,3 @@ def test_speculative_sampling_identity(spark):
     assert r0["alpha_num"] == sum(r["accept_mass"] for r in rows)
     assert r0["alpha_den"] == A * B
     assert 0 < r0["alpha_num"] <= r0["alpha_den"]
-
-
-def test_chase_heath_lossless_join(spark):
-    rows = {r["decomposition"][:2]: r for r in
-            QUERIES["q_orders_chase_lossless"](spark, SF).collect()}
-    assert set(rows) == {"D1", "D2"}
-    d1, d2 = rows["D1"], rows["D2"]
-    # Heath's theorem holds against the real join on both
-    assert d1["heath_agrees_with_data"]
-    assert d2["heath_agrees_with_data"]
-    # the key split is lossless — exactly |R| rows come back
-    assert d1["key_fd_holds"] and d1["heath_lossless"]
-    assert d1["data_lossless"]
-    assert d1["join_rows"] == d1["r_rows"]
-    # the non-key split is decided by whether C -> D,T holds
-    assert d2["heath_lossless"] == d2["c_determines_dt"]
-    assert d2["data_lossless"] == d2["heath_lossless"]
-    if not d2["data_lossless"]:
-        # lossy means the join STRICTLY explodes (projections always
-        # produce a superset)
-        assert d2["join_rows"] > d2["r_rows"]
-    assert not d2["int_determines_r1"]  # C can never determine K

@@ -1,50 +1,13 @@
-"""Driver-contract registry invariants (import-level, no Spark session).
+"""Driver-contract registry invariants (import-level, no Spark session):
+every query keeps its oracle, and ``__spark_entry__`` exposes the registry
+in registration order."""
 
-The grading driver walks ``queries()`` in registration order and its
-official correctness artifact is time-boxed, so ``queries.py`` re-orders
-the registry at import (``_reorder_registry``). These tests pin the
-properties that make that safe: the reorder is a pure permutation, every
-query keeps its oracle, and the order is exactly the documented one
-(unevidenced fastest-first, pipeline-memo block, then the round-4-covered
-tail).
-"""
-
-from knowledge_extraction_pipeline_spark.queries import (
-    ORACLE,
-    QUERIES,
-    _GATE_WALL_S,
-    _OFFICIALLY_COVERED_R4,
-    _PIPELINE_BLOCK,
-)
+from knowledge_extraction_pipeline_spark.queries import ORACLE, QUERIES
 
 
 def test_every_query_has_an_oracle():
     assert set(QUERIES) == set(ORACLE)
     assert len(QUERIES) >= 215
-
-
-def test_reorder_is_a_permutation_with_covered_tail():
-    names = list(QUERIES)
-    covered = _OFFICIALLY_COVERED_R4
-    # the 50 round-4-evidenced queries are exactly the registry tail,
-    # in their original relative order
-    assert names[-len(covered):] == covered
-    # no duplicates anywhere
-    assert len(names) == len(set(names))
-
-
-def test_pipeline_block_contiguous_before_covered_tail():
-    names = list(QUERIES)
-    start = len(names) - len(_OFFICIALLY_COVERED_R4) - len(_PIPELINE_BLOCK)
-    assert names[start:start + len(_PIPELINE_BLOCK)] == _PIPELINE_BLOCK
-
-
-def test_unevidenced_prefix_is_fastest_first():
-    names = list(QUERIES)
-    prefix = names[: len(names) - len(_OFFICIALLY_COVERED_R4)
-                   - len(_PIPELINE_BLOCK)]
-    keys = [(_GATE_WALL_S.get(n, 3.0), n) for n in prefix]
-    assert keys == sorted(keys)
 
 
 def test_spark_entry_contract_surface():

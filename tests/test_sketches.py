@@ -242,29 +242,6 @@ def test_misra_gries_merge_bounds(spark):
     assert heavy <= {r["word"] for r in rows}
 
 
-def test_delta_binpacked_widths_and_sizes(spark):
-    """DELTA_BINARY_PACKED layout: miniblock widths minimal+sufficient,
-    miniblock/block framing matches the 128/32 spec, encoded size beats
-    plain 8-byte encoding on near-sorted timestamps, decode audit green."""
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = QUERIES["q_events_delta_binpacked"](spark,
-                                               "/root/testdata/sf0.001")
-    rs = sorted(rows.collect(), key=lambda r: r["mb_idx"])
-    assert all(r["width_ok"] and r["decode_ok"] for r in rs)
-    # 999 deltas -> 7 full blocks of 128 + 103 remainder; 32 miniblocks
-    assert len(rs) == 32
-    assert sum(r["n_deltas"] for r in rs) == 999
-    assert all(r["n_deltas"] == 32 for r in rs[:-1])
-    # min_delta constant within each block
-    by_block = {}
-    for r in rs:
-        by_block.setdefault(r["block_idx"], set()).add(r["min_delta"])
-    assert all(len(s) == 1 for s in by_block.values())
-    # timestamps are near-sorted in write order: delta encoding must win
-    assert rs[0]["encoded_bytes"] < rs[0]["plain_bytes"]
-
-
 def test_dgim_closed_form_equals_literal_cascade(spark):
     """The canonical lazy-counter decomposition the query computes must
     equal a LITERAL DGIM simulation (prepend bucket of size 1, merge the
@@ -306,42 +283,6 @@ def test_dgim_closed_form_equals_literal_cascade(spark):
     assert all(1 <= c <= 2 for c in per_size.values())
 
 
-def test_rle_hybrid_regimes_and_formulas(spark):
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = QUERIES["q_events_rle_hybrid"](spark,
-                                          "/root/testdata/sf0.001")
-    rs = rows.collect()
-    assert all(r["rle_uniform_ok"] and r["rle_minlen_ok"] for r in rs)
-    assert all(r["beats_plain"] for r in rs)
-    day = [r for r in rs if r["stream"] == "day"]
-    typ = [r for r in rs if r["stream"] == "type"]
-    # near-sorted day codes -> RLE runs; interleaved types -> packed
-    assert {r["kind"] for r in day} == {"rle"}
-    assert len(day) == 30
-    assert all(r["kind"] == "packed" for r in typ)
-    # byte formulas re-derived
-    def varint(u):
-        u = max(u, 1)
-        n = 0
-        while u:
-            n += 1
-            u >>= 7
-        return n
-    for r in rs:
-        if r["kind"] == "rle":
-            assert r["seg_bytes"] == varint(2 * r["n_values"]) + \
-                (5 + 7) // 8
-        else:
-            g = (r["n_values"] + 7) // 8
-            assert r["seg_bytes"] == varint(2 * g + 1) + g * (
-                3 if r["stream"] == "type" else 5)
-    # stream totals equal the sum of their segments
-    for grp, rows_ in (("day", day), ("type", typ)):
-        assert rows_[0]["total_bytes"] == sum(x["seg_bytes"]
-                                              for x in rows_)
-
-
 def test_cuckoo_filter_no_false_negatives_and_involution(spark):
     from knowledge_extraction_pipeline_spark.queries import QUERIES
 
@@ -363,36 +304,3 @@ def test_cuckoo_filter_no_false_negatives_and_involution(spark):
     # fingerprints are 8-bit nonzero; buckets in range
     assert all(1 <= r["fp"] <= 255 for r in rs)
     assert all(0 <= r["i1"] < 64 and 0 <= r["i2"] < 64 for r in rs)
-
-
-def test_kway_merge_huffman_optimality_audit(spark):
-    import heapq
-
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = sorted(QUERIES["q_events_kway_merge_plan"](
-        spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["step"])
-    assert all(r["huffman_le_naive"] and r["root_ok"] and r["pad_ok"]
-               for r in rows)
-    assert rows[0]["n_runs"] == 30 and rows[0]["dummies"] == 1
-    assert len(rows) == 15  # (31 - 1) / (3 - 1)
-    # cumulative cost is consistent and each merge takes the 3 smallest
-    assert rows[-1]["cum_cost"] == rows[-1]["total_cost"]
-    # independent optimal cost via a real heap over the raw day counts
-    # (ties may reorder equal sizes but the k-ary Huffman COST is unique)
-    h = []
-    from knowledge_extraction_pipeline_spark.queries import _t
-    import pyspark.sql.functions as F
-    days = (_t(spark, "/root/testdata/sf0.001", "events")
-            .groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).alias("c")).collect())
-    sizes = [int(r["c"]) for r in days] + [0]  # one dummy
-    for s in sizes:
-        heapq.heappush(h, s)
-    cost = 0
-    while len(h) > 1:
-        m = heapq.heappop(h) + heapq.heappop(h) + heapq.heappop(h)
-        cost += m
-        heapq.heappush(h, m)
-    assert rows[-1]["total_cost"] == cost
