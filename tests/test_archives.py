@@ -98,6 +98,38 @@ def test_au_refuses_unknown():
         decode_au(bad)
 
 
+def test_flac_streaminfo_roundtrip_and_refusals():
+    import hashlib
+    from knowledge_extraction_pipeline_spark.sources.audio_meta import (
+        encode_flac_streaminfo, parse_flac_streaminfo)
+    md5 = hashlib.md5(b"sig").digest()
+    payload = encode_flac_streaminfo(4096, 4096, 14, 20, 44100, 2, 24,
+                                     23_456_789_012, md5, padding=16)
+    rate, ch, bps, total, nb, md5hex = parse_flac_streaminfo(payload)
+    assert (rate, ch, bps, total, nb) == (44100, 2, 24, 23_456_789_012, 2)
+    assert md5hex == md5.hex()
+    with pytest.raises(NotImplementedError):
+        parse_flac_streaminfo(b"OggS" + b"\x00" * 40)
+    with pytest.raises(ValueError):  # 36-bit total_samples overflow
+        encode_flac_streaminfo(4096, 4096, 14, 20, 44100, 2, 24,
+                               1 << 36, md5)
+
+
+def test_mp3_walk_desync_refused():
+    from knowledge_extraction_pipeline_spark.sources.audio_meta import (
+        encode_mp3, parse_mp3_frames, mp3_frame_spec, MP3_RATES)
+    payload = encode_mp3(4)
+    rate, nf, sum_br, vbr = parse_mp3_frames(payload)
+    ridx, frames = mp3_frame_spec(4)
+    assert rate == MP3_RATES[ridx] and nf == len(frames) and vbr == 1
+    # corrupt the first frame header's bitrate to the forbidden index 15
+    tag_end = payload.find(b"\xff\xfb")
+    bad = bytearray(payload)
+    bad[tag_end + 2] = (15 << 4) | (bad[tag_end + 2] & 0x0F)
+    with pytest.raises(NotImplementedError):
+        parse_mp3_frames(bytes(bad))
+
+
 def test_rast_rle_roundtrip_incl_escape_byte():
     from knowledge_extraction_pipeline_spark.sources.multimodal import (
         decode_rast, encode_rast)
@@ -165,3 +197,17 @@ def test_ilbm_byterun1_and_bitplane_roundtrip():
         np.testing.assert_array_equal(out, exp)
     with pytest.raises(NotImplementedError):
         decode_ilbm(b"FORM\x00\x00\x00\x04AIFF")
+
+
+def test_adpcm_roundtrip_and_refusal():
+    from knowledge_extraction_pipeline_spark.sources.audio_meta import (
+        decode_wav_adpcm, encode_wav_adpcm)
+    x = (np.sin(np.arange(700) * 0.07) * 12000).astype(np.int16)
+    rate, y = decode_wav_adpcm(encode_wav_adpcm(8000, x))
+    assert rate == 8000 and len(y) == 1010        # padded to 2 blocks
+    err = np.abs(x.astype(np.int64) - y[:len(x)].astype(np.int64))
+    # ADPCM quantization noise is bounded; the adaptation transient at
+    # the start is the worst case
+    assert int(err[100:].max()) < 2048
+    with pytest.raises(NotImplementedError):
+        decode_wav_adpcm(b"RIFF\x04\x00\x00\x00WAVE")

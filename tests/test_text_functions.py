@@ -334,31 +334,3 @@ def test_myers_diff_matches_full_dp_lcs(spark):
     # the trajectory ends at the band that reached (n, m) and only there
     assert [r["done"] for r in rows] == [False] * (len(rows) - 1) + [True]
     assert rows[-1]["d"] == dist
-
-
-def test_url_canonicalizer_grammar():
-    import pytest
-
-    from knowledge_extraction_pipeline_spark.functions.urltools import (
-        canonicalize_url as c,
-    )
-    assert c("HTTP://Example-3.COM:80/a/b/../c?b=2&a=1#frag") \
-        == "http://example-3.com/a/c?a=1&b=2"
-    assert c("http://e.com/x/y/../../a/c") == "http://e.com/a/c"
-    assert c("http://e.com/../../a") == "http://e.com/a"
-    with pytest.raises(ValueError):
-        c("no-scheme.com/a")
-
-
-def test_b85_charset_matches_stdlib():
-    import base64
-
-    from knowledge_extraction_pipeline_spark.queries import _B85_CS
-    # the in-engine charset must be byte-for-byte the stdlib b85 table
-    probe = bytes(range(0, 256, 7))
-    enc = base64.b85encode(probe[:len(probe) - len(probe) % 4]).decode()
-    assert set(enc) <= set(_B85_CS)
-    # positional check: value 0..84 maps to _B85_CS[i]
-    for v in (0, 1, 84):
-        quad = (v).to_bytes(4, "big")
-        assert base64.b85encode(quad).decode()[-1] == _B85_CS[v % 85]
