@@ -19,9 +19,6 @@ import hashlib
 import re
 from functools import lru_cache
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ..config import CATEGORIES, IMPORTANCE_LEVELS, KNOWN_ALIASES
 
 # ~157 base terms: 150 synthetic two-word domain terms + the 7 canonical
@@ -188,18 +185,19 @@ def apply_alias_py(norm: str) -> str:
     return KNOWN_ALIASES.get(norm, norm)
 
 
-def literal_map(d: dict[str, str]) -> Column:
-    """A str → str dict as a map literal, parsed from ONE `map(...)` SQL
-    expression: one JVM call, where `F.create_map(*[F.lit(x) ...])` makes
-    one per key and per value. It analyzes to the same CreateMap of string
-    literals. Quotes and backslashes are escaped for the SQL parser."""
-    def quoted(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return F.expr("map(" + ", ".join(
-        quoted(x) for kv in d.items() for x in kv) + ")")
+def sql_str(s: str) -> str:
+    """`s` as a SQL string literal, quotes and backslashes escaped."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def apply_alias(norm: Column) -> Column:
-    """apply_alias_py as a Column: the known-alias target of a normalized
-    term, else the term itself (a map literal — no join)."""
-    return F.coalesce(literal_map(KNOWN_ALIASES)[norm], norm)
+def literal_map_sql(d: dict[str, str]) -> str:
+    """A str → str dict as ONE `map(...)` SQL expression: parsed in one JVM
+    call, where `F.create_map(*[F.lit(x) ...])` makes one per key and per
+    value. It analyzes to the same CreateMap of string literals."""
+    return "map(" + ", ".join(sql_str(x) for kv in d.items() for x in kv) + ")"
+
+
+def apply_alias_sql(norm: str) -> str:
+    """apply_alias_py of the SQL expression `norm`: the known-alias target of
+    a normalized term, else the term itself (a map literal — no join)."""
+    return f"coalesce({literal_map_sql(KNOWN_ALIASES)}[{norm}], {norm})"

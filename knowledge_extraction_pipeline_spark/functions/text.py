@@ -1,12 +1,25 @@
-"""Text scalar functions as JVM-side Column expressions (no Python in the hot
-path). Each mirrors a reference operator; citations in docstrings point into
-/root/reference.
+"""Text scalar functions as JVM-side expressions (no Python in the hot
+path): Column builders, and `*_sql` builders of SQL text for the stage
+statements. Each mirrors a reference operator; citations in docstrings point
+into the reference implementation's source.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def sql_column(sql: Callable[..., str], *cols: Column) -> Column:
+    """The Column form of a SQL-text builder, for callers outside a SQL
+    statement: `sql` is applied to the fields of a one-element
+    array<struct(cols)> inside a lambda, so the expression is written once,
+    as SQL, and parsed in one JVM call."""
+    fields = [f"p._{i}" for i in range(len(cols))]
+    packed = F.array(F.struct(*[c.alias(f"_{i}") for i, c in enumerate(cols)]))
+    return F.call_function("transform", packed, F.expr(f"p -> {sql(*fields)}"))[0]
 
 
 def normalize_term(c: Column) -> Column:
@@ -15,10 +28,20 @@ def normalize_term(c: Column) -> Column:
     return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
 
 
-def normalize_term_resolver(c: Column) -> Column:
+def normalize_term_sql(e: str) -> str:
+    """normalize_term of the SQL expression `e`, as SQL text (the Column
+    form stays native for its hot per-document callers)."""
+    return f"regexp_replace(trim(lower({e})), r'\\s+', ' ')"
+
+
+def normalize_term_resolver_sql(e: str) -> str:
     """Resolver variant: also folds '-'/'_' to space
     (extraction/entity_resolver.py:158-162)."""
-    return F.regexp_replace(F.trim(F.regexp_replace(F.lower(c), r"[-_]", " ")), r"\s+", " ")
+    return f"regexp_replace(trim(regexp_replace(lower({e}), '[-_]', ' ')), r'\\s+', ' ')"
+
+
+def normalize_term_resolver(c: Column) -> Column:
+    return sql_column(normalize_term_resolver_sql, c)
 
 
 def word_count(c: Column) -> Column:
@@ -103,18 +126,6 @@ def quality_score(c: Column) -> Column:
     return F.round(0.5 * len_score + 0.5 * stop_score - punct_penalty, 4)
 
 
-def importance_weight(c: Column) -> Column:
-    """critical/high/medium/low → 1.0/0.8/0.6/0.4
-    (scripts/infer_relationships_tfidf.py:77-82), as a when-chain."""
-    from ..config import IMPORTANCE_WEIGHTS
-
-    expr = F.lit(None).cast("double")
-    out = F.when(F.lit(False), expr)
-    for k, v in IMPORTANCE_WEIGHTS.items():
-        out = out.when(c == k, F.lit(v))
-    return out.otherwise(F.lit(0.4))
-
-
 def fingerprint(c: Column) -> Column:
     """64-bit document fingerprint: xxhash64 of the whitespace-normalized,
     lowercased text — the exact-dedup key."""
@@ -132,39 +143,48 @@ def word_shingles(c: Column, k: int = 3) -> Column:
     )).otherwise(F.array(F.concat_ws(" ", words)))
 
 
-def char_shingles(c: Column, k: int = 3) -> Column:
+def char_shingles_sql(e: str, k: int = 3) -> str:
     """k-char shingles of the normalized string with word-boundary markers
     ('#'): '#gradient#descent#'. Boundary marking stops suffix/prefix word
     sharing from inflating Jaccard between distinct two-word terms (entity-
     name MinHash input — see operators/link.py)."""
-    s = F.concat(F.lit("#"), F.regexp_replace(normalize_term(c), " ", "#"), F.lit("#"))
-    n = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-    return F.transform(idx, lambda i: s.substr(i, F.lit(k)))
+    s = f"concat('#', regexp_replace({normalize_term_sql(e)}, ' ', '#'), '#')"
+    return f"transform(sequence(1, greatest(length({s}) - {k} + 1, 1)), i -> substr({s}, i, {k}))"
+
+
+def char_shingles(c: Column, k: int = 3) -> Column:
+    return sql_column(lambda e: char_shingles_sql(e, k), c)
+
+
+def minhash_sql(shingles: str, num_hashes: int, seed: int = 42) -> str:
+    """MinHash signature (array<long>) of the array<string> SQL expression
+    `shingles`: per hash i, min over shingles of xxhash64(shingle, seed+i).
+    Single fold over the shingle array (one pass, vs num_hashes separate
+    transform+min passes)."""
+    return (f"aggregate({shingles}, "
+            f"array_repeat(CAST({2**63 - 1} AS BIGINT), {num_hashes}), "
+            f"(acc, s) -> zip_with(acc, "
+            f"transform(sequence(0, {num_hashes - 1}), i -> xxhash64(s, i + {seed})), "
+            f"(x, y) -> least(x, y)))")
 
 
 def minhash_signature(shingles: str, num_hashes: int, seed: int = 42) -> Column:
-    """MinHash signature as array<long> of the array<string> column named
-    `shingles`: per hash i, min over shingles of xxhash64(shingle, seed+i).
-    Single fold over the shingle array (one pass, vs num_hashes separate
-    transform+min passes). One SQL expression, so building it is one JVM
-    call."""
-    return F.expr(
-        f"aggregate(`{shingles}`, "
-        f"array_repeat(CAST({2**63 - 1} AS BIGINT), {num_hashes}), "
-        f"(acc, s) -> zip_with(acc, "
-        f"transform(sequence(0, {num_hashes - 1}), i -> xxhash64(s, i + {seed})), "
-        f"(x, y) -> least(x, y)))")
+    """minhash_sql of the column named `shingles`."""
+    return F.expr(minhash_sql(f"`{shingles}`", num_hashes, seed))
+
+
+def lsh_bands_sql(signature: str, num_hashes: int, num_bands: int) -> str:
+    """Split the MinHash signature SQL expression `signature` (array<long>,
+    length num_hashes) into band hashes: array<long> of length num_bands;
+    band b hashes its contiguous slice of the signature. Two sets collide in
+    band b iff their slices are identical — the standard LSH banding scheme."""
+    rows = num_hashes // num_bands
+    return "array(" + ", ".join(
+        f"xxhash64({b}, concat_ws(',', transform(slice({signature}, {b * rows + 1}, "
+        f"{rows}), x -> CAST(x AS STRING))))"
+        for b in range(num_bands)) + ")"
 
 
 def lsh_bands(signature: str, num_hashes: int, num_bands: int) -> Column:
-    """Split the MinHash signature column named `signature` (array<long>,
-    length num_hashes) into band hashes: array<long> of length num_bands;
-    band b hashes its contiguous slice of the signature. Two sets collide in
-    band b iff their slices are identical — the standard LSH banding scheme.
-    One SQL expression, so building it is one JVM call."""
-    rows = num_hashes // num_bands
-    return F.expr("array(" + ", ".join(
-        f"xxhash64({b}, concat_ws(',', transform(slice(`{signature}`, {b * rows + 1}, "
-        f"{rows}), x -> CAST(x AS STRING))))"
-        for b in range(num_bands)) + ")")
+    """lsh_bands_sql of the column named `signature`."""
+    return F.expr(lsh_bands_sql(f"`{signature}`", num_hashes, num_bands))

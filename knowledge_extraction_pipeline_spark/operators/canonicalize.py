@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import sql
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     und = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -90,21 +92,19 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     large-star/small-star loop. Both produce identical (member, min-root)
     assignments (pinned by tests/test_link_canonicalize.py).
 
-    Distributed convergence: the small-star output is a star forest fixed
-    point when its (count, checksum) stops changing — checksum is an
-    order-insensitive bit_xor of row hashes, one tiny aggregate per round.
-    Raises RuntimeError when max_iter rounds pass without that fixed point."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-
-    n_edges = e.count()
-    if n_edges == 0:
-        return e.select(F.col("src").alias("norm_term"), F.col("dst").alias("canon"))
-    if n_edges <= driver_threshold:
-        assigned = _driver_union_find(e.collect())
+    Below the threshold the bounded collect is the only action; only the
+    distributed path checkpoints. Its convergence: the small-star output is
+    a star forest fixed point when its (count, checksum) stops changing —
+    checksum is an order-insensitive bit_xor of row hashes, one tiny
+    aggregate per round. Raises RuntimeError when max_iter rounds pass
+    without that fixed point."""
+    e = sql("SELECT DISTINCT src, dst FROM {edges} WHERE src != dst", edges=edges)
+    rows = e.limit(driver_threshold + 1).collect()
+    if len(rows) <= driver_threshold:
         return e.sparkSession.createDataFrame(
-            assigned, "norm_term string, canon string")
+            _driver_union_find(rows), "norm_term string, canon string")
 
+    e = e.localCheckpoint(eager=True)
     prev_sig = None
     for _ in range(max_iter):
         e = _small_star(_large_star(e))
@@ -139,14 +139,12 @@ def canonicalize_stage(terms: DataFrame, candidate_edges: DataFrame,
     if "phase" in candidate_edges.columns:
         # null phase = decided (only the explicit 'ambiguous' tag is held
         # back; NULL != 'ambiguous' alone would silently drop null rows)
-        candidate_edges = candidate_edges.filter(
-            F.coalesce(F.col("phase") != "ambiguous", F.lit(True)))
+        candidate_edges = sql("SELECT * FROM {c} WHERE coalesce(phase != 'ambiguous', true)",
+                              c=candidate_edges)
     cc = connected_components(candidate_edges, max_iter=max_iter)
-    out = (
-        terms.join(cc, on="norm_term", how="left")
-        .withColumn("canon", F.coalesce("canon", "norm_term"))
-    )
     # vocabulary-sized and consumed by many downstream plan branches (every
     # build_nodes/build_edges aggregation joins it) — materialize once so the
     # distinct-terms scan in its lineage never re-runs per branch
-    return out.persist()
+    return sql("SELECT t.*, coalesce(c.canon, t.norm_term) AS canon "
+               "FROM {terms} t LEFT JOIN {cc} c ON t.norm_term = c.norm_term",
+               terms=terms, cc=cc).persist()

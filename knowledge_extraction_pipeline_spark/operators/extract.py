@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import sql
+
 MENTION_FIELDS = T.StructType([
     T.StructField("term", T.StringType()),
     T.StructField("norm_term", T.StringType()),
@@ -66,7 +68,8 @@ def with_mention_array(transcripts: DataFrame) -> DataFrame:
 # test in tests/test_extract.py pins the two paths to identical mention sets).
 # Differences: `start` is the match ORDINAL (not char offset — same ordering
 # semantics, which is all downstream uses), and `quote` anchors at the first
-# occurrence of the surface in the turn.
+# occurrence of the surface in the turn. Each table is one SQL statement, so
+# its plan is built in one JVM call.
 
 
 def _jvm_pattern() -> str:
@@ -75,74 +78,52 @@ def _jvm_pattern() -> str:
     return r"(?i)\b(" + trie_regex(sorted(surface_map().keys())) + r")\b"
 
 
-def _lookup_maps():
-    from ..functions.lexicon import literal_map, surface_map
+def _lookup_maps() -> tuple[str, str]:
+    """The surface → category and surface → importance maps, as SQL text."""
+    from ..functions.lexicon import literal_map_sql, surface_map
 
     cat, imp = {}, {}
     for key, (_base, _kind, c, i) in surface_map().items():
         cat[key] = c
         imp[key] = i
-    return literal_map(cat), literal_map(imp)
+    return literal_map_sql(cat), literal_map_sql(imp)
 
 
 def with_mention_array_jvm(transcripts: DataFrame) -> DataFrame:
     """transcripts + `_surfaces` (array<string> of matched surfaces, in text
     order) — all JVM expressions."""
-    return transcripts.withColumn(
-        "_surfaces", F.regexp_extract_all(F.col("text"), F.lit(_jvm_pattern()), 1))
+    from ..functions.lexicon import sql_str
+
+    return sql(
+        f"SELECT *, regexp_extract_all(text, {sql_str(_jvm_pattern())}, 1) AS _surfaces "
+        "FROM {t}", t=transcripts)
 
 
 def mentions_jvm(transcripts: DataFrame, prepared: bool = False) -> DataFrame:
-    from ..functions.text import normalize_term
+    from ..functions.text import normalize_term_sql
 
     cat_map, imp_map = _lookup_maps()
     src = transcripts if prepared else with_mention_array_jvm(transcripts)
-    base = src.select(
-        "conv_id", "turn_idx", "text",
-        F.posexplode("_surfaces").alias("start", "term"),
-    )
-    norm = normalize_term(F.col("term"))
-    return base.select(
-        "conv_id", "turn_idx",
-        F.col("term"),
-        norm.alias("norm_term"),
-        cat_map[norm].alias("category"),
-        imp_map[norm].alias("importance"),
-        F.col("start").cast("int"),
-        F.substring(
-            F.col("text"),
-            F.greatest(F.lit(1), F.expr("locate(term, text)") - 40),
-            F.length("term") + 80,
-        ).alias("quote"),
-        F.lit(1.0).alias("confidence"),
-    )
+    norm = normalize_term_sql("term")
+    return sql(f"""
+SELECT conv_id, turn_idx, term, {norm} AS norm_term,
+       {cat_map}[{norm}] AS category, {imp_map}[{norm}] AS importance, start,
+       substring(text, greatest(1, locate(term, text) - 40), length(term) + 80) AS quote,
+       1.0D AS confidence
+FROM (SELECT conv_id, turn_idx, text, posexplode(_surfaces) AS (start, term) FROM {{src}})""",
+        src=src)
 
 
 def triples_raw_jvm(transcripts: DataFrame, prepared: bool = False) -> DataFrame:
-    norms = F.array_sort(F.array_distinct(
-        F.transform(F.col("_surfaces"),
-                    lambda s: F.regexp_replace(F.trim(F.lower(s)), r"\s+", " "))))
-    pairs = F.filter(
-        F.flatten(F.transform(
-            norms,
-            lambda a: F.transform(
-                norms,
-                lambda b: F.struct(a.alias("subj"), b.alias("obj"),
-                                   (a < b).alias("keep"))),
-        )),
-        lambda p: p["keep"],
-    )
+    from ..functions.text import normalize_term_sql
+
+    norms = f"array_sort(array_distinct(transform(_surfaces, s -> {normalize_term_sql('s')})))"
     src = transcripts if prepared else with_mention_array_jvm(transcripts)
-    return (
-        src
-        .select("conv_id", "turn_idx", F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.subj").alias("subj"),
-            F.lit("CO_OCCURS").alias("pred"),
-            F.col("p.obj").alias("obj"),
-            "conv_id", "turn_idx",
-        )
-    )
+    return sql(f"""
+SELECT p.subj AS subj, 'CO_OCCURS' AS pred, p.obj AS obj, conv_id, turn_idx
+FROM (SELECT conv_id, turn_idx, explode(filter(flatten(transform({norms}, a -> transform(
+        {norms}, b -> struct(a AS subj, b AS obj, a < b AS keep)))), p -> p.keep)) AS p
+      FROM {{src}})""", src=src)
 
 
 def mentions(transcripts: DataFrame) -> DataFrame:
@@ -210,9 +191,8 @@ def extract_stage(transcripts: DataFrame,
         # surface arrays. cache() (columnar, compressed, column-prunable
         # InMemoryTableScan) beats an RDD localCheckpoint, which would
         # re-deserialize full rows for every consumer.
-        base = with_mention_array_jvm(transcripts) \
-            .select("conv_id", "turn_idx", "text", "_surfaces") \
-            .persist()
+        base = with_mention_array_jvm(transcripts.select(
+            "conv_id", "turn_idx", "text")).persist()
         return mentions_jvm(base, prepared=True), triples_raw_jvm(base, prepared=True)
     return mentions(transcripts), triples_raw(transcripts)
 

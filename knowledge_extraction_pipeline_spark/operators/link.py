@@ -15,12 +15,17 @@ distributed execution:
                 |mentions| — the blocking is what survives 100× scale-up.
 
 Output: candidate edge list (src, dst, sim, phase) — input to stage 3 CC.
+
+Each phase is one SQL statement over the `{terms}` relation, and
+link_stage is their UNION ALL: one JVM call parses and analyzes the whole
+candidates plan, where building it from Column and DataFrame calls took
+over a thousand py4j round trips, each DataFrame call re-analyzing the
+growing plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 
 from ..config import (
     LSH_JACCARD_THRESHOLD,
@@ -28,13 +33,15 @@ from ..config import (
     LSH_NUM_HASHES,
     LSH_SHINGLE_SIZE,
 )
-from ..functions.lexicon import apply_alias
+from ..functions.lexicon import apply_alias_sql
 from ..functions.text import (
-    char_shingles,
-    lsh_bands,
-    minhash_signature,
-    normalize_term_resolver,
+    char_shingles_sql,
+    lsh_bands_sql,
+    minhash_sql,
+    normalize_term_resolver_sql,
+    sql_column,
 )
+from ..session import sql
 
 
 def distinct_terms(mentions: DataFrame) -> DataFrame:
@@ -44,75 +51,90 @@ def distinct_terms(mentions: DataFrame) -> DataFrame:
     return mentions.select("norm_term").distinct()
 
 
-def alias_edges(terms: DataFrame) -> DataFrame:
-    """(norm → canonical) edges from the known-alias table, as a broadcast
-    map literal — a constant-folded expression, no join."""
-    return (
-        terms
-        .withColumn("dst", apply_alias(F.col("norm_term")))
-        .filter(F.col("dst") != F.col("norm_term"))
-        .select(F.col("norm_term").alias("src"), "dst",
-                F.lit(1.0).alias("sim"), F.lit("alias").alias("phase"))
-    )
+# (norm → canonical) edges from the known-alias table, as a broadcast map
+# literal — a constant-folded expression, no join
+ALIAS_EDGES = f"""
+SELECT norm_term AS src, dst, 1.0D AS sim, 'alias' AS phase
+FROM (SELECT *, {apply_alias_sql('norm_term')} AS dst FROM {{terms}})
+WHERE dst != norm_term"""
 
 
-def resolver_norm_edges(terms: DataFrame) -> DataFrame:
-    """Deterministic hyphen/underscore-variant linking: terms whose resolver
-    normalization (fold '-'/'_' to space — entity_resolver.py:158-162) agrees
-    are linked to the group's min member. Catches 100% of punctuation
-    variants exactly; the MinHash stage then only has to catch typos."""
-    from ..functions.text import normalize_term_resolver
-
-    rn = terms.withColumn("rnorm", normalize_term_resolver(F.col("norm_term")))
-    root = rn.groupBy("rnorm").agg(F.min("norm_term").alias("dst"),
-                                   F.count(F.lit(1)).alias("n"))
-    return (
-        rn.join(root.filter(F.col("n") > 1), "rnorm")
-        .filter(F.col("norm_term") != F.col("dst"))
-        .select(F.col("norm_term").alias("src"), "dst",
-                F.lit(1.0).alias("sim"), F.lit("resolver_norm").alias("phase"))
-    )
+def _blocked_edges(key: str, phase: str) -> str:
+    """Terms sharing the blocking `key` (a SQL expression of norm_term) are
+    linked to the block's min member: O(n) blocking, no pair enumeration."""
+    return f"""
+WITH keyed AS (SELECT *, {key} AS _key FROM {{terms}})
+SELECT norm_term AS src, dst, 1.0D AS sim, '{phase}' AS phase
+FROM keyed JOIN (SELECT _key, min(norm_term) AS dst, count(1) AS n
+                 FROM keyed GROUP BY _key) USING (_key)
+WHERE n > 1 AND norm_term != dst"""
 
 
-def charsort_edges(terms: DataFrame) -> DataFrame:
-    """Deterministic transposition-typo blocking: key = each word with its
-    characters sorted ('decsent' and 'descent' → 'cdeenst'). Terms sharing
-    the key have identical per-word character multisets — near-certain typo
-    variants — and are linked to the block's min member. O(n) blocking, no
-    pair enumeration."""
-    chars = lambda w: F.filter(F.split(w, ""), lambda c: c != "")
-    key = F.array_join(
-        F.transform(F.split(F.col("norm_term"), " "),
-                    lambda w: F.array_join(F.array_sort(chars(w)), "")),
-        " ")
-    keyed = terms.withColumn("ck", key)
-    root = keyed.groupBy("ck").agg(F.min("norm_term").alias("dst"),
-                                   F.count(F.lit(1)).alias("n"))
-    return (
-        keyed.join(root.filter(F.col("n") > 1), "ck")
-        .filter(F.col("norm_term") != F.col("dst"))
-        .select(F.col("norm_term").alias("src"), "dst",
-                F.lit(1.0).alias("sim"), F.lit("charsort").alias("phase"))
-    )
+# hyphen/underscore variants: terms whose resolver normalization (fold
+# '-'/'_' to space — entity_resolver.py:158-162) agrees. Catches 100% of
+# punctuation variants exactly; the MinHash stage then only has to catch typos
+RESOLVER_NORM_EDGES = _blocked_edges(
+    normalize_term_resolver_sql("norm_term"), "resolver_norm")
+
+# transposition typos: key = each word with its characters sorted ('decsent'
+# and 'descent' → 'cdeenst'), so the block's terms have identical per-word
+# character multisets — near-certain typo variants
+CHARSORT_EDGES = _blocked_edges(
+    "array_join(transform(split(norm_term, ' '), w -> array_join(array_sort("
+    "filter(split(w, ''), c -> c != '')), '')), ' ')", "charsort")
 
 
-def _word_aligned_similar(a: F.Column, b: F.Column, t: float = 0.7) -> F.Column:
-    """True iff the two normalized terms have the same word count and every
-    aligned word pair has char-set Jaccard >= t and length difference <= 1.
-    Catches small in-word edits; immune to the shared-word inflation that
-    breaks whole-string shingle Jaccard ('gradient regularization' vs
-    'latent regularization')."""
-    wa, wb = F.split(a, " "), F.split(b, " ")
-    cs = lambda w: F.array_distinct(F.filter(F.split(w, ""), lambda c: c != ""))
-    pair_ok = F.zip_with(
-        wa, wb,
-        lambda x, y: (
-            (F.size(F.array_intersect(cs(x), cs(y))).cast("double")
-             / F.size(F.array_union(cs(x), cs(y))) >= t)
-            & (F.abs(F.length(x) - F.length(y)) <= 1)
-        ),
-    )
-    return (F.size(wa) == F.size(wb)) & F.forall(pair_ok, lambda x: x)
+def _word_aligned_sql(a: str, b: str, t: float = 0.7) -> str:
+    """True iff the two normalized terms (SQL expressions) have the same word
+    count and every aligned word pair has char-set Jaccard >= t and length
+    difference <= 1. Catches small in-word edits; immune to the shared-word
+    inflation that breaks whole-string shingle Jaccard ('gradient
+    regularization' vs 'latent regularization')."""
+    def cs(w: str) -> str:
+        return f"array_distinct(filter(split({w}, ''), c -> c != ''))"
+    return (f"size(split({a}, ' ')) = size(split({b}, ' ')) AND forall(zip_with("
+            f"split({a}, ' '), split({b}, ' '), (x, y) -> "
+            f"CAST(size(array_intersect({cs('x')}, {cs('y')})) AS DOUBLE)"
+            f" / size(array_union({cs('x')}, {cs('y')})) >= {t!r}D"
+            f" AND abs(length(x) - length(y)) <= 1), z -> z)")
+
+
+def _word_aligned_similar(a: Column, b: Column, t: float = 0.7) -> Column:
+    """The Column form of the fuzzy verifier, _word_aligned_sql."""
+    return sql_column(lambda x, y: _word_aligned_sql(x, y, t), a, b)
+
+
+def _minhash_sql(shingle_size: int, num_hashes: int, num_bands: int,
+                 verify_threshold: float,
+                 ambiguous_band: tuple[float, float] | None) -> str:
+    """minhash_candidate_edges as one statement over `{terms}`."""
+    def shingles(t: str) -> str:
+        return f"array_distinct({char_shingles_sql(t, shingle_size)})"
+    sim = (f"round(CAST(size(array_intersect({shingles('src')}, {shingles('dst')})) AS DOUBLE)"
+           f" / CAST(size(array_union({shingles('src')}, {shingles('dst')})) AS DOUBLE), 6)")
+    # verify on resolver-normalized strings so hyphenated variants are
+    # compared word-by-word, not as one giant word
+    ok = _word_aligned_sql(normalize_term_resolver_sql("src"),
+                           normalize_term_resolver_sql("dst"), verify_threshold)
+    if ambiguous_band is None:
+        scored = f"SELECT src, dst, {sim} AS sim, 'fuzzy' AS phase FROM cand WHERE {ok}"
+    else:
+        lo, hi = ambiguous_band
+        scored = f"""
+SELECT src, dst, sim, IF(ok, 'fuzzy', 'ambiguous') AS phase
+FROM (SELECT src, dst, ok, {sim} AS sim FROM (SELECT src, dst, {ok} AS ok FROM cand))
+WHERE ok OR (NOT ok AND sim >= {lo!r}D AND sim < {hi!r}D)"""
+    return f"""
+WITH sh AS (
+  SELECT norm_term, posexplode({lsh_bands_sql('sig', num_hashes, num_bands)})
+         AS (band_idx, band_hash)
+  FROM (SELECT norm_term, {minhash_sql('shingles', num_hashes)} AS sig
+        FROM (SELECT norm_term, {shingles('norm_term')} AS shingles FROM {{terms}}))),
+cand AS (
+  SELECT DISTINCT a.norm_term AS src, b.norm_term AS dst
+  FROM sh a JOIN sh b USING (band_idx, band_hash)
+  WHERE a.norm_term < b.norm_term)
+{scored}"""
 
 
 def minhash_candidate_edges(
@@ -127,7 +149,8 @@ def minhash_candidate_edges(
     """Banded MinHash-LSH self-join + word-aligned verification.
 
     Plan shape: terms → [map] shingles+signature+bands → explode bands →
-    shuffle on (band_idx, band_hash) → per-bucket pair join → verify. The
+    shuffle on (band_idx, band_hash) → per-bucket pair join → distinct
+    (src, dst) → verify → shingle Jaccard `sim` of the pairs kept. The
     bucket join is an equi-join, so AQE skew-join splitting applies if a
     bucket runs hot. Banding gives candidate recall; the verifier is the
     word-aligned char-set rule (not whole-string Jaccard, which cannot
@@ -144,50 +167,21 @@ def minhash_candidate_edges(
           this band to an LLM; this engine surfaces it for the caller's
           adjudicator (canonicalize_stage ignores ambiguous edges, so
           nothing merges on them by default)."""
-    sh = (
-        terms
-        .withColumn("shingles", F.array_distinct(
-            char_shingles(F.col("norm_term"), shingle_size)))
-        .withColumn("sig", minhash_signature("shingles", num_hashes))
-        .select(
-            "norm_term", "shingles",
-            F.posexplode(lsh_bands("sig", num_hashes, num_bands))
-            .alias("band_idx", "band_hash"),
-        )
-    )
+    return sql(_minhash_sql(
+        shingle_size, num_hashes, num_bands, verify_threshold, ambiguous_band),
+        terms=terms)
 
-    a = sh.alias("a")
-    b = sh.alias("b")
-    cand = (
-        a.join(b, on=["band_idx", "band_hash"])
-        .filter(F.col("a.norm_term") < F.col("b.norm_term"))
-        .select(
-            F.col("a.norm_term").alias("src"),
-            F.col("b.norm_term").alias("dst"),
-            F.col("a.shingles").alias("sh_a"),
-            F.col("b.shingles").alias("sh_b"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    # verify on resolver-normalized strings so hyphenated variants are
-    # compared word-by-word, not as one giant word
-    verified = _word_aligned_similar(
-        normalize_term_resolver(F.col("src")),
-        normalize_term_resolver(F.col("dst")), t=verify_threshold)
-    scored = cand.withColumn("sim", F.round(inter / union, 6))
-    fuzzy = scored.filter(verified).select(
-        "src", "dst", "sim", F.lit("fuzzy").alias("phase"))
-    if ambiguous_band is None:
-        return fuzzy
-    lo, hi = ambiguous_band
-    ambiguous = (
-        scored.filter(~verified
-                      & (F.col("sim") >= lo) & (F.col("sim") < hi))
-        .select("src", "dst", "sim", F.lit("ambiguous").alias("phase"))
-    )
-    return fuzzy.unionByName(ambiguous)
+
+def alias_edges(terms: DataFrame) -> DataFrame:
+    return sql(ALIAS_EDGES, terms=terms)
+
+
+def resolver_norm_edges(terms: DataFrame) -> DataFrame:
+    return sql(RESOLVER_NORM_EDGES, terms=terms)
+
+
+def charsort_edges(terms: DataFrame) -> DataFrame:
+    return sql(CHARSORT_EDGES, terms=terms)
 
 
 def link_stage(mentions: DataFrame, enable_fuzzy: bool = True,
@@ -198,11 +192,9 @@ def link_stage(mentions: DataFrame, enable_fuzzy: bool = True,
         # four phases consume the vocabulary — materialize the distinct once
         # instead of re-scanning the mentions table per phase
         terms = distinct_terms(mentions).persist()
-    edges = alias_edges(terms)
+    phases = [ALIAS_EDGES]
     if enable_fuzzy:
-        edges = edges.unionByName(resolver_norm_edges(terms))
-        edges = edges.unionByName(charsort_edges(terms))
-        edges = edges.unionByName(minhash_candidate_edges(
-            terms, verify_threshold=fuzzy_verify_threshold,
-            ambiguous_band=ambiguous_band))
-    return edges
+        phases += [RESOLVER_NORM_EDGES, CHARSORT_EDGES, _minhash_sql(
+            LSH_SHINGLE_SIZE, LSH_NUM_HASHES, LSH_NUM_BANDS,
+            fuzzy_verify_threshold, ambiguous_band)]
+    return sql(" UNION ALL ".join(f"({p})" for p in phases), terms=terms)

@@ -29,11 +29,17 @@ order-preserving BIGINT `occ` (conversation ordinal | turn_idx | start), so
 the min/min_by aggregates keep fixed-width buffers and the top-k sorts
 compare longs, not structs of strings; nodes.first_occ is unpacked back to
 the struct on output. The operators below take either form of `occ`.
+
+Each table's plan is ONE SQL statement over DataFrame parameters
+(session.sql: `sql(TEXT, name=df)`), its text kept in a module constant or a small
+template: the JVM parses and analyzes it in one call. Built from Column and
+DataFrame calls, the same plans took ~3,600 py4j round trips per run, and
+every DataFrame call re-analyzed the growing plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -45,7 +51,8 @@ from ..config import (
     EVIDENCE_SAMPLE,
     MIN_COOCCURRENCES,
 )
-from ..functions.lexicon import apply_alias, literal_map
+from ..functions.lexicon import apply_alias_sql, literal_map_sql
+from ..session import sql
 
 N_SALT = 16
 
@@ -61,10 +68,9 @@ def alias_assignments(mentions: DataFrame) -> DataFrame:
     the EMITTED TRIPLES use — the reference never fuzzy-merges, so edge parity
     requires edges at this level; the LSH+CC fuzzy canonicalization feeds the
     richer nodes table instead."""
-    return (
-        mentions.select("norm_term").distinct()
-        .withColumn("canon", apply_alias(F.col("norm_term")))
-    )
+    return sql(
+        f"SELECT norm_term, {apply_alias_sql('norm_term')} AS canon "
+        "FROM (SELECT DISTINCT norm_term FROM {m})", m=mentions)
 
 
 def conv_ordinals(mentions: DataFrame) -> DataFrame:
@@ -72,9 +78,9 @@ def conv_ordinals(mentions: DataFrame) -> DataFrame:
     the conversation field of the packed occurrence key. Conversation-sized:
     one shuffle for the distinct, then one single-partition sort, and
     broadcast to its consumers."""
-    return mentions.select("conv_id").distinct().coalesce(1).select(
-        "conv_id",
-        (F.row_number().over(Window.orderBy("conv_id")) - 1).cast("long").alias("_ord"))
+    return sql(
+        "SELECT conv_id, CAST(row_number() OVER (ORDER BY conv_id) - 1 AS BIGINT) AS _ord "
+        "FROM (SELECT /*+ COALESCE(1) */ DISTINCT conv_id FROM {m})", m=mentions)
 
 
 def with_occ_key(df: DataFrame, ordinals: DataFrame,
@@ -90,11 +96,11 @@ def with_occ_key(df: DataFrame, ordinals: DataFrame,
         ok += f" AND {name} BETWEEN 0 AND {(1 << bits) - 1}"
     names = ", ".join(["_ord"] + [n for n, _ in fields])
     widths = ", ".join([f"conv={CONV_BITS}"] + [f"{n}={b}" for n, b in fields])
-    occ = F.expr(f"CASE WHEN {ok} THEN {key} ELSE raise_error(concat("
-                 f"'occurrence key field out of range (bits {widths}): ', "
-                 f"to_json(struct({names})))) END")
-    return (df.join(F.broadcast(ordinals), "conv_id", "left")
-            .select(*df.columns, occ.alias("occ")))
+    return sql(
+        f"SELECT /*+ BROADCAST(o) */ d.*, CASE WHEN {ok} THEN {key} ELSE raise_error("
+        f"concat('occurrence key field out of range (bits {widths}): ', "
+        f"to_json(struct({names})))) END AS occ "
+        "FROM {df} d LEFT JOIN {ordinals} o USING (conv_id)", df=df, ordinals=ordinals)
 
 
 def occ_struct(nodes: DataFrame, mentions: DataFrame) -> DataFrame:
@@ -115,11 +121,11 @@ def canonical_mentions(mentions: DataFrame, assignments: DataFrame) -> DataFrame
     """Attach the canonical id to every mention. assignments is vocabulary-
     sized; Spark broadcasts it when small, AQE handles the rest. Mentions
     without an `occ` key get struct(conv_id, turn_idx, start)."""
-    mc = mentions.join(assignments, on="norm_term", how="left").withColumn(
-        "canon", F.coalesce("canon", "norm_term"))
-    if "occ" in mentions.columns:
-        return mc
-    return mc.withColumn("occ", F.struct("conv_id", "turn_idx", "start"))
+    occ = "" if "occ" in mentions.columns else ", struct(conv_id, turn_idx, start) AS occ"
+    return sql(
+        f"SELECT m.*, coalesce(a.canon, m.norm_term) AS canon{occ} "
+        "FROM {m} m LEFT JOIN {a} a ON m.norm_term = a.norm_term",
+        m=mentions, a=assignments)
 
 
 def entity_profile(mentions_c: DataFrame) -> DataFrame:
@@ -136,30 +142,110 @@ def entity_profile(mentions_c: DataFrame) -> DataFrame:
     Two phases, per (canon, norm_term) then per canon; the distinct chunk
     count is itself two-phase (distinct on the full key, then count), so
     hot entities never funnel into one task."""
-    by_norm = mentions_c.groupBy("canon", "norm_term").agg(
-        F.min("occ").alias("first_occ"),
-        F.min_by("category", "occ").alias("category"),
-        F.count_distinct("conv_id", "turn_idx").alias("n_chunks"))
-    return by_norm.groupBy("canon").agg(
-        F.min_by("norm_term", "first_occ").alias("rep_norm"),
-        F.min("first_occ").alias("first_occ"),
-        F.min_by("category", "first_occ").alias("category"),
-        F.min_by("n_chunks", "first_occ").alias("n_chunks"))
+    return sql("""
+SELECT canon, min_by(norm_term, first_occ) AS rep_norm, min(first_occ) AS first_occ,
+       min_by(category, first_occ) AS category, min_by(n_chunks, first_occ) AS n_chunks
+FROM (SELECT canon, norm_term, min(occ) AS first_occ, min_by(category, occ) AS category,
+             count(DISTINCT conv_id, turn_idx) AS n_chunks
+      FROM {mc} GROUP BY canon, norm_term)
+GROUP BY canon""", mc=mentions_c)
 
 
-def _salted_topk(df: DataFrame, key: str, sort_cols: list[str],
-                 payload: list[str], k: int, out: str) -> DataFrame:
-    """Smallest-k rows per key by sort_cols, as a sorted array column `out` of
-    struct(*sort_cols, *payload) — TWO-PHASE with a salt shard so a Zipf-hot
-    key never lands its whole group in one task (a plain
-    Window.partitionBy(key) sort would; this was the measured scaling
-    bottleneck of the materialize stage)."""
-    item = F.struct(*[F.col(c) for c in sort_cols], *[F.col(c) for c in payload])
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(*sort_cols, *payload), F.lit(N_SALT)))
-    partial = salted.groupBy(key, "_salt").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("_part"))
-    return partial.groupBy(key).agg(
-        F.slice(F.array_sort(F.flatten(F.collect_list("_part"))), 1, k).alias(out))
+def _salted_topk(src: str, key: str, sort_cols: list[str],
+                 payload: list[str], k: int, out: str) -> str:
+    """SQL text: the smallest-k rows per key of relation `src` by sort_cols,
+    as a sorted array column `out` of struct(*sort_cols, *payload) —
+    TWO-PHASE with a salt shard so a Zipf-hot key never lands its whole
+    group in one task (a plain window partitioned by key would; this was
+    the measured scaling bottleneck of the materialize stage)."""
+    cols = ", ".join([*sort_cols, *payload])
+    return (f"SELECT {key}, slice(array_sort(flatten(collect_list(_part))), 1, {k}) AS {out} "
+            f"FROM (SELECT {key}, _salt, slice(array_sort(collect_list(struct({cols}))), 1, {k})"
+            f" AS _part FROM (SELECT *, pmod(xxhash64({cols}), {N_SALT}) AS _salt FROM {src})"
+            f" GROUP BY {key}, _salt) GROUP BY {key}")
+
+
+# build_nodes's first phase: the mentions reduced to the small canon-keyed
+# tables the rollup consumes. groupBy(canon, term) first: output cardinality
+# = surface variants per entity (small), so the rollup's name window is over
+# tiny groups; the same pass partial-aggregates confidence (the non-null
+# count keeps avg's ignore-null semantics), category and count. Quotes are
+# made distinct first (full-key shuffle, skew-free), then salted top-k.
+# (canon, category, importance) is ONE shuffle: both dimensions are bounded.
+_NODE_PHASE1 = f"""
+WITH by_term AS (
+  SELECT canon, term, count(1) AS cnt, min(occ) AS first_occ, sum(confidence) AS _conf_sum,
+         count(confidence) AS _conf_n, min_by(category, occ) AS _first_cat
+  FROM {{mc}} GROUP BY canon, term),
+by_quote AS (SELECT canon, quote, min(occ) AS first_occ FROM {{mq}} GROUP BY canon, quote),
+by_ci AS (SELECT canon, category, importance, count(1) AS `count`
+          FROM {{mc}} GROUP BY canon, category, importance),
+ev AS ({_salted_topk('{mq}', 'canon', ['occ'], ['conv_id', 'turn_idx', 'quote'],
+                     EVIDENCE_SAMPLE, '_ev')}),
+by_src AS (SELECT canon, conv_id, min(occ) AS first_occ FROM {{mc}} GROUP BY canon, conv_id)"""
+
+# node_rollup's inputs bound to the names _NODE_ROLLUP reads
+_ROLLUP_INPUTS = "WITH " + ", ".join(
+    f"{t} AS (SELECT * FROM {{{t}}})" for t in ("by_term", "by_quote", "by_ci", "ev", "by_src"))
+
+
+def _hist(field: str) -> str:
+    """array<struct(n = -count, field)> of _ci summed by field, sorted."""
+    return (f"array_sort(transform(array_distinct(transform(_ci, x -> x.{field})),"
+            f" v -> struct(-aggregate(filter(_ci, x -> x.{field} <=> v), 0L,"
+            f" (acc, x) -> acc + x.count) AS n, v AS {field})))")
+
+
+# canonical_term: modal original casing, ties → earliest occurrence
+# (entity_resolver.py:462-465 uses the most common surface form). The
+# profile, confidence and count rollup rides on the same canon partitioning
+# as whole-canon window aggregates — the term whose first_occ is the global
+# minimum contains the globally earliest mention, so its _first_cat is the
+# reference's base category; max() over the ranked rows carries these
+# per-canon constants through. Definitions are the first DEFINITIONS_CAP
+# distinct quotes by occurrence; the category/importance modes (count desc,
+# then value) come from one bounded collect of by_ci per canon, which holds
+# at most |categories|·|importance levels| rows. Every part is already
+# hash-partitioned by canon by its last aggregate, so the sort-merge joins
+# need no shuffle and no broadcast job.
+_NODE_ROLLUP = f""",
+ranked AS (
+  SELECT canon, term,
+         row_number() OVER (PARTITION BY canon ORDER BY cnt DESC, first_occ, term) AS rn,
+         sum(_conf_sum) OVER w AS _conf_sum, sum(_conf_n) OVER w AS _conf_n,
+         sum(cnt) OVER w AS mention_count, min(first_occ) OVER w AS first_occ,
+         min_by(_first_cat, first_occ) OVER w AS category
+  FROM by_term WINDOW w AS (PARTITION BY canon)),
+names AS (
+  SELECT canon, min_by(term, rn) AS canonical_term,
+         array_sort(collect_list(CASE WHEN rn > 1 THEN term END)) AS aliases,
+         round(max(_conf_sum) / max(_conf_n), 6) AS avg_confidence,
+         max(mention_count) AS mention_count, max(first_occ) AS first_occ,
+         max(category) AS category
+  FROM ranked WHERE rn <= 21 GROUP BY canon),
+defs AS (
+  SELECT canon, transform(_defs, x -> x.quote) AS definitions
+  FROM ({_salted_topk('by_quote', 'canon', ['first_occ'], ['quote'], DEFINITIONS_CAP, '_defs')})),
+cis AS (
+  SELECT canon, _cats[0].category AS primary_category,
+         _imps[0].importance AS primary_importance,
+         map_from_entries(transform(_cats, c -> struct(c.category, -c.n))) AS categories
+  FROM (SELECT canon, {_hist('category')} AS _cats, {_hist('importance')} AS _imps
+        FROM (SELECT canon, collect_list(struct(category, importance, `count`)) AS _ci
+              FROM by_ci GROUP BY canon))),
+evs AS (
+  SELECT canon, transform(_ev, x -> struct(x.conv_id AS conv_id, x.turn_idx AS turn_idx,
+                                           x.quote AS quote)) AS evidence
+  FROM ev),
+srcs AS (
+  SELECT canon, transform(_srcs, x -> x.conv_id) AS sources
+  FROM ({_salted_topk('by_src', 'canon', ['first_occ'], ['conv_id'], 20, '_srcs')}))
+SELECT /*+ MERGE(defs, cis, evs, srcs) */
+       xxhash64(canon) AS canonical_id, canon, canonical_term, aliases, definitions,
+       primary_category, primary_importance, categories, category AS first_category,
+       avg_confidence, mention_count, evidence, sources, first_occ
+FROM names JOIN defs USING (canon) JOIN cis USING (canon) JOIN evs USING (canon)
+     JOIN srcs USING (canon)"""
 
 
 def build_nodes(mentions_c: DataFrame,
@@ -177,32 +263,11 @@ def build_nodes(mentions_c: DataFrame,
     RDD-checkpointed handoff every branch otherwise deserializes the fat
     quote strings it never uses.
 
-    This is the first phase: the mentions reduced to the small canon-keyed
-    tables node_rollup consumes."""
-    if mentions_c_quotes is None:
-        mentions_c_quotes = mentions_c
-    # groupBy(canon, term) first: output cardinality = surface variants per
-    # entity (small), so the follow-up name window is over tiny groups. The
-    # same pass also partial-aggregates confidence/category/count for the
-    # canon-level rollup that rides on that window.
-    by_term = mentions_c.groupBy("canon", "term").agg(
-        F.count(F.lit(1)).alias("cnt"), F.min("occ").alias("first_occ"),
-        F.sum("confidence").alias("_conf_sum"),
-        # non-null count, so the rollup's sum/count keeps F.avg's
-        # ignore-null semantics for callers with missing confidences
-        F.count("confidence").alias("_conf_n"),
-        F.min_by("category", "occ").alias("_first_cat"),
-    )
-    # distinct quotes first (full-key shuffle, skew-free), then salted top-k
-    by_quote = mentions_c_quotes.groupBy("canon", "quote").agg(
-        F.min("occ").alias("first_occ"))
-    # ONE shuffle over (canon, category, importance) — both dimensions are
-    # bounded (7 × 4), so the combined key stays tiny
-    by_ci = mentions_c.groupBy("canon", "category", "importance").count()
-    ev = _salted_topk(mentions_c_quotes, "canon", ["occ"],
-                      ["conv_id", "turn_idx", "quote"], EVIDENCE_SAMPLE, "_ev")
-    by_src = mentions_c.groupBy("canon", "conv_id").agg(F.min("occ").alias("first_occ"))
-    return node_rollup(by_term, by_quote, by_ci, ev, by_src)
+    One statement: the first phase (_NODE_PHASE1) feeds node_rollup's
+    second phase (_NODE_ROLLUP) directly."""
+    return sql(
+        _NODE_PHASE1 + _NODE_ROLLUP, mc=mentions_c,
+        mq=mentions_c if mentions_c_quotes is None else mentions_c_quotes)
 
 
 def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
@@ -222,86 +287,44 @@ def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
 
     build_nodes derives them from mentions; plans/ivm from its norm_term
     summaries."""
-    # canonical_term: modal original casing, ties → earliest occurrence
-    # (entity_resolver.py:462-465 uses the most common surface form). The
-    # profile, confidence and count rollup rides on the same canon
-    # partitioning as whole-canon window aggregates — the term whose
-    # first_occ is the global minimum contains the globally earliest
-    # mention, so its _first_cat is the reference's base category
-    w_term = Window.partitionBy("canon").orderBy(
-        F.desc("cnt"), F.asc("first_occ"), F.asc("term")
-    )
-    w_canon = Window.partitionBy("canon")
-    ranked_terms = by_term.select(
-        "canon", "term",
-        F.row_number().over(w_term).alias("rn"),
-        F.sum("_conf_sum").over(w_canon).alias("_conf_sum"),
-        F.sum("_conf_n").over(w_canon).alias("_conf_n"),
-        F.sum("cnt").over(w_canon).alias("mention_count"),
-        F.min("first_occ").over(w_canon).alias("first_occ"),
-        F.min_by("_first_cat", "first_occ").over(w_canon).alias("category"),
-    ).filter(F.col("rn") <= 21)
-    names = ranked_terms.groupBy("canon").agg(
-        F.min_by("term", "rn").alias("canonical_term"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("rn") > 1, F.col("term")))).alias("aliases"),
-        # constant per canon: max() just carries them through
-        F.round(F.max("_conf_sum") / F.max("_conf_n"), 6).alias("avg_confidence"),
-        F.max("mention_count").alias("mention_count"),
-        F.max("first_occ").alias("first_occ"),
-        F.max("category").alias("category"),
-    )
+    return sql(
+        _ROLLUP_INPUTS + _NODE_ROLLUP, by_term=by_term, by_quote=by_quote,
+        by_ci=by_ci, ev=ev, by_src=by_src)
 
-    # definitions: distinct quotes, first DEFINITIONS_CAP by occurrence
-    defs = _salted_topk(by_quote, "canon", ["first_occ"], ["quote"],
-                        DEFINITIONS_CAP, "_defs").select(
-        "canon", F.transform(F.col("_defs"), lambda x: x["quote"]).alias("definitions"))
 
-    # category / importance histograms → modes (count desc, then value).
-    # by_ci holds at most |categories|·|importance levels| rows per canon,
-    # so one bounded collect per canon feeds both histograms
-    def hist(field: str) -> Column:
-        """array<struct(n = -count, field)> of _ci summed by field, sorted."""
-        return F.expr(
-            f"array_sort(transform(array_distinct(transform(_ci, x -> x.{field})),"
-            f" v -> struct(-aggregate(filter(_ci, x -> x.{field} <=> v), 0L,"
-            f" (acc, x) -> acc + x.count) AS n, v AS {field})))")
-    cis = by_ci.groupBy("canon").agg(F.collect_list(
-        F.struct("category", "importance", "count")).alias("_ci")).select(
-        "canon", hist("category").alias("_cats"), hist("importance").alias("_imps"))
-    cis = cis.select(
-        "canon",
-        F.col("_cats")[0]["category"].alias("primary_category"),
-        F.col("_imps")[0]["importance"].alias("primary_importance"),
-        F.map_from_entries(F.transform(F.col("_cats"), lambda c: F.struct(
-            c["category"], -c["n"]))).alias("categories"),
-    )
-
-    # evidence sample (<= EVIDENCE_SAMPLE earliest mentions) + sources (<=20)
-    ev = ev.select(
-        "canon",
-        F.transform(F.col("_ev"), lambda x: F.struct(
-            x["conv_id"].alias("conv_id"),
-            x["turn_idx"].alias("turn_idx"),
-            x["quote"].alias("quote"))).alias("evidence"))
-    srcs = _salted_topk(by_src, "canon", ["first_occ"], ["conv_id"], 20,
-                        "_srcs").select(
-        "canon", F.transform(F.col("_srcs"), lambda x: x["conv_id"]).alias("sources"))
-
-    # every part is already hash-partitioned by canon by its last
-    # aggregate, so sort-merge joins need no shuffle and no broadcast job
-    return (
-        names.join(defs.hint("merge"), "canon").join(cis.hint("merge"), "canon")
-        .join(ev.hint("merge"), "canon").join(srcs.hint("merge"), "canon")
-        .select(
-            F.xxhash64("canon").alias("canonical_id"),
-            F.col("canon"),
-            "canonical_term", "aliases", "definitions",
-            "primary_category", "primary_importance", "categories",
-            F.col("category").alias("first_category"),
-            "avg_confidence", "mention_count", "evidence", "sources", "first_occ",
-        )
-    )
+# Pair evidence is the earliest EVIDENCE_SAMPLE chunks by `occ`. Inner joins
+# to the representatives: pairs whose endpoint norms are not group
+# representatives are dropped, exactly like the reference's lost evidence
+# lists. One (pair, chunk) row by a full-key distinct (skew-free), then the
+# salted two-phase count; the orientation is the endpoints' first occurrence.
+_BUILD_EDGES = f"""
+WITH pairs AS (
+  SELECT DISTINCT least(ca, cb) AS a, greatest(ca, cb) AS b, occ, conv_id, turn_idx
+  FROM {{triples}}
+       JOIN (SELECT rep_norm AS subj, canon AS ca FROM {{prof}}) USING (subj)
+       JOIN (SELECT rep_norm AS obj, canon AS cb FROM {{prof}}) USING (obj)
+  WHERE ca != cb),
+partial AS (
+  SELECT a, b, salt, count(1) AS cnt,
+         slice(array_sort(collect_list(struct(occ, conv_id, turn_idx))), 1, {EVIDENCE_SAMPLE}) AS ev
+  FROM (SELECT *, pmod(xxhash64(conv_id, turn_idx), {N_SALT}) AS salt FROM pairs)
+  GROUP BY a, b, salt),
+agg AS (
+  SELECT a, b, sum(cnt) AS common,
+         transform(slice(array_sort(flatten(collect_list(ev))), 1, {EVIDENCE_SAMPLE}),
+                   x -> struct(x.conv_id AS conv_id, x.turn_idx AS turn_idx)) AS evidence
+  FROM partial GROUP BY a, b HAVING common >= {{min_common}})
+SELECT CASE WHEN occ_a <= occ_b THEN a ELSE b END AS subj, 'CO_OCCURS' AS pred,
+       CASE WHEN occ_a <= occ_b THEN b ELSE a END AS obj,
+       CASE WHEN occ_a <= occ_b THEN cat_a ELSE cat_b END AS cat_subj,
+       CASE WHEN occ_a <= occ_b THEN cat_b ELSE cat_a END AS cat_obj,
+       common, round(common / least(n_a, n_b), 6) AS strength,
+       round(least(1.0D, common / {CONFIDENCE_SATURATION!r}D), 6) AS confidence, evidence
+FROM agg
+     JOIN (SELECT canon AS a, n_chunks AS n_a, first_occ AS occ_a, category AS cat_a
+           FROM {{prof}}) USING (a)
+     JOIN (SELECT canon AS b, n_chunks AS n_b, first_occ AS occ_b, category AS cat_b
+           FROM {{prof}}) USING (b)"""
 
 
 def build_edges(
@@ -311,73 +334,25 @@ def build_edges(
 ) -> DataFrame:
     """Canonical co-occurrence edges with salted aggregation and
     first-occurrence orientation. Output columns:
-    (subj, pred='CO_OCCURS', obj, common, strength, confidence, evidence).
+    (subj, pred='CO_OCCURS', obj, cat_subj, cat_obj, common, strength,
+    confidence, evidence).
 
     A canonical entity's chunk set is its first-occurring member norm's
     chunks, byte-matching the reference's alias-merge behavior
     (graph_tools.py:137-149 copies group[0] and never merges the evidence
     lists).
 
-    Pair evidence is the earliest EVIDENCE_SAMPLE chunks by the triples'
-    `occ` (a packed (conv_id, turn_idx) key), else by
-    struct(conv_id, turn_idx)."""
+    Pair evidence is ordered by the triples' `occ` (a packed (conv_id,
+    turn_idx) key), else by struct(conv_id, turn_idx)."""
     if "occ" not in triples_raw.columns:
-        triples_raw = triples_raw.withColumn("occ", F.struct("conv_id", "turn_idx"))
-    # vocabulary-sized; materialized once, eagerly, so the four joins below
+        triples_raw = sql("SELECT *, struct(conv_id, turn_idx) AS occ FROM {t}",
+                          t=triples_raw)
+    # vocabulary-sized; materialized once, eagerly, so the four joins
     # neither rescan the mentions nor each rebuild it
     prof = entity_profile(mentions_c).persist()
     prof.count()
-    rep_map = prof.select(F.col("rep_norm").alias("norm_term"), "canon")
-    a_map = rep_map.select(F.col("norm_term").alias("subj"), F.col("canon").alias("ca"))
-    b_map = rep_map.select(F.col("norm_term").alias("obj"), F.col("canon").alias("cb"))
-    # inner joins: pairs whose endpoint norms are not group representatives
-    # are dropped, exactly like the reference's lost evidence lists.
-    mapped = triples_raw.join(a_map, "subj").join(b_map, "obj")
-    pairs = (
-        mapped
-        .filter(F.col("ca") != F.col("cb"))
-        .select(
-            F.least("ca", "cb").alias("a"),
-            F.greatest("ca", "cb").alias("b"),
-            "occ", "conv_id", "turn_idx",
-        )
-        .distinct()  # one (pair, chunk) row — full-key shuffle, skew-free
-    )
-    salted = pairs.withColumn(
-        "salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(N_SALT))
-    )
-    partial = salted.groupBy("a", "b", "salt").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.slice(F.array_sort(F.collect_list(F.struct("occ", "conv_id", "turn_idx"))),
-                1, EVIDENCE_SAMPLE).alias("ev"),
-    )
-    agg = partial.groupBy("a", "b").agg(
-        F.sum("cnt").alias("common"),
-        F.transform(
-            F.slice(F.array_sort(F.flatten(F.collect_list("ev"))), 1, EVIDENCE_SAMPLE),
-            lambda x: F.struct(x["conv_id"].alias("conv_id"),
-                               x["turn_idx"].alias("turn_idx"))).alias("evidence"),
-    ).filter(F.col("common") >= min_cooccurrences)
-
-    def side(x: str) -> DataFrame:
-        return prof.select(F.col("canon").alias(x), F.col("n_chunks").alias(f"n_{x}"),
-                           F.col("first_occ").alias(f"occ_{x}"),
-                           F.col("category").alias(f"cat_{x}"))
-
-    agg = agg.join(side("a"), "a").join(side("b"), "b")
-    first_is_a = F.col("occ_a") <= F.col("occ_b")
-    return agg.select(
-        F.when(first_is_a, F.col("a")).otherwise(F.col("b")).alias("subj"),
-        F.lit("CO_OCCURS").alias("pred"),
-        F.when(first_is_a, F.col("b")).otherwise(F.col("a")).alias("obj"),
-        F.when(first_is_a, F.col("cat_a")).otherwise(F.col("cat_b")).alias("cat_subj"),
-        F.when(first_is_a, F.col("cat_b")).otherwise(F.col("cat_a")).alias("cat_obj"),
-        F.col("common"),
-        F.round(F.col("common") / F.least("n_a", "n_b"), 6).alias("strength"),
-        F.round(F.least(F.lit(1.0), F.col("common") / CONFIDENCE_SATURATION), 6)
-        .alias("confidence"),
-        "evidence",
-    )
+    return sql(_BUILD_EDGES, triples=triples_raw, prof=prof,
+               min_common=min_cooccurrences)
 
 
 def type_edges(edges: DataFrame) -> DataFrame:
@@ -387,10 +362,10 @@ def type_edges(edges: DataFrame) -> DataFrame:
     cats = sorted(set(CATEGORIES) | {c for k in CATEGORY_RELATIONSHIPS for c in k})
     rules = {f"{a}|{b}": t for a in cats for b in cats
              if (t := CATEGORY_RELATIONSHIPS.get((a, b), CATEGORY_RELATIONSHIPS.get((b, a))))}
-    pred = literal_map(rules)[F.concat_ws("|", "cat_subj", "cat_obj")]
-    return edges.select(
-        "subj", F.coalesce(pred, F.lit(DEFAULT_RELATIONSHIP_TYPE)).alias("pred"),
-        "obj", "common", "strength", "confidence", "evidence")
+    return sql(
+        f"SELECT subj, coalesce({literal_map_sql(rules)}[concat_ws('|', cat_subj, cat_obj)], "
+        f"'{DEFAULT_RELATIONSHIP_TYPE}') AS pred, obj, common, strength, confidence, evidence "
+        "FROM {e}", e=edges)
 
 
 def materialize_stage(
@@ -406,8 +381,7 @@ def materialize_stage(
     (subj/obj) are alias-canonical normalized terms, exactly like the
     reference's relationship source/target (graph_tools.py:223-231); join
     edges→nodes through `assignments` (norm_term → canon) when graph-level
-    consistency is needed. `spark` is unused; it stays for the stage
-    functions' common call shape."""
+    consistency is needed."""
     # every mention is ordered by its packed occurrence key (module
     # docstring). The tables shared by several branches are materialized
     # here, eagerly: a lazy cache that stages of the nodes and edges plans
@@ -432,8 +406,8 @@ def materialize_stage(
 
     # exact+alias canonicalization for the edge path — derived from the
     # vocabulary already in `assignments`, NOT another scan of mentions
-    edge_asn = assignments.select("norm_term").withColumn(
-        "canon", apply_alias(F.col("norm_term")))
+    edge_asn = sql(f"SELECT norm_term, {apply_alias_sql('norm_term')} AS canon "
+                   "FROM {a}", a=assignments)
     mc_edges = canonical_mentions(slim, edge_asn)
     triples = with_occ_key(triples_raw, ordinals, (("turn_idx", TURN_BITS),))
     edges = type_edges(build_edges(triples, mc_edges))

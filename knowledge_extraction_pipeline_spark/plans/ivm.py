@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.materialize import EVIDENCE_SAMPLE, _salted_topk, node_rollup
+from ..session import sql
 
 
 @dataclass
@@ -85,9 +86,9 @@ def node_summaries(mentions: DataFrame,
         F.min("occ").alias("first_occ"))
     # field order of the item struct matches build_nodes's _salted_topk item
     # (sort_cols then payload) so array_sort ranks identically
-    ev = _salted_topk(mq, "norm_term", ["occ"],
-                      ["conv_id", "turn_idx", "quote"],
-                      EVIDENCE_SAMPLE, "items")
+    ev = sql(_salted_topk("{mq}", "norm_term", ["occ"],
+                          ["conv_id", "turn_idx", "quote"], EVIDENCE_SAMPLE, "items"),
+             mq=mq)
     return NodeSummaries(term=term, quote=quote, ci=ci, src=src, ev=ev)
 
 

@@ -1959,10 +1959,10 @@ def kg_pipeline_nodes_exact(spark, sf_dir):
     # CC roots components at the lexicographic min; the reference roots alias
     # groups at the alias TARGET (known_alias_resolution, graph_tools.py:
     # 120-127) — present canon in the reference's key space.
-    from .functions.lexicon import apply_alias
+    from .functions.lexicon import apply_alias_sql
     nodes, _ = _pipeline(spark, enable_fuzzy=False)
     return nodes.select(
-        apply_alias(F.col("canon")).alias("canon"),
+        F.expr(apply_alias_sql("canon")).alias("canon"),
         "first_category",
         F.col("mention_count").cast("long").alias("mention_count"))
 

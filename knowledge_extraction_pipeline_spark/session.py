@@ -5,13 +5,17 @@ Scale posture: AQE on (runtime re-plan + skew-join splitting), Arrow on
 parallelism at hand, a generated-class cache that holds a whole pipeline's
 classes.  On a real cluster these settings come from
 spark-submit --conf; this factory is the local/test entry point.
+
+`sql` runs one SQL statement over DataFrame parameters; the stage operators
+build their tables with it.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -56,6 +60,10 @@ def get_spark(
         # micro-batches, API calls, tests) evicts the previous run's classes
         # and pays a Janino recompile plus a fresh JIT warm-up for each
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # ... and keyed by source only: with the codegen stage id in the
+        # class name, adaptive execution numbering the same stage
+        # differently from one run to the next made identical code miss
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # shuffle/spill on tmpfs — OPT-IN (SPARK_GRAFT_TMPFS=1, set by bench.py /
     # cluster_scale.py): local mode funnels every task's shuffle file through
@@ -73,3 +81,27 @@ def get_spark(
         for k, v in extra_conf.items():
             b = b.config(k, v)
     return b.getOrCreate()
+
+
+def sql(text: str, **params) -> DataFrame:
+    """One SQL statement over DataFrame parameters: each DataFrame in
+    `params` is bound to its `{name}` in `text` through a temporary view,
+    every other value is formatted in as is (str.format: other braces in
+    `text` are doubled). The JVM parses and analyzes the whole statement in
+    one call.
+
+    Unlike `spark.sql(text, **dfs)` this keeps the parameters' caches:
+    PySpark removes its views with Catalog.dropTempView, which also
+    uncaches a persisted DataFrame passed as a parameter, so here the views
+    are removed from the session catalog directly."""
+    dfs = {k: v for k, v in params.items() if isinstance(v, DataFrame)}
+    spark = next(iter(dfs.values())).sparkSession
+    views = {k: f"_sql_{k}_{uuid.uuid4().hex}" for k in dfs}
+    try:
+        for k, df in dfs.items():
+            df._jdf.createOrReplaceTempView(views[k])
+        return DataFrame(spark._jsparkSession.sql(text.format(**{**params, **views})), spark)
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for view in views.values():
+            catalog.dropTempView(view)

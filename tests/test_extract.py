@@ -102,15 +102,15 @@ def test_literal_maps_return_the_lexicon_values(spark):
 
     cat_map, imp_map = _lookup_maps()
     keys = spark.createDataFrame([(k,) for k in surface_map()], "k string")
-    got = {r["k"]: (r["c"], r["i"]) for r in keys.select(
-        "k", cat_map[F.col("k")].alias("c"), imp_map[F.col("k")].alias("i")).collect()}
+    got = {r["k"]: (r["c"], r["i"]) for r in keys.selectExpr(
+        "k", f"{cat_map}[k] AS c", f"{imp_map}[k] AS i").collect()}
     assert got == {k: (c, i) for k, (_b, _kind, c, i) in surface_map().items()}
 
 
 def test_literal_map_escapes_quotes_and_backslashes(spark):
-    from knowledge_extraction_pipeline_spark.functions.lexicon import literal_map
+    from knowledge_extraction_pipeline_spark.functions.lexicon import literal_map_sql
 
     d = {"it's": "a\\b", "back\\slash": "q'uote", "both\\'": "\\n'", "plain": "x"}
     keys = spark.createDataFrame([(k,) for k in [*d, "missing"]], "k string")
-    got = dict(keys.select("k", literal_map(d)[F.col("k")].alias("v")).collect())
+    got = dict(keys.selectExpr("k", f"{literal_map_sql(d)}[k] AS v").collect())
     assert got == {**d, "missing": None}
