@@ -106,7 +106,6 @@ DEFAULT_RELATIONSHIP_TYPE = "RELATED_TO"
 LSH_SHINGLE_SIZE = 4       # boundary-marked 4-shingles ('#gradient#descent#')
 LSH_NUM_HASHES = 32
 LSH_NUM_BANDS = 16         # 16 bands x 2 rows — P(candidate) ≈ 0.997 at J=0.55
-LSH_JACCARD_THRESHOLD = 0.55
 
 # Stage names, in order, for the checkpointed pipeline.
 STAGES = ["extract", "link", "canonicalize", "materialize"]

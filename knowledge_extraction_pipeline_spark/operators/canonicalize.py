@@ -130,18 +130,17 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     return members.unionByName(roots).distinct()
 
 
-def canonicalize_stage(terms: DataFrame, candidate_edges: DataFrame,
-                       max_iter: int = 20) -> DataFrame:
+def canonicalize_stage(terms: DataFrame, candidate_edges: DataFrame) -> DataFrame:
     """All distinct terms → (norm_term, canon); isolated terms map to
     themselves via a left join against the CC assignments. Edges surfaced
-    for adjudication (phase='ambiguous', link_stage ambiguous_band) never
-    merge here — only decided edges reach CC."""
+    for adjudication (phase='ambiguous', minhash_candidate_edges's
+    ambiguous_band) never merge here — only decided edges reach CC."""
     if "phase" in candidate_edges.columns:
         # null phase = decided (only the explicit 'ambiguous' tag is held
         # back; NULL != 'ambiguous' alone would silently drop null rows)
         candidate_edges = sql("SELECT * FROM {c} WHERE coalesce(phase != 'ambiguous', true)",
                               c=candidate_edges)
-    cc = connected_components(candidate_edges, max_iter=max_iter)
+    cc = connected_components(candidate_edges)
     # vocabulary-sized and consumed by many downstream plan branches (every
     # build_nodes/build_edges aggregation joins it) — materialize once so the
     # distinct-terms scan in its lineage never re-runs per branch

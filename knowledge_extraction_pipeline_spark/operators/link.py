@@ -27,12 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
-from ..config import (
-    LSH_JACCARD_THRESHOLD,
-    LSH_NUM_BANDS,
-    LSH_NUM_HASHES,
-    LSH_SHINGLE_SIZE,
-)
+from ..config import LSH_NUM_BANDS, LSH_NUM_HASHES, LSH_SHINGLE_SIZE
 from ..functions.lexicon import apply_alias_sql
 from ..functions.text import (
     char_shingles_sql,
@@ -104,18 +99,16 @@ def _word_aligned_similar(a: Column, b: Column, t: float = 0.7) -> Column:
     return sql_column(lambda x, y: _word_aligned_sql(x, y, t), a, b)
 
 
-def _minhash_sql(shingle_size: int, num_hashes: int, num_bands: int,
-                 verify_threshold: float,
-                 ambiguous_band: tuple[float, float] | None) -> str:
+def _minhash_sql(ambiguous_band: tuple[float, float] | None) -> str:
     """minhash_candidate_edges as one statement over `{terms}`."""
     def shingles(t: str) -> str:
-        return f"array_distinct({char_shingles_sql(t, shingle_size)})"
+        return f"array_distinct({char_shingles_sql(t, LSH_SHINGLE_SIZE)})"
     sim = (f"round(CAST(size(array_intersect({shingles('src')}, {shingles('dst')})) AS DOUBLE)"
            f" / CAST(size(array_union({shingles('src')}, {shingles('dst')})) AS DOUBLE), 6)")
     # verify on resolver-normalized strings so hyphenated variants are
     # compared word-by-word, not as one giant word
     ok = _word_aligned_sql(normalize_term_resolver_sql("src"),
-                           normalize_term_resolver_sql("dst"), verify_threshold)
+                           normalize_term_resolver_sql("dst"))
     if ambiguous_band is None:
         scored = f"SELECT src, dst, {sim} AS sim, 'fuzzy' AS phase FROM cand WHERE {ok}"
     else:
@@ -126,9 +119,9 @@ FROM (SELECT src, dst, ok, {sim} AS sim FROM (SELECT src, dst, {ok} AS ok FROM c
 WHERE ok OR (NOT ok AND sim >= {lo!r}D AND sim < {hi!r}D)"""
     return f"""
 WITH sh AS (
-  SELECT norm_term, posexplode({lsh_bands_sql('sig', num_hashes, num_bands)})
+  SELECT norm_term, posexplode({lsh_bands_sql('sig', LSH_NUM_HASHES, LSH_NUM_BANDS)})
          AS (band_idx, band_hash)
-  FROM (SELECT norm_term, {minhash_sql('shingles', num_hashes)} AS sig
+  FROM (SELECT norm_term, {minhash_sql('shingles', LSH_NUM_HASHES)} AS sig
         FROM (SELECT norm_term, {shingles('norm_term')} AS shingles FROM {{terms}}))),
 cand AS (
   SELECT DISTINCT a.norm_term AS src, b.norm_term AS dst
@@ -139,11 +132,6 @@ cand AS (
 
 def minhash_candidate_edges(
     terms: DataFrame,
-    shingle_size: int = LSH_SHINGLE_SIZE,
-    num_hashes: int = LSH_NUM_HASHES,
-    num_bands: int = LSH_NUM_BANDS,
-    jaccard_threshold: float = LSH_JACCARD_THRESHOLD,
-    verify_threshold: float = 0.7,
     ambiguous_band: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Banded MinHash-LSH self-join + word-aligned verification.
@@ -156,20 +144,16 @@ def minhash_candidate_edges(
     word-aligned char-set rule (not whole-string Jaccard, which cannot
     separate one-word typos from two-word terms sharing a long word).
 
-    Tunables reconstructing the reference's decision ladder
-    (entity_resolver.py:219-279 — auto-merge >= 0.90, LLM band
-    0.85 <= sim < 0.90):
-      verify_threshold — per-word char-set Jaccard the deterministic verifier
-          requires (the auto-merge strictness knob; default 0.7).
+    The reference's decision ladder (entity_resolver.py:219-279 —
+    auto-merge >= 0.90, LLM band 0.85 <= sim < 0.90) is rebuilt as the
+    verifier's per-word char-set Jaccard >= 0.7 (auto-merge) plus:
       ambiguous_band=(lo, hi) — candidates whose whole-string shingle
           Jaccard falls in [lo, hi) but FAIL the verifier are emitted with
           phase='ambiguous' instead of being dropped: the reference sent
           this band to an LLM; this engine surfaces it for the caller's
           adjudicator (canonicalize_stage ignores ambiguous edges, so
           nothing merges on them by default)."""
-    return sql(_minhash_sql(
-        shingle_size, num_hashes, num_bands, verify_threshold, ambiguous_band),
-        terms=terms)
+    return sql(_minhash_sql(ambiguous_band), terms=terms)
 
 
 def alias_edges(terms: DataFrame) -> DataFrame:
@@ -185,16 +169,12 @@ def charsort_edges(terms: DataFrame) -> DataFrame:
 
 
 def link_stage(mentions: DataFrame, enable_fuzzy: bool = True,
-               terms: DataFrame | None = None,
-               fuzzy_verify_threshold: float = 0.7,
-               ambiguous_band: tuple[float, float] | None = None) -> DataFrame:
+               terms: DataFrame | None = None) -> DataFrame:
     if terms is None:
         # four phases consume the vocabulary — materialize the distinct once
         # instead of re-scanning the mentions table per phase
         terms = distinct_terms(mentions).persist()
     phases = [ALIAS_EDGES]
     if enable_fuzzy:
-        phases += [RESOLVER_NORM_EDGES, CHARSORT_EDGES, _minhash_sql(
-            LSH_SHINGLE_SIZE, LSH_NUM_HASHES, LSH_NUM_BANDS,
-            fuzzy_verify_threshold, ambiguous_band)]
+        phases += [RESOLVER_NORM_EDGES, CHARSORT_EDGES, _minhash_sql(None)]
     return sql(" UNION ALL ".join(f"({p})" for p in phases), terms=terms)

@@ -28,7 +28,10 @@ Every "first"/"earliest" above orders mentions by their occurrence
 order-preserving BIGINT `occ` (conversation ordinal | turn_idx | start), so
 the min/min_by aggregates keep fixed-width buffers and the top-k sorts
 compare longs, not structs of strings; nodes.first_occ is unpacked back to
-the struct on output. The operators below take either form of `occ`.
+the struct on output. The node statistics and the operators below take
+either form of `occ`; plans/ivm orders its stored summaries by the struct,
+because the packed key's conversation ordinal changes as conversations
+arrive.
 
 Each table's plan is ONE SQL statement over DataFrame parameters
 (session.sql: `sql(TEXT, name=df)`), its text kept in a module constant or a small
@@ -165,42 +168,80 @@ def _salted_topk(src: str, key: str, sort_cols: list[str],
             f" GROUP BY {key}, _salt) GROUP BY {key}")
 
 
-# build_nodes's first phase: the mentions reduced to the small canon-keyed
-# tables the rollup consumes. groupBy(canon, term) first: output cardinality
-# = surface variants per entity (small), so the rollup's name window is over
-# tiny groups; the same pass partial-aggregates confidence (the non-null
-# count keeps avg's ignore-null semantics), category and count. Quotes are
-# made distinct first (full-key shuffle, skew-free), then salted top-k.
-# (canon, category, importance) is ONE shuffle: both dimensions are bounded.
-_NODE_PHASE1 = f"""
-WITH by_term AS (
-  SELECT canon, term, count(1) AS cnt, min(occ) AS first_occ, sum(confidence) AS _conf_sum,
-         count(confidence) AS _conf_n, min_by(category, occ) AS _first_cat
-  FROM {{mc}} GROUP BY canon, term),
-by_quote AS (SELECT canon, quote, min(occ) AS first_occ FROM {{mq}} GROUP BY canon, quote),
-by_ci AS (SELECT canon, category, importance, count(1) AS `count`
-          FROM {{mc}} GROUP BY canon, category, importance),
-ev AS ({_salted_topk('{mq}', 'canon', ['occ'], ['conv_id', 'turn_idx', 'quote'],
-                     EVIDENCE_SAMPLE, '_ev')}),
-by_src AS (SELECT canon, conv_id, min(occ) AS first_occ FROM {{mc}} GROUP BY canon, conv_id)"""
+# The five node statistics, each one standalone SELECT keyed by `{key}`
+# (canon in build_nodes and finalize_nodes, norm_term in plans/ivm's stored
+# summaries), in two sets of the same columns:
+#
+#   by_term  ({key}, term, cnt, first_occ, conf_sum, conf_n, first_cat)
+#   by_quote ({key}, quote, first_occ)
+#   by_ci    ({key}, category, importance, cnt)
+#   ev       ({key}, items: earliest EVIDENCE_SAMPLE
+#             struct(occ, conv_id, turn_idx, quote), sorted)
+#   by_src   ({key}, conv_id, first_occ)
+#
+# _NODE_PHASE1 computes them from mentions `{mc}` (quote-free) and `{mq}`
+# (with quotes). groupBy(key, term) first: output cardinality = surface
+# variants per entity (small), so the rollup's name window is over tiny
+# groups; the same pass partial-aggregates confidence (the non-null count
+# keeps avg's ignore-null semantics), category and count. Quotes are made
+# distinct first (full-key shuffle, skew-free), then salted top-k.
+# (key, category, importance) is ONE shuffle: both dimensions are bounded.
+_NODE_PHASE1 = {
+    "by_term": """
+SELECT {key}, term, count(1) AS cnt, min(occ) AS first_occ, sum(confidence) AS conf_sum,
+       count(confidence) AS conf_n, min_by(category, occ) AS first_cat
+FROM {mc} GROUP BY {key}, term""",
+    "by_quote": "SELECT {key}, quote, min(occ) AS first_occ FROM {mq} GROUP BY {key}, quote",
+    "by_ci": """
+SELECT {key}, category, importance, count(1) AS cnt
+FROM {mc} GROUP BY {key}, category, importance""",
+    # the item struct is (sort column, payload), so array_sort ranks by occ
+    "ev": _salted_topk("{mq}", "{key}", ["occ"], ["conv_id", "turn_idx", "quote"],
+                       EVIDENCE_SAMPLE, "items"),
+    "by_src": "SELECT {key}, conv_id, min(occ) AS first_occ FROM {mc} GROUP BY {key}, conv_id",
+}
 
-# node_rollup's inputs bound to the names _NODE_ROLLUP reads
-_ROLLUP_INPUTS = "WITH " + ", ".join(
-    f"{t} AS (SELECT * FROM {{{t}}})" for t in ("by_term", "by_quote", "by_ci", "ev", "by_src"))
+# The same statistics merged from partial ones over relations named like
+# the statistic (`{by_term}` …): each is a semigroup — sum, min, min_by the
+# occurrence, and the top-k of the union of top-ks (sort(flatten)·slice).
+_NODE_MERGE = {
+    "by_term": """
+SELECT {key}, term, sum(cnt) AS cnt, min(first_occ) AS first_occ, sum(conf_sum) AS conf_sum,
+       sum(conf_n) AS conf_n, min_by(first_cat, first_occ) AS first_cat
+FROM {by_term} GROUP BY {key}, term""",
+    "by_quote": "SELECT {key}, quote, min(first_occ) AS first_occ FROM {by_quote} "
+                "GROUP BY {key}, quote",
+    "by_ci": """
+SELECT {key}, category, importance, sum(cnt) AS cnt
+FROM {by_ci} GROUP BY {key}, category, importance""",
+    "ev": f"""
+SELECT {{key}}, slice(array_sort(flatten(collect_list(items))), 1, {EVIDENCE_SAMPLE}) AS items
+FROM {{ev}} GROUP BY {{key}}""",
+    "by_src": "SELECT {key}, conv_id, min(first_occ) AS first_occ FROM {by_src} "
+              "GROUP BY {key}, conv_id",
+}
+
+
+def _ctes(texts: dict[str, str]) -> str:
+    """`name AS (text)` for each statement, comma-separated: the body of a
+    WITH clause."""
+    return ",\n".join(f"{name} AS ({text})" for name, text in texts.items())
 
 
 def _hist(field: str) -> str:
     """array<struct(n = -count, field)> of _ci summed by field, sorted."""
     return (f"array_sort(transform(array_distinct(transform(_ci, x -> x.{field})),"
             f" v -> struct(-aggregate(filter(_ci, x -> x.{field} <=> v), 0L,"
-            f" (acc, x) -> acc + x.count) AS n, v AS {field})))")
+            f" (acc, x) -> acc + x.cnt) AS n, v AS {field})))")
 
 
+# The second phase of the node build, over the five statistics keyed by
+# canon and bound to their names: one row per canonical entity.
 # canonical_term: modal original casing, ties → earliest occurrence
 # (entity_resolver.py:462-465 uses the most common surface form). The
 # profile, confidence and count rollup rides on the same canon partitioning
 # as whole-canon window aggregates — the term whose first_occ is the global
-# minimum contains the globally earliest mention, so its _first_cat is the
+# minimum contains the globally earliest mention, so its first_cat is the
 # reference's base category; max() over the ranked rows carries these
 # per-canon constants through. Definitions are the first DEFINITIONS_CAP
 # distinct quotes by occurrence; the category/importance modes (count desc,
@@ -212,14 +253,14 @@ _NODE_ROLLUP = f""",
 ranked AS (
   SELECT canon, term,
          row_number() OVER (PARTITION BY canon ORDER BY cnt DESC, first_occ, term) AS rn,
-         sum(_conf_sum) OVER w AS _conf_sum, sum(_conf_n) OVER w AS _conf_n,
+         sum(conf_sum) OVER w AS conf_sum, sum(conf_n) OVER w AS conf_n,
          sum(cnt) OVER w AS mention_count, min(first_occ) OVER w AS first_occ,
-         min_by(_first_cat, first_occ) OVER w AS category
+         min_by(first_cat, first_occ) OVER w AS category
   FROM by_term WINDOW w AS (PARTITION BY canon)),
 names AS (
   SELECT canon, min_by(term, rn) AS canonical_term,
          array_sort(collect_list(CASE WHEN rn > 1 THEN term END)) AS aliases,
-         round(max(_conf_sum) / max(_conf_n), 6) AS avg_confidence,
+         round(max(conf_sum) / max(conf_n), 6) AS avg_confidence,
          max(mention_count) AS mention_count, max(first_occ) AS first_occ,
          max(category) AS category
   FROM ranked WHERE rn <= 21 GROUP BY canon),
@@ -231,11 +272,11 @@ cis AS (
          _imps[0].importance AS primary_importance,
          map_from_entries(transform(_cats, c -> struct(c.category, -c.n))) AS categories
   FROM (SELECT canon, {_hist('category')} AS _cats, {_hist('importance')} AS _imps
-        FROM (SELECT canon, collect_list(struct(category, importance, `count`)) AS _ci
+        FROM (SELECT canon, collect_list(struct(category, importance, cnt)) AS _ci
               FROM by_ci GROUP BY canon))),
 evs AS (
-  SELECT canon, transform(_ev, x -> struct(x.conv_id AS conv_id, x.turn_idx AS turn_idx,
-                                           x.quote AS quote)) AS evidence
+  SELECT canon, transform(items, x -> struct(x.conv_id AS conv_id, x.turn_idx AS turn_idx,
+                                             x.quote AS quote)) AS evidence
   FROM ev),
 srcs AS (
   SELECT canon, transform(_srcs, x -> x.conv_id) AS sources
@@ -263,33 +304,11 @@ def build_nodes(mentions_c: DataFrame,
     RDD-checkpointed handoff every branch otherwise deserializes the fat
     quote strings it never uses.
 
-    One statement: the first phase (_NODE_PHASE1) feeds node_rollup's
-    second phase (_NODE_ROLLUP) directly."""
+    One statement: the node statistics keyed by canon (_NODE_PHASE1) feed
+    the second phase (_NODE_ROLLUP) directly."""
     return sql(
-        _NODE_PHASE1 + _NODE_ROLLUP, mc=mentions_c,
+        "WITH " + _ctes(_NODE_PHASE1) + _NODE_ROLLUP, key="canon", mc=mentions_c,
         mq=mentions_c if mentions_c_quotes is None else mentions_c_quotes)
-
-
-def node_rollup(by_term: DataFrame, by_quote: DataFrame, by_ci: DataFrame,
-                ev: DataFrame, by_src: DataFrame) -> DataFrame:
-    """Second phase of the node build: canon-level names, definitions,
-    category/importance modes, evidence, sources and the confidence rollup,
-    joined into one row per canonical entity. `first_occ` (and ev's `occ`)
-    may be the packed BIGINT key or struct(conv_id, turn_idx, start); only
-    their order is used. Inputs, all keyed by canon:
-
-      by_term  (canon, term, cnt, first_occ, _conf_sum, _conf_n, _first_cat)
-      by_quote (canon, quote, first_occ)
-      by_ci    (canon, category, importance, count)
-      ev       (canon, _ev: earliest EVIDENCE_SAMPLE
-                struct(occ, conv_id, turn_idx, quote), sorted)
-      by_src   (canon, conv_id, first_occ)
-
-    build_nodes derives them from mentions; plans/ivm from its norm_term
-    summaries."""
-    return sql(
-        _ROLLUP_INPUTS + _NODE_ROLLUP, by_term=by_term, by_quote=by_quote,
-        by_ci=by_ci, ev=ev, by_src=by_src)
 
 
 # Pair evidence is the earliest EVIDENCE_SAMPLE chunks by `occ`. Inner joins

@@ -348,12 +348,12 @@ def mention_rate_windows(stream: DataFrame, window: str = "10 minutes",
                          watermark: str = "30 minutes") -> DataFrame:
     """Watermarked sliding-window turn/mention counts per role — late rows
     beyond the watermark are dropped, state is bounded."""
-    from ..operators.extract import extract_mentions_udf
+    from ..operators.extract import match_surfaces_udf
 
     return (
         stream
         .withWatermark("ts", watermark)
-        .withColumn("n_mentions", F.size(extract_mentions_udf(F.col("text"))))
+        .withColumn("n_mentions", F.size(match_surfaces_udf(F.col("text"))))
         .groupBy(F.window("ts", window, slide), F.col("role"))
         .agg(F.count(F.lit(1)).alias("n_turns"),
              F.sum("n_mentions").alias("n_mentions"))

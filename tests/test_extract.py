@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from knowledge_extraction_pipeline_spark.operators.extract import (
     extract_stage,
-    mentions,
     window_turns,
 )
 
@@ -25,7 +24,7 @@ def test_per_turn_text_equality_under_stable_ordering(spark, transcripts):
 
 
 def test_quotes_are_verbatim(spark, transcripts):
-    m = mentions(transcripts)
+    m, _ = extract_stage(transcripts, engine="pandas")
     joined = m.join(transcripts, on=["conv_id", "turn_idx"])
     bad = joined.filter(~F.col("text").contains(F.col("quote")))
     assert bad.count() == 0
@@ -33,33 +32,27 @@ def test_quotes_are_verbatim(spark, transcripts):
 
 
 def test_extraction_matches_pure_python(spark, transcripts):
-    """The Spark UDF and the shared pure-Python matcher agree row by row."""
+    """The Spark UDF and the shared pure-Python matcher agree row by row;
+    `start` is the match ordinal in the turn."""
     from knowledge_extraction_pipeline_spark.functions.lexicon import (
         extract_mentions_text,
     )
     rows = transcripts.limit(50).collect()
-    m = mentions(transcripts.limit(50)).collect()
+    m = extract_stage(transcripts.limit(50), engine="pandas")[0].collect()
     got = {(r["conv_id"], r["turn_idx"], r["start"], r["term"]) for r in m}
     want = set()
     for r in rows:
-        for x in extract_mentions_text(r["text"]):
-            want.add((r["conv_id"], r["turn_idx"], x["start"], x["term"]))
+        for i, x in enumerate(extract_mentions_text(r["text"])):
+            want.add((r["conv_id"], r["turn_idx"], i, x["term"]))
     assert got == want
 
 
 def test_jvm_and_pandas_paths_agree(spark, transcripts):
-    """The whole-stage-codegen trie-regex path and the Arrow-UDF path emit
-    identical mention and triple sets (start/quote differ by design)."""
-    from knowledge_extraction_pipeline_spark.operators.extract import (
-        mentions_jvm,
-        triples_raw,
-        triples_raw_jvm,
-    )
-    cols = ["conv_id", "turn_idx", "term", "norm_term", "category", "importance"]
-    a = mentions(transcripts).select(*cols)
-    b = mentions_jvm(transcripts).select(*cols)
+    """The whole-stage-codegen trie-regex engine and the Arrow-UDF engine
+    emit identical mention and triple tables, row for row."""
+    (a, ta), (b, tb) = (extract_stage(transcripts, engine=e) for e in ("pandas", "jvm"))
+    assert a.count() > 0 and ta.count() > 0
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    ta, tb = triples_raw(transcripts), triples_raw_jvm(transcripts)
     assert ta.exceptAll(tb).count() == 0 and tb.exceptAll(ta).count() == 0
 
 

@@ -6,7 +6,7 @@ from knowledge_extraction_pipeline_spark.operators.canonicalize import (
     canonicalize_stage,
     connected_components,
 )
-from knowledge_extraction_pipeline_spark.operators.extract import mentions
+from knowledge_extraction_pipeline_spark.operators.extract import extract_stage
 from knowledge_extraction_pipeline_spark.operators.link import (
     alias_edges,
     distinct_terms,
@@ -82,7 +82,7 @@ def test_cc_fails_loudly_when_max_iter_runs_out(spark):
 
 
 def test_alias_edges(spark, transcripts):
-    m = mentions(transcripts)
+    m = extract_stage(transcripts, engine="pandas")[0]
     ae = alias_edges(distinct_terms(m)).collect()
     pairs = {(r["src"], r["dst"]) for r in ae}
     # abbreviations appear in the generated data and map to their canonicals
@@ -139,7 +139,7 @@ def test_minhash_no_cross_base_merges(spark):
 
 
 def test_canonicalize_isolated_terms_self_map(spark, transcripts):
-    m = mentions(transcripts)
+    m = extract_stage(transcripts, engine="pandas")[0]
     terms = distinct_terms(m)
     asn = canonicalize_stage(terms, link_stage(m))
     assert asn.count() == terms.count()

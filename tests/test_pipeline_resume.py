@@ -254,7 +254,8 @@ def _rows_equal(a, b, ctx=""):
 def test_ivm_finalize_equals_build_nodes(spark, transcripts, tmp_path):
     """finalize_nodes(node_summaries(M), A) ≡ build_nodes(canonical_mentions
     (M, A)) — the summaries carry exactly the statistics the canon-level
-    aggregation needs, row-for-row."""
+    aggregation needs, row-for-row — and ≡ the nodes table run_pipeline
+    writes, which orders occurrences by the packed key."""
     from knowledge_extraction_pipeline_spark.operators.materialize import (
         build_nodes,
         canonical_mentions,
@@ -269,6 +270,7 @@ def test_ivm_finalize_equals_build_nodes(spark, transcripts, tmp_path):
     want = build_nodes(canonical_mentions(m, asn))
     got = finalize_nodes(node_summaries(m), asn)
     _rows_equal(got, want, "finalize vs build_nodes")
+    _rows_equal(got, res.nodes, "finalize vs run_pipeline nodes")
 
 
 def test_ivm_merge_is_exact(spark, transcripts, tmp_path):

@@ -26,11 +26,11 @@ def test_conversation_state_tracker(spark, transcripts, tmp_path):
         from conv_state group by conv_id""").collect()
     got = {r["conv_id"]: (r["n_turns"], r["n_entities"]) for r in rows}
 
-    from knowledge_extraction_pipeline_spark.operators.extract import mentions
+    from knowledge_extraction_pipeline_spark.operators.extract import extract_stage
     want_turns = {r["conv_id"]: r["n"] for r in
                   sub.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     want_ents = {r["conv_id"]: r["n"] for r in
-                 mentions(sub).groupBy("conv_id")
+                 extract_stage(sub, engine="pandas")[0].groupBy("conv_id")
                  .agg(F.countDistinct("norm_term").alias("n")).collect()}
     assert set(got) == set(want_turns)
     for cid, (nt, ne) in got.items():
@@ -399,6 +399,20 @@ def test_stream_kg_update_matches_batch_nodes(spark, transcripts, tmp_path):
               .option("maxFilesPerTrigger", 1).parquet(src))
     q = start_stream_kg_update(stream, state, ckpt)
     q.awaitTermination(300)
+
+    # the persisted state layout: state written by earlier versions stays
+    # readable
+    occ = "struct<conv_id:string,turn_idx:int,start:int>"
+    assert {t: spark.read.parquet(f"{state}/{t}").schema.simpleString()
+            for t in ("term", "quote", "ci", "src", "ev")} == {
+        "term": f"struct<norm_term:string,term:string,cnt:bigint,first_occ:{occ},"
+                "conf_sum:double,conf_n:bigint,first_cat:string>",
+        "quote": f"struct<norm_term:string,quote:string,first_occ:{occ}>",
+        "ci": "struct<norm_term:string,category:string,importance:string,cnt:bigint>",
+        "src": f"struct<norm_term:string,conv_id:string,first_occ:{occ}>",
+        "ev": f"struct<norm_term:string,items:array<struct<occ:{occ},conv_id:string,"
+              "turn_idx:int,quote:string>>>",
+    }
 
     got = finalize_stream_nodes(spark, state)
 
