@@ -1,264 +1,206 @@
 #!/usr/bin/env python
-"""Benchmark harness. Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""KG-pipeline benchmark. Prints one JSON line, and again after every
+scaling draw; the last line is the result:
 
-Headline metric: KG-pipeline triple throughput (triples/sec) at
-local[$SPARK_GRAFT_CPUS], plus the north-rule two-cluster-size criterion
-(BASELINE.json: efficiency >= 0.8 between N and 4N executors) evidenced
-on REAL standalone clusters (1 vs 4 single-core executor JVMs) — see the
-comment block above _scale_run_large and BENCH/BASELINE.md.
+  {"metric": "kg_pipeline_triples_per_sec", "value": N, "unit": "triples/s",
+   "wall_s": ..., "n_convs": ..., "triples": ..., "pipeline_cores": ...,
+   "host": {...}, "scaling": {...}}
 
-Env:
-  SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    (default: the CPUs this process may run on)
-  BENCH_SKIP_SCALING  (set to skip the second, smaller-parallelism run)
+Headline: triples/s of plans.pipeline.run_pipeline (stages handed over in
+memory) on N_CONVS generated conversations at local[<CPUs in this
+process's affinity mask>].
+
+Scaling (BASELINE.json: efficiency >= 0.8 between N and 4N executors): the
+pinned standalone-cluster protocol at SCALING PROTOCOL below. It pins CPUs
+0-15, so it runs only where the affinity mask holds all of them; elsewhere
+"scaling" is {"skipped": "<reason>"} and no scaling input is generated.
+
+Env: BENCH_CONVS (default 125000), BENCH_SKIP_SCALING (set: no scaling).
+Shuffle and spill go to /dev/shm/spark-local when SPARK_LOCAL_DIRS is unset
+and /dev/shm has 4 GB free.
+
+Run: python bench.py
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import signal
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
-# bench runs opt into tmpfs shuffle dirs (see session.get_spark) — inherited
-# by the cluster_scale subprocesses through the environment
-os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
+N_CONVS = int(os.environ.get("BENCH_CONVS", 125_000))
+WARMUP_CONVS = 4000
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
+# ── SCALING PROTOCOL ─────────────────────────────────────────────────────
+# scripts/cluster_scale.py runs one draw: a Spark standalone cluster of
+# single-core workers, each worker and the executor JVM it spawns pinned to
+# its own core pair, the master on a separate pair. Executor JVMs are the
+# same at both levels (1 core, 6 g heap, ParallelGC, timed_run's warm-up);
+# only their count changes.
+#   * level 4N: one cluster, 4 workers on pairs 0-1, 2-3, 4-5, 6-7, master
+#     on 8-9;
+#   * level N: 4 concurrent 1-worker clusters on the same executor pairs,
+#     masters on 8-9, 10-11, 12-13, 14-15, so each executor sees the load
+#     the 4-executor cluster puts on the machine; per-cluster throughput is
+#     the level-N throughput;
+#   * one input of SCALE_CONVS conversations, generated once to a tmpfs
+#     Parquet file every draw reads; the same job conf at both levels;
+#   * draws are unconditional (none is retried or dropped for its value);
+#     large draws and small batches interleave as DRAWS so that a
+#     minutes-long steal episode hits both levels; medians of every wall;
+#   * a draw starts only if its estimated wall (the slowest completed draw
+#     of its kind, at least EST_S) fits in BUDGET_S since start; the first
+#     L and S always run;
+#   * the JSON line is printed after every draw and again on SIGTERM;
+#   * cluster output goes to temp files: a full 64 KB pipe would stall a
+#     cluster and serialize the concurrent level.
+PINNED_CPUS = 16
+WORKERS = 4
+DRAWS = "LSLLL"
+SCALE_CONVS = 8 * N_CONVS
+SCALE_PARTS = 64
+BUDGET_S = 3300.0
+EST_S = {"L": 400.0, "S": 1000.0}
 
-# ~10M turns/sf-unit, ~8 turns/conv → 1M turns at the sf0.1 bench point:
-# large enough that the O(n) stages dominate the vocabulary-sized fixed
-# costs (CC, entity-level aggregates), which is the regime the scaling
-# criterion is about. Overridable via BENCH_CONVS.
-N_CONVS = int(os.environ.get("BENCH_CONVS", max(200, int(1_250_000 * SF))))
-# scaling pair input: 8x the headline size (1M convs / 8M turns at sf0.1).
-# Per-cluster serial driver time (stage scheduling, AQE planning, py4j) is
-# ~30 s regardless of input and identical at both levels, but it idles 4
-# executors in the big cluster vs 1 in a small one; at 8M turns the O(n)
-# stages dominate it, which is the regime the 10^12-turn criterion is about
-# (measured Amdahl fit at 125k convs: serial ~31 s, parallel work ~76 s).
-N_CONVS_SCALE = int(os.environ.get("BENCH_SCALE_CONVS", 8 * N_CONVS))
-
-HEADLINE_QUERIES = [
-    "q1_pricing_summary",
-    "q_revenue_by_nation",
-    "q_top_parts",
-    "q_events_sessionize",
-    "kg_typed_edges_docs",
-    "dedup_minhash_docs",
-    "dedup_exact_docs",
-    "ann_topk_cosine",
-    "text_corpus_stats",
-]
+_T_START = time.time()
+_LATEST_JSON: str | None = None
 
 
 def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-def run_pipeline(master: str, shuffle: int, n_convs: int | None = None,
-                 extra_conf: dict[str, str] | None = None) -> tuple[float, int]:
-    """Full extract→link→canonicalize→materialize on generated transcripts,
-    handed over in memory (plans.pipeline.run_pipeline without a run_dir).
-    Returns (wall_seconds, emitted_triples)."""
-    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline as rp
-    from knowledge_extraction_pipeline_spark.session import get_spark
+def timed_run(spark, transcripts, slots: int,
+              triples: int | None = None) -> tuple[float, int]:
+    """Warm up, cache and count the input, then time run_pipeline through
+    the counts of nodes and edges, which are independent and counted
+    concurrently so their stages fill idle task slots. The warm-up is an
+    untimed run_pipeline over WARMUP_CONVS conversations per task slot: JIT
+    and codegen compilation are per-JVM start-up cost, not engine
+    throughput. The triple count is a property of the input, taken after
+    the timed window unless the caller passes it.
+    Returns (wall_seconds, triples)."""
+    from knowledge_extraction_pipeline_spark.plans.pipeline import run_pipeline
     from knowledge_extraction_pipeline_spark.sources.transcripts_gen import (
         generate_transcripts,
     )
 
-    spark = get_spark(app_name=f"bench-{master}", master=master,
-                      shuffle_partitions=shuffle, extra_conf=extra_conf)
+    tw = generate_transcripts(spark, WARMUP_CONVS * slots,
+                              partitions=8 * slots).cache()
+    tw.count()
+    warm = run_pipeline(spark, tw)
+    warm.nodes.count(), warm.edges.count()
+    spark.catalog.clearCache()
+    t = transcripts.cache()
+    n_turns = t.count()
+    t0 = time.time()
+    res = run_pipeline(spark, t)
+    with ThreadPoolExecutor(2) as ex:
+        n_nodes, n_edges = ex.map(lambda df: df.count(), (res.nodes, res.edges))
+    wall = time.time() - t0
+    if triples is None:
+        triples = res.triples_raw.count()
+    log(f"  {spark.sparkContext.master}: turns={n_turns} triples={triples} "
+        f"nodes={n_nodes} edges={n_edges} wall={wall:.1f}s")
+    return wall, triples
+
+
+def scaling_skip_reason(cpus: set[int]) -> str | None:
+    """Why the pinned protocol cannot run with this affinity mask, or None."""
+    if set(range(PINNED_CPUS)) <= cpus:
+        return None
+    return (f"the pinned scaling protocol needs CPUs 0-{PINNED_CPUS - 1} "
+            f"({PINNED_CPUS} CPUs); this process may run on {len(cpus)}")
+
+
+def _session(app: str, cores: int):
+    from knowledge_extraction_pipeline_spark.session import get_spark
+
+    spark = get_spark(app_name=app, master=f"local[{cores}]")
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def headline(cores: int) -> tuple[float, int]:
+    from knowledge_extraction_pipeline_spark.sources.transcripts_gen import (
+        generate_transcripts,
+    )
+
+    spark = _session("bench", cores)
     try:
-        t = generate_transcripts(spark, n_convs or N_CONVS)
-        # materialize the input once so generation cost is out of the timing
-        t = t.cache()
-        n_turns = t.count()
-        t0 = time.time()
-        res = rp(spark, t)
-        nodes, edges, tr = res.nodes, res.edges, res.triples_raw
-        # the two output tables are independent — materialize them
-        # concurrently so their stages interleave and fill idle task slots
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(2) as ex:
-            f_nodes = ex.submit(nodes.count)
-            f_edges = ex.submit(edges.count)
-            n_nodes, n_edges = f_nodes.result(), f_edges.result()
-        wall = time.time() - t0
-        # triple count is a property of the data, not of the pipeline run —
-        # counted outside the timed window
-        n_triples = tr.count()
-        log(f"  {master}: turns={n_turns} "
-            f"triples={n_triples} nodes={n_nodes} edges={n_edges} wall={wall:.1f}s")
-        return wall, n_triples
+        return timed_run(spark, generate_transcripts(spark, N_CONVS), cores)
     finally:
         spark.stop()
 
 
-# ── scaling measurement ──────────────────────────────────────────────────
-# The north rule compares N-executor vs 4N-executor CLUSTERS, run via
-# spark-submit on a multi-executor cluster. That is measured LITERALLY:
-# scripts/cluster_scale.py stands up a real Spark standalone cluster on this
-# machine (master + single-core workers, each worker and the executor JVM it
-# spawns pinned to its own core pair) and runs the identical job against
-# spark://. The executor JVMs are structurally IDENTICAL at both cluster
-# sizes — same heap, same GC, one core each — only the executor COUNT
-# changes, so the ratio measures the engine. (A bare local[1]-vs-local[4]
-# thread comparison instead (a) hands the 1-thread run the whole chip — full
-# L3, full bandwidth, free cores for GC/JIT — and (b) makes the 4-thread run
-# pay stop-the-world GC across all four task threads at once, which four
-# independent executor JVMs do not; both distortions are instrument leakage,
-# not engine behavior.)
-# Protocol, every piece disclosed in the artifact:
-#   * level 4N = one standalone cluster with 4 single-core workers on core
-#     pairs 0-1,2-3,4-5,6-7; master+driver on 8-9;
-#   * level N  = FOUR CONCURRENT standalone clusters of 1 worker each, same
-#     core pairs, own master+driver pair per cluster — four independent
-#     1-executor clusters running the identical job on identical input,
-#     under the same machine utilization the 4-executor cluster creates
-#     (a SOLO 1-executor run would enjoy the whole chip's L3/bandwidth,
-#     which no executor in a real cluster sees). Per-cluster throughput is
-#     the level-N throughput;
-#   * ParallelGC + 6 g heap per executor at both levels; identical job
-#     config (same shuffle width, same input partitioning) and identical
-#     input; an untimed warm-up pass (4k convs PER EXECUTOR through the
-#     same pipeline) precedes the timed window at both levels — JIT/codegen
-#     compilation is per-JVM startup cost, not engine throughput, and on a
-#     1-core executor it would otherwise dominate the timed window;
-#   * draws are UNCONDITIONAL (no retry-on-bad-number): the 4 concurrent
-#     walls are 4 draws of level N (median taken), level 4N runs
-#     BENCH_SCALE_DRAWS times (median taken); every wall is recorded;
-#   * output goes to temp FILES, not pipes — Spark's progress bars fill a
-#     64 KB pipe buffer in seconds and a sequential communicate() would then
-#     silently serialize the "concurrent" level (measured as a staircase of
-#     walls: 383/612/812/1045 s).
-
-_CLUSTER_SCALE = str(Path(__file__).resolve().parent / "scripts" / "cluster_scale.py")
-
-
-def _parse_scale(out, label: str) -> tuple[float, int]:
-    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("SCALE ")]
-    if not lines:
-        raise RuntimeError(
-            f"scale-run subprocess ({label}) produced no result; "
-            f"stderr tail: {out.stderr[-2000:]}")
-    _, wall, triples = lines[-1].split()
-    return float(wall), int(triples)
-
-
-_SCALE_INPUT: str | None = None   # pre-generated shared input parquet
-_SCALE_TRIPLES: int = -1          # triple count once any draw measured it
-
-
-def _cluster_cmd(n_workers: int, exec_cpus: str, aux_cpus: str,
-                 port: int) -> list[str]:
-    cmd = [sys.executable, _CLUSTER_SCALE, str(n_workers),
-           str(N_CONVS_SCALE), "--exec-cpus", exec_cpus,
-           "--aux-cpus", aux_cpus, "--port-base", str(port)]
-    if _SCALE_INPUT:
-        cmd += ["--input-parquet", _SCALE_INPUT,
-                "--triples", str(_SCALE_TRIPLES)]
-    return cmd
-
-
-def _pregen_scale_input() -> str | None:
-    """Generate the scaling input ONCE (wide local session) to a tmpfs
-    parquet every cluster draw reads — identical input across draws by
-    construction, and it converts ~7 in-cluster 1-core generations into one
-    64-file read per draw. Falls back to in-cluster generation on error."""
-    import shutil
-    import tempfile
-
-    from knowledge_extraction_pipeline_spark.session import get_spark
+def _scale_input(cores: int) -> str:
     from knowledge_extraction_pipeline_spark.sources.transcripts_gen import (
         generate_transcripts,
     )
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    path = tempfile.mkdtemp(prefix="kg_scale_input_", dir=base)
-    import atexit
-    atexit.register(lambda: shutil.rmtree(path, ignore_errors=True))
-    parts = int(os.environ.get("CLUSTER_SCALE_PARTS", "64"))
+
+    path = tempfile.mkdtemp(prefix="kg_scale_input_", dir="/dev/shm")
+    atexit.register(shutil.rmtree, path, True)
+    spark = _session("bench-scale-input", cores)
     try:
-        s = get_spark(app_name="bench-scale-gen", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
-        s.sparkContext.setLogLevel("ERROR")
-        generate_transcripts(s, N_CONVS_SCALE, partitions=parts) \
+        generate_transcripts(spark, SCALE_CONVS, partitions=SCALE_PARTS) \
             .write.mode("overwrite").parquet(path)
-        s.stop()
-        return path
-    except Exception as e:  # disclosed fallback: draws generate in-cluster
-        log(f"  scale-input pregen failed ({e}); draws will generate")
-        shutil.rmtree(path, ignore_errors=True)
-        return None
+    finally:
+        spark.stop()
+    return path
 
 
-def _scale_run_large(n_workers: int = 4) -> tuple[float, int]:
-    """One standalone cluster with n_workers single-core workers."""
-    import subprocess
-    pairs = ",".join(f"{2 * i}-{2 * i + 1}" for i in range(n_workers))
-    out = subprocess.run(
-        _cluster_cmd(n_workers, pairs, f"{2 * n_workers}-{2 * n_workers + 1}",
-                     7077),
-        capture_output=True, text=True, timeout=3600,
-        cwd=str(Path(__file__).resolve().parent),
-        env=dict(os.environ, CLUSTER_SCALE_LOGDIR="/tmp/cluster_scale_large"))
-    return _parse_scale(out, f"large {n_workers}w")
-
-
-def _scale_run_small_concurrent(n_jobs: int = 4) -> list[tuple[float, int]]:
-    """n_jobs concurrent 1-worker standalone clusters on disjoint core
-    pairs; returns every (wall, triples)."""
-    import subprocess
-    import tempfile
+def _clusters(specs: list[tuple[int, str, str, int, str]], input_path: str,
+              triples: int | None) -> list[tuple[float, int]]:
+    """Run one cluster_scale.py per (workers, exec cpus, master cpus, port,
+    log dir) concurrently; every (wall, triples)."""
     procs = []
-    for i in range(n_jobs):
-        fo = tempfile.TemporaryFile(mode="w+")
-        fe = tempfile.TemporaryFile(mode="w+")
-        p = subprocess.Popen(
-            _cluster_cmd(1, f"{2 * i}-{2 * i + 1}",
-                         f"{2 * n_jobs + 2 * i}-{2 * n_jobs + 2 * i + 1}",
-                         7100 + 10 * i),
-            stdout=fo, stderr=fe, text=True,
-            cwd=str(Path(__file__).resolve().parent),
-            env=dict(os.environ,
-                     CLUSTER_SCALE_LOGDIR=f"/tmp/cluster_scale_small_{i}"))
-        procs.append((p, fo, fe))
+    for workers, exec_cpus, aux_cpus, port, logdir in specs:
+        cmd = [sys.executable, str(ROOT / "scripts" / "cluster_scale.py"),
+               str(workers), input_path, "--exec-cpus", exec_cpus,
+               "--aux-cpus", aux_cpus, "--port-base", str(port)]
+        if triples is not None:
+            cmd += ["--triples", str(triples)]
+        out, err = tempfile.TemporaryFile("w+"), tempfile.TemporaryFile("w+")
+        procs.append((subprocess.Popen(
+            cmd, stdout=out, stderr=err, text=True, cwd=str(ROOT),
+            env=dict(os.environ, CLUSTER_SCALE_LOGDIR=logdir)), out, err))
     results = []
-    for i, (p, fo, fe) in enumerate(procs):
+    for p, out, err in procs:
         p.wait(timeout=3600)
-        fo.seek(0)
-        fe.seek(0)
-        out = type("R", (), {"stdout": fo.read(), "stderr": fe.read()})
-        fo.close()
-        fe.close()
-        results.append(_parse_scale(out, f"small cluster {i}"))
+        out.seek(0)
+        err.seek(0)
+        lines = [ln for ln in out.read().splitlines() if ln.startswith("SCALE ")]
+        if not lines:
+            raise RuntimeError(f"cluster_scale.py {p.args[2:]} printed no "
+                               f"result; stderr tail: {err.read()[-2000:]}")
+        _, wall, n = lines[-1].split()
+        results.append((float(wall), int(n)))
     return results
 
 
-_T_START = time.time()
-
-# ── artifact durability ──────────────────────────────────────────────────
-# Rounds 1-3 all lost (or nearly lost) the official artifact because the
-# JSON line was printed ONCE at the very end and the driver's wall-clock
-# kill (rc=124) landed mid-scaling. Three defenses, layered:
-#   1. _emit() prints (and flushes) the COMPLETE current-state JSON line
-#      after the headline pipeline and again after every finished scaling
-#      draw — the driver parses the LAST line, so whatever completed is
-#      always recorded;
-#   2. a SIGTERM handler re-prints the latest state before dying, covering
-#      a kill that lands between draws;
-#   3. the budget check is PREDICTIVE (see main loop): a draw is only
-#      started if its estimated subprocess wall fits in the remaining
-#      budget, so the process finishes cleanly instead of being killed
-#      mid-draw.
-_LATEST_JSON: str | None = None
+def _draw(kind: str, input_path: str, triples: int | None) -> list[tuple[float, int]]:
+    if kind == "L":
+        pairs = ",".join(f"{2 * i}-{2 * i + 1}" for i in range(WORKERS))
+        aux = f"{2 * WORKERS}-{2 * WORKERS + 1}"
+        return _clusters([(WORKERS, pairs, aux, 7077, "/tmp/cluster_scale_large")],
+                         input_path, triples)
+    return _clusters(
+        [(1, f"{2 * i}-{2 * i + 1}",
+          f"{2 * WORKERS + 2 * i}-{2 * WORKERS + 2 * i + 1}", 7100 + 10 * i,
+          f"/tmp/cluster_scale_small_{i}") for i in range(WORKERS)],
+        input_path, triples)
 
 
 def _emit(out: dict) -> None:
@@ -268,204 +210,98 @@ def _emit(out: dict) -> None:
 
 
 def _sigterm_dump(signum, frame):
-    # re-print the most recent complete state so the tail line parses even
-    # if the terminal write of the scheduled emit was lost; then exit
-    # without waiting on children (the driver is tearing us down anyway)
+    # the last complete state is the result; children are torn down with us
     if _LATEST_JSON is not None:
         print(_LATEST_JSON, flush=True)
     os._exit(0)
 
 
-def main():
-    import signal
-    signal.signal(signal.SIGTERM, _sigterm_dump)
-    if len(sys.argv) >= 3 and sys.argv[1] == "--scale-run":
-        cores = int(sys.argv[2])
-        n = int(sys.argv[3]) if len(sys.argv) > 3 else N_CONVS
-        # identical JOB at two cluster sizes: shuffle width is part of the
-        # job config, so it is held constant across the pair (a 1-executor
-        # cluster does not get a different spark.sql.shuffle.partitions)
-        shuffle = int(os.environ.get("BENCH_SCALE_SHUFFLE", "8"))
-        gc = os.environ.get("BENCH_SCALE_GC")
-        extra = {"spark.driver.extraJavaOptions": gc} if gc else None
-        wall, triples = run_pipeline(f"local[{cores}]", shuffle, n_convs=n,
-                                     extra_conf=extra)
-        print(f"SCALE {wall} {triples}")
-        return
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-    from knowledge_extraction_pipeline_spark.session import get_spark
+def scaling(out: dict, cores: int) -> None:
+    """The protocol above; updates out["scaling"] and emits after each draw."""
+    input_path = _scale_input(cores)
+    walls: dict[str, list[float]] = {"L": [], "S": []}
+    draw_walls: dict[str, list[float]] = {"L": [], "S": []}
+    triples = None
+    truncated = False
 
-    results: dict[str, float] = {}
+    def state() -> dict:
+        st = {
+            "cores_small": 1, "cores_large": WORKERS, "n_convs": SCALE_CONVS,
+            "triples": triples,
+            "protocol": "bench.py SCALING PROTOCOL: pinned standalone "
+                        f"clusters, {WORKERS} single-core workers vs "
+                        f"{WORKERS} concurrent 1-worker clusters, draws "
+                        f"{DRAWS}, medians",
+            "draws_planned": {"large": DRAWS.count("L"),
+                              "small": DRAWS.count("S") * WORKERS},
+            "time_budget_s": BUDGET_S,
+            "truncated_by_time_budget": truncated,
+            "draws_large_walls": walls["L"],
+            "draws_small_walls": walls["S"],
+        }
+        if walls["L"] and walls["S"]:
+            thr_large = triples / statistics.median(walls["L"])
+            thr_small = triples / statistics.median(walls["S"])
+            st.update({
+                "triples_per_sec_small": round(thr_small, 1),
+                "triples_per_sec_large": round(thr_large, 1),
+                "speedup": round(thr_large / thr_small, 3),
+                "scaling_efficiency": round(thr_large / thr_small / WORKERS, 3),
+            })
+        return st
 
-    spark = get_spark(app_name="bench-queries", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    for name in HEADLINE_QUERIES:
+    for idx, kind in enumerate(DRAWS):
+        est = max([EST_S[kind]] + draw_walls[kind])
+        if (walls["L"] and walls["S"]
+                and time.time() - _T_START + est > BUDGET_S):
+            truncated = True
+            log(f"  scaling: next {kind} draw (est {est:.0f}s) would overrun "
+                f"{BUDGET_S:.0f}s; {len(DRAWS) - idx} draws not run")
+            break
         t0 = time.time()
-        n = QUERIES[name](spark, SF_DIR).count()
-        dt = time.time() - t0
-        results[name] = round(dt, 3)
-        log(f"  {name}: {n} rows in {dt:.2f}s")
-    spark.stop()
-
-    # KG pipeline headline throughput. Capped at 16 threads: the VM delivers
-    # ~22 effective cores and local[32] *collapses* on shuffle-heavy work
-    # (measured 101 s at 32 threads vs 44 s at 16 on identical input —
-    # hypervisor steal + one memory bus); 16 is the fastest this box goes.
-    pipe_cores = int(os.environ.get("BENCH_PIPE_CORES", min(CPUS, 16)))
-    wall_full, triples = run_pipeline(f"local[{pipe_cores}]", pipe_cores)
-    results["kg_pipeline"] = round(wall_full, 3)
-    thr_full = triples / wall_full
-
-    out = {
-        "metric": "kg_pipeline_triples_per_sec",
-        "value": round(thr_full, 1),
-        "unit": "sec",
-        "queries": results,
-        "sf": SF,
-        "n_convs": N_CONVS,
-        "triples": triples,
-        "pipeline_cores": pipe_cores,
-        "scaling": {},
-    }
-    # headline is in the bag: emit NOW so any later kill still leaves a
-    # parseable artifact (the driver takes the last stdout line)
+        runs = _draw(kind, input_path, triples)
+        draw_walls[kind].append(time.time() - t0)
+        walls[kind].extend(round(w, 3) for w, _ in runs)
+        triples = runs[0][1]
+        out["scaling"] = state()
+        _emit(out)
+    out["scaling"] = state()
     _emit(out)
 
-    # Two-cluster scaling criterion: N vs 4N executor clusters on identical
-    # input, evidenced with the load-matched pinned protocol documented at
-    # _scale_run_large/_scale_run_small_concurrent and in BENCH/BASELINE.md.
-    if not os.environ.get("BENCH_SKIP_SCALING"):
-        import statistics
-        large = int(os.environ.get("BENCH_SCALE_LARGE", "4"))
-        # A median of 2 is not a median: hypervisor steal puts ±15-27 %
-        # spread on single draws (r1/r2 artifacts both landed on the noisy
-        # side of a 2-draw pair). 4 unconditional large draws + 1 batch of
-        # 4 concurrent small draws (4 walls) make the medians absorb steal
-        # episodes instead of being decided by them — and, unlike the round-4
-        # 5L+2-batch plan (measured cost ≈ 4·subL + 2·subS + headline >
-        # budget, so every run truncated at 3L+4S), this schedule FITS the
-        # 3300 s budget: the round-5 sub-walls were ~350 s/L and ~1100 s/S,
-        # so 4L+1S+headline ≈ 2800 s finishes cleanly with rc=0 and
-        # truncated_by_time_budget=false. A plan that always truncates is
-        # worse evidence than a smaller plan that completes: the large level
-        # (the single-cluster draw whose wall moves the headline ratio) gets
-        # MORE draws than before truncation (4 vs 3), and the small level
-        # keeps a 4-wall median (one concurrent batch).
-        # both medians need at least one wall — clamp the knobs to >= 1
-        draws = max(1, int(os.environ.get("BENCH_SCALE_DRAWS", "4")))
-        small_batches = max(1, int(
-            os.environ.get("BENCH_SCALE_SMALL_BATCHES", "1")))
-        # INTERLEAVE large draws and small batches: steal episodes are
-        # temporally correlated (minutes-long), so running all larges then
-        # all smalls lets one episode bias a single level; alternating makes
-        # an episode hit both levels and partially cancel in the ratio. The
-        # first small batch runs SECOND (right after the first large) so the
-        # minimum evidence set — walls at both levels — exists as early as
-        # possible; every draw after that refines the medians.
-        seq = ["L"] * draws
-        step = max(1, round(draws / (small_batches + 1)))
-        for j in range(small_batches - 1, 0, -1):
-            seq.insert(min(1 + j * step, len(seq)), "S")
-        seq.insert(min(1, len(seq)), "S")
-        # e.g. draws=4, batches=1 → L S L L L
-        #
-        # Wall-clock budget guard: draws stay UNCONDITIONAL (no draw is ever
-        # retried or dropped based on its value), but the cut is PREDICTIVE:
-        # before each draw, its subprocess wall is estimated from the worst
-        # completed draw of the same kind (priors before any completes) and
-        # the draw only starts if that estimate fits inside
-        # BENCH_TIME_BUDGET_S — finishing cleanly under the driver's clock
-        # beats being killed mid-draw. The first large + first small batch
-        # (the minimum evidence set; ADVICE r3: the old len>=2 guard made a
-        # draws=1 plan immune to the budget) always run. Disclosed in the
-        # artifact via draws_planned vs recorded walls.
-        # 3300 s: the round-4 official run was ~3150 s elapsed when its
-        # budget check fired and the driver did not kill it, so its clock
-        # allows at least that; and an overrun is no longer fatal to the
-        # artifact (every draw emits, SIGTERM re-dumps) — the budget is now
-        # about finishing with rc=0, not about saving the data.
-        budget = float(os.environ.get("BENCH_TIME_BUDGET_S", "3300"))
-        global _SCALE_INPUT, _SCALE_TRIPLES
-        _SCALE_INPUT = _pregen_scale_input()
-        # subprocess-wall priors (cluster setup + input read + warm-up +
-        # timed window); pre-generated input + reused triple count cut the
-        # untimed overhead vs the round-4 runs (L ~500 s / S ~1400 s)
-        est = {"L": 400.0, "S": 1000.0}
-        large_walls, small_walls = [], []
-        sub_walls = {"L": [], "S": []}
-        triples_scale = 0
-        truncated = False
 
-        def scaling_state() -> dict:
-            st = {
-                "cores_small": 1, "cores_large": large,
-                "n_convs": N_CONVS_SCALE, "triples": triples_scale,
-                "protocol": (
-                    f"real Spark standalone clusters (scripts/cluster_scale.py):"
-                    f" level-4N = one spark:// cluster with {large} single-core "
-                    f"workers, each worker+executor JVM pinned to its own core "
-                    f"pair, master+driver on a separate pair; level-N = {large} "
-                    f"CONCURRENT 1-worker clusters on the same core pairs (own "
-                    f"master/driver pairs) — executor JVMs structurally "
-                    f"identical at both sizes (1 core, 6g, ParallelGC, same "
-                    f"per-executor warm-up), only "
-                    f"the executor count changes, and the concurrent level-N "
-                    f"runs see the machine at the same utilization the "
-                    f"{large}-executor cluster creates; identical job + input "
-                    f"both levels; input pre-generated once to tmpfs parquet "
-                    f"and read by every draw (identical input across draws "
-                    f"by construction); medians of unconditional draws "
-                    f"({len(large_walls)} large, {len(small_walls)} small), "
-                    f"large draws and small batches interleaved so a steal "
-                    f"episode hits both levels, every wall listed"),
-                "draws_planned": {"large": draws,
-                                  "small": small_batches * large},
-                "time_budget_s": budget,
-                "truncated_by_time_budget": truncated,
-                "draws_large_walls": large_walls,
-                "draws_small_walls": small_walls,
-            }
-            if large_walls and small_walls:
-                wall_large = statistics.median(large_walls)
-                wall_small = statistics.median(small_walls)
-                thr_small = triples_scale / wall_small
-                thr_large = triples_scale / wall_large
-                st.update({
-                    "triples_per_sec_small": round(thr_small, 1),
-                    "triples_per_sec_large": round(thr_large, 1),
-                    "speedup": round(thr_large / thr_small, 3),
-                    "scaling_efficiency": round(
-                        (thr_large / thr_small) / large, 3),
-                })
-                results["kg_pipeline_scale_small"] = round(wall_small, 3)
-                results["kg_pipeline_scale_large"] = round(wall_large, 3)
-            return st
+def main():
+    import pyspark
 
-        for idx, kind in enumerate(seq):
-            minimum_met = bool(large_walls) and bool(small_walls)
-            kind_est = max([est[kind]] + sub_walls[kind])
-            if minimum_met and (time.time() - _T_START) + kind_est > budget:
-                truncated = True
-                log(f"  scaling: next {kind} draw (est {kind_est:.0f}s) "
-                    f"would overrun budget {budget:.0f}s — skipping "
-                    f"remaining {len(seq) - idx} runs (disclosed)")
-                break
-            t_draw = time.time()
-            if kind == "L":
-                w, triples_scale = _scale_run_large(large)
-                large_walls.append(round(w, 3))
-            else:
-                small_runs = _scale_run_small_concurrent(large)
-                small_walls.extend(round(w, 3) for w, _ in small_runs)
-                triples_scale = small_runs[0][1]
-            # shared input ⇒ the count is the same for every later draw
-            _SCALE_TRIPLES = triples_scale
-            sub_walls[kind].append(time.time() - t_draw)
-            out["scaling"] = scaling_state()
-            _emit(out)  # every completed draw updates the artifact
-        out["scaling"] = scaling_state()
-        _emit(out)
+    from perfbench.probes import host_facts, noise
+
+    signal.signal(signal.SIGTERM, _sigterm_dump)
+    if (os.path.isdir("/dev/shm")
+            and shutil.disk_usage("/dev/shm").free >= 4 << 30):
+        os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
+    cpus = os.sched_getaffinity(0)
+    host = {**host_facts(), "spark": pyspark.__version__,
+            "spark_local_dirs": os.environ.get("SPARK_LOCAL_DIRS"),
+            "noise_start": noise()}
+    wall, triples = headline(len(cpus))
+    host["noise_end"] = noise()
+    out = {
+        "metric": "kg_pipeline_triples_per_sec",
+        "value": round(triples / wall, 1),
+        "unit": "triples/s",
+        "wall_s": round(wall, 3),
+        "n_convs": N_CONVS,
+        "triples": triples,
+        "pipeline_cores": len(cpus),
+        "host": host,
+        "scaling": {},
+    }
+    reason = ("BENCH_SKIP_SCALING is set" if os.environ.get("BENCH_SKIP_SCALING")
+              else scaling_skip_reason(cpus))
+    if reason:
+        out["scaling"] = {"skipped": reason}
+    _emit(out)
+    if not reason:
+        scaling(out, len(cpus))
 
 
 if __name__ == "__main__":

@@ -8,7 +8,7 @@ vectorized-pandas-UDF flow over Parquet-checkpointed tables of multi-turn
 conversation transcripts::
 
     transcripts(conv_id, turn_idx, role, text, tool, ts)
-      └─(1) EXTRACT      → mentions / triples_raw        (vectorized UDF, no shuffle)
+      └─(1) EXTRACT      → mentions / triples_raw        (JVM regex, no shuffle)
       └─(2) LINK         → merge-candidate edges         (exact + alias + MinHash-LSH)
       └─(3) CANONICALIZE → components                    (large-star / small-star CC)
       └─(4) MATERIALIZE  → nodes / edges tables          (salted co-occurrence join)

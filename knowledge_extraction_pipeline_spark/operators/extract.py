@@ -102,6 +102,14 @@ def extract_stage(transcripts: DataFrame,
     """engine='jvm' (default): whole-stage-codegen regex matcher.
     engine='pandas': the Arrow-batched UDF matcher (general mechanism for
     non-compilable extraction logic). Identical mention and triple tables."""
+    _, mentions, triples_raw = _extract(transcripts, engine)
+    return mentions, triples_raw
+
+
+def _extract(transcripts: DataFrame,
+             engine: str = "jvm") -> tuple[DataFrame, DataFrame, DataFrame]:
+    """extract_stage plus the persisted surface relation both outputs read,
+    for callers that release it once the outputs are written."""
     from ..functions.lexicon import sql_str
 
     t = transcripts.select("conv_id", "turn_idx", "text")
@@ -116,7 +124,7 @@ def extract_stage(transcripts: DataFrame,
     # beats an RDD localCheckpoint, which would re-deserialize full rows
     # for every consumer.
     base = base.persist()
-    return _mentions(base), _triples_raw(base)
+    return base, _mentions(base), _triples_raw(base)
 
 
 def window_turns(transcripts: DataFrame) -> DataFrame:

@@ -64,16 +64,18 @@ N_SALT = 16
 CONV_BITS, TURN_BITS, START_BITS = 27, 16, 20
 
 
-def alias_assignments(mentions: DataFrame) -> DataFrame:
-    """The reference's exact+alias canonicalization as a pure expression:
+def alias_assignments(terms: DataFrame) -> DataFrame:
+    """The reference's exact+alias canonicalization as a pure expression
+    over a relation of distinct norm_terms (the vocabulary, or any
+    assignments table):
     exact phase = identity on norm_term (graph_tools.py:32-91), alias phase =
     the known-alias map (graph_tools.py:94-152). This is the canonicalization
     the EMITTED TRIPLES use — the reference never fuzzy-merges, so edge parity
     requires edges at this level; the LSH+CC fuzzy canonicalization feeds the
     richer nodes table instead."""
     return sql(
-        f"SELECT norm_term, {apply_alias_sql('norm_term')} AS canon "
-        "FROM (SELECT DISTINCT norm_term FROM {m})", m=mentions)
+        f"SELECT norm_term, {apply_alias_sql('norm_term')} AS canon FROM {{t}}",
+        t=terms)
 
 
 def conv_ordinals(mentions: DataFrame) -> DataFrame:
@@ -425,9 +427,7 @@ def materialize_stage(
 
     # exact+alias canonicalization for the edge path — derived from the
     # vocabulary already in `assignments`, NOT another scan of mentions
-    edge_asn = sql(f"SELECT norm_term, {apply_alias_sql('norm_term')} AS canon "
-                   "FROM {a}", a=assignments)
-    mc_edges = canonical_mentions(slim, edge_asn)
+    mc_edges = canonical_mentions(slim, alias_assignments(assignments))
     triples = with_occ_key(triples_raw, ordinals, (("turn_idx", TURN_BITS),))
     edges = type_edges(build_edges(triples, mc_edges))
     return nodes, edges

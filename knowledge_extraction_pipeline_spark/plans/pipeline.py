@@ -111,10 +111,9 @@ def append_transcripts(
     the merged mentions on every run and never stored.
     Stages 2-4 DO recompute: linking/CC are vocabulary-sized (constant-ish
     in corpus growth) and the merge aggregates are additive shuffles over
-    mention summaries; summary-level IVM (persisting by_term/by_quote/by_ci
-    partial aggregates keyed by norm_term and merging deltas with sum/min)
-    is the documented next step if even that re-aggregation becomes the
-    bottleneck.
+    mention summaries. Summary-level IVM, which persists partial aggregates
+    keyed by norm_term and merges deltas into them, is plans/ivm.py; its
+    streaming form is stream.start_stream_kg_update.
 
     The union is checkpointed into new_run_dir's extract slot, so the new
     dir is a complete, resumable run of its own; the old run dir is never

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 def get_spark(
     app_name: str = "knowledge-extraction-pipeline-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
@@ -29,13 +28,11 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     # local[N] → N concurrent tasks; match shuffle width to it locally.
-    if shuffle_partitions is None:
-        if master.startswith("local["):
-            n = master[len("local["):-1]
-            shuffle_partitions = (len(os.sched_getaffinity(0)) if n == "*"
-                                  else int(n))
-        else:
-            shuffle_partitions = 200
+    # Another width, or another master's, comes in extra_conf.
+    shuffle_partitions = 200
+    if master.startswith("local["):
+        n = master[len("local["):-1]
+        shuffle_partitions = len(os.sched_getaffinity(0)) if n == "*" else int(n)
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -65,18 +62,6 @@ def get_spark(
         # differently from one run to the next made identical code miss
         .config("spark.sql.codegen.useIdInClassName", "false")
     )
-    # shuffle/spill on tmpfs — OPT-IN (SPARK_GRAFT_TMPFS=1, set by bench.py /
-    # cluster_scale.py): local mode funnels every task's shuffle file through
-    # one block device, which serializes multi-core bench runs. It is not the
-    # library default because tmpfs is RAM-backed and often tiny (64 MB in a
-    # default Docker container) — spill data moving INTO memory defeats its
-    # purpose and ENOSPCs mid-job; a free-space check guards even the opt-in.
-    if (os.environ.get("SPARK_GRAFT_TMPFS") == "1"
-            and os.path.isdir("/dev/shm")
-            and "spark.local.dir" not in (extra_conf or {})):
-        import shutil as _sh
-        if _sh.disk_usage("/dev/shm").free >= 4 << 30:
-            b = b.config("spark.local.dir", "/dev/shm/spark-local")
     if extra_conf:
         for k, v in extra_conf.items():
             b = b.config(k, v)

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_stage
+from ..operators.extract import _extract
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -43,14 +43,16 @@ def start_streaming_extract(
 ):
     """foreachBatch: run the shuffle-free extract stage on each micro-batch
     and append to the mentions / triples_raw tables. Exactly-once via the
-    streaming checkpoint + idempotent parquet append per batch id."""
+    streaming checkpoint + idempotent parquet append per batch id. Each
+    batch releases the surfaces it cached once both tables are written."""
 
     def process(batch_df: DataFrame, batch_id: int):
-        m, tr = extract_stage(batch_df)
+        base, m, tr = _extract(batch_df)
         m.withColumn("_batch_id", F.lit(batch_id)) \
             .write.mode("append").parquet(f"{out_dir}/mentions")
         tr.withColumn("_batch_id", F.lit(batch_id)) \
             .write.mode("append").parquet(f"{out_dir}/triples_raw")
+        base.unpersist()
 
     return (
         stream.writeStream
@@ -187,7 +189,7 @@ def start_stream_near_dup(
             .select("id", "ts", "row",
                     minhash_signature("sh", num_hashes).alias("sig"))
             .withColumn("bands", lsh_bands("sig", num_hashes, num_bands))
-            .localCheckpoint(eager=True)  # one pass over the text
+            .persist()  # one pass over the text; released at the batch end
         )
         bands_b = batch.select(
             "id", F.posexplode("bands").alias("band_idx", "band_hash"))
@@ -267,8 +269,7 @@ def start_stream_near_dup(
             .filter(est_j >= threshold)
             .select(F.col("id_new").alias("id")).distinct()
         )
-        survivors = batch.join(dup_ids, "id", "left_anti") \
-            .localCheckpoint(eager=True)
+        survivors = batch.join(dup_ids, "id", "left_anti").persist()
         # IDEMPOTENT output: each batch owns its _bid=<id> partition dir and
         # OVERWRITES it, so an at-least-once replay (crash between the
         # output write and the streaming commit) rewrites the same partition
@@ -307,6 +308,8 @@ def start_stream_near_dup(
                     if (tb + 1) * hb <= cutoff_epoch:
                         _shutil.rmtree(_os.path.join(bdir, tb_name),
                                        ignore_errors=True)
+        survivors.unpersist()
+        batch.unpersist()
 
     return (
         stream.writeStream
@@ -529,7 +532,6 @@ def start_stream_kg_update(stream: DataFrame, state_dir: str,
     import os
     import shutil
 
-    from ..operators.extract import extract_stage
     from ..plans.ivm import merge_summaries, node_summaries
 
     def process(batch_df: DataFrame, batch_id: int):
@@ -540,8 +542,9 @@ def start_stream_kg_update(stream: DataFrame, state_dir: str,
             last = json.loads(open(man).read())["last_batch_id"]
         if batch_id <= last:
             return  # at-least-once replay of an already-folded batch
-        m, _triples = extract_stage(batch_df)
-        delta = node_summaries(m.localCheckpoint(eager=True))
+        base, m, _triples = _extract(batch_df)
+        m = m.persist()
+        delta = node_summaries(m)
         prev = read_kg_summaries(spark, state_dir)
         merged = merge_summaries(prev, delta) if prev is not None else delta
         tmp = f"{state_dir}.tmp-{batch_id}"
@@ -562,6 +565,8 @@ def start_stream_kg_update(stream: DataFrame, state_dir: str,
             os.rename(state_dir, parked)
         os.rename(tmp, state_dir)
         shutil.rmtree(parked, ignore_errors=True)
+        m.unpersist()
+        base.unpersist()
 
     return (
         stream.writeStream

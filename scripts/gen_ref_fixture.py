@@ -128,8 +128,7 @@ def main():
 
     T = lambda s: apply_alias_py(normalize_term_py(s))
 
-    spark = get_spark(app_name="gen-ref-fixture", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="gen-ref-fixture", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     rows = generate_transcripts(spark, N_CONVS) \
         .select("conv_id", "turn_idx", "text").collect()
@@ -143,7 +142,7 @@ def main():
     fuzzy_nodes, fuzzy_edges = _fuzzy_pin(spark)
     spark.stop()
     spark2 = get_spark(app_name="gen-ref-fixture-check", master="local[3]",
-                       shuffle_partitions=5)
+                       extra_conf={"spark.sql.shuffle.partitions": "5"})
     spark2.sparkContext.setLogLevel("ERROR")
     fn2, fe2 = _fuzzy_pin(spark2)
     spark2.stop()

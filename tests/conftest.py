@@ -16,8 +16,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="kep-spark-tests", master=f"local[{CPUS}]",
-                  shuffle_partitions=CPUS)
+    s = get_spark(app_name="kep-spark-tests", master=f"local[{CPUS}]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

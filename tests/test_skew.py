@@ -4,6 +4,7 @@ reference never hits — SURVEY §4 'the hard 20%')."""
 
 from pyspark.sql import functions as F
 
+from knowledge_extraction_pipeline_spark.operators.link import distinct_terms
 from knowledge_extraction_pipeline_spark.operators.materialize import (
     alias_assignments,
     build_edges,
@@ -40,7 +41,7 @@ def _hot_world(spark, n_chunks=3000):
 
 def test_salted_pair_counts_exact_under_skew(spark):
     m, tr = _hot_world(spark)
-    asn = alias_assignments(m)
+    asn = alias_assignments(distinct_terms(m))
     mc = canonical_mentions(m, asn)
     edges = {(r["subj"], r["obj"]): r for r in
              build_edges(tr, mc).collect()}
@@ -58,7 +59,7 @@ def test_salted_pair_counts_exact_under_skew(spark):
 
 def test_salted_node_caps_under_skew(spark):
     m, _ = _hot_world(spark)
-    asn = alias_assignments(m)
+    asn = alias_assignments(distinct_terms(m))
     nodes = {r["canon"]: r for r in build_nodes(canonical_mentions(m, asn)).collect()}
     hot = nodes["hot"]
     assert hot["mention_count"] == 3000

@@ -489,3 +489,34 @@ def test_kg_state_swap_crash_recovery(spark, tmp_path, transcripts):
     got = {r["canonical_term"]: r["mention_count"]
            for r in finalize_stream_nodes(spark, state).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("sink", ["extract", "kg_update", "near_dup"])
+def test_stream_sinks_release_their_caches(spark, transcripts, tmp_path, sink):
+    """Each micro-batch releases what it persisted once its writes are
+    done: after a 4-file stream, one file per trigger, the session holds no
+    persisted RDD that the sink added."""
+    from knowledge_extraction_pipeline_spark.streaming import stream as st
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
+    rows = transcripts.limit(120)
+    if sink == "near_dup":
+        rows = rows.select(F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
+                           "text", "ts")
+    rows.repartition(4).write.parquet(src)
+    stream = (spark.readStream.schema(spark.read.parquet(src).schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    if sink == "extract":
+        q = st.start_streaming_extract(stream, out, ckpt)
+    elif sink == "kg_update":
+        q = st.start_stream_kg_update(stream, state, ckpt)
+    else:
+        q = st.start_stream_near_dup(stream, out, ckpt, state)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 4
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
