@@ -46,15 +46,15 @@ WARMUP_CONVS = 4000
 # ── SCALING PROTOCOL ─────────────────────────────────────────────────────
 # scripts/cluster_scale.py runs one draw: a Spark standalone cluster of
 # single-core workers, each worker and the executor JVM it spawns pinned to
-# its own core pair, the master on a separate pair. Executor JVMs are the
-# same at both levels (1 core, 6 g heap, ParallelGC, timed_run's warm-up);
-# only their count changes.
+# its own core pair, the master and the driver (cluster_scale.py and its
+# JVM) on a separate pair. Executor JVMs are the same at both levels (1
+# core, 6 g heap, ParallelGC, timed_run's warm-up); only their count changes.
 #   * level 4N: one cluster, 4 workers on pairs 0-1, 2-3, 4-5, 6-7, master
-#     on 8-9;
+#     and driver on 8-9;
 #   * level N: 4 concurrent 1-worker clusters on the same executor pairs,
-#     masters on 8-9, 10-11, 12-13, 14-15, so each executor sees the load
-#     the 4-executor cluster puts on the machine; per-cluster throughput is
-#     the level-N throughput;
+#     masters and drivers on 8-9, 10-11, 12-13, 14-15, so each executor
+#     sees the load the 4-executor cluster puts on the machine; per-cluster
+#     throughput is the level-N throughput;
 #   * one input of SCALE_CONVS conversations, generated once to a tmpfs
 #     Parquet file every draw reads; the same job conf at both levels;
 #   * draws are unconditional (none is retried or dropped for its value);
@@ -167,7 +167,9 @@ def _clusters(specs: list[tuple[int, str, str, int, str]], input_path: str,
     log dir) concurrently; every (wall, triples)."""
     procs = []
     for workers, exec_cpus, aux_cpus, port, logdir in specs:
-        cmd = [sys.executable, str(ROOT / "scripts" / "cluster_scale.py"),
+        # the driver shares the master's pair, off the executors' cores
+        cmd = ["taskset", "-c", aux_cpus,
+               sys.executable, str(ROOT / "scripts" / "cluster_scale.py"),
                str(workers), input_path, "--exec-cpus", exec_cpus,
                "--aux-cpus", aux_cpus, "--port-base", str(port)]
         if triples is not None:
@@ -183,7 +185,7 @@ def _clusters(specs: list[tuple[int, str, str, int, str]], input_path: str,
         err.seek(0)
         lines = [ln for ln in out.read().splitlines() if ln.startswith("SCALE ")]
         if not lines:
-            raise RuntimeError(f"cluster_scale.py {p.args[2:]} printed no "
+            raise RuntimeError(f"cluster_scale.py {p.args[5:]} printed no "
                                f"result; stderr tail: {err.read()[-2000:]}")
         _, wall, n = lines[-1].split()
         results.append((float(wall), int(n)))

@@ -10,9 +10,14 @@ distributed execution:
                 (mcp/graph_tools.py:94-152). Emits (norm, alias_target) edges.
   3. fuzzy    — MinHash-LSH over character shingles of the DISTINCT terms,
                 replacing the reference's O(n²) blocked cosine matrix
-                (entity_resolver.py:396-436). Banding generates candidates;
-                exact Jaccard verifies. Runs on |distinct terms|, not
+                (entity_resolver.py:396-436). Banding generates candidates
+                (one shuffle of band buckets, pairs formed inside each);
+                a word-aligned rule verifies. Runs on |distinct terms|, not
                 |mentions| — the blocking is what survives 100× scale-up.
+
+Before the fuzzy phase, two blocking phases (resolver normalization and
+per-word sorted characters) link each term to its block's min member, one
+window over the blocking key each.
 
 Output: candidate edge list (src, dst, sim, phase) — input to stage 3 CC.
 
@@ -56,13 +61,14 @@ WHERE dst != norm_term"""
 
 def _blocked_edges(key: str, phase: str) -> str:
     """Terms sharing the blocking `key` (a SQL expression of norm_term) are
-    linked to the block's min member: O(n) blocking, no pair enumeration."""
+    linked to the block's min member: O(n) blocking, no pair enumeration.
+    One window over the key, so the key is computed once per term and the
+    plan has one shuffle; a term differing from its block's min implies a
+    block of two or more."""
     return f"""
-WITH keyed AS (SELECT *, {key} AS _key FROM {{terms}})
 SELECT norm_term AS src, dst, 1.0D AS sim, '{phase}' AS phase
-FROM keyed JOIN (SELECT _key, min(norm_term) AS dst, count(1) AS n
-                 FROM keyed GROUP BY _key) USING (_key)
-WHERE n > 1 AND norm_term != dst"""
+FROM (SELECT norm_term, min(norm_term) OVER (PARTITION BY {key}) AS dst FROM {{terms}})
+WHERE norm_term != dst"""
 
 
 # hyphen/underscore variants: terms whose resolver normalization (fold
@@ -117,16 +123,34 @@ def _minhash_sql(ambiguous_band: tuple[float, float] | None) -> str:
 SELECT src, dst, sim, IF(ok, 'fuzzy', 'ambiguous') AS phase
 FROM (SELECT src, dst, ok, {sim} AS sim FROM (SELECT src, dst, {ok} AS ok FROM cand))
 WHERE ok OR (NOT ok AND sim >= {lo!r}D AND sim < {hi!r}D)"""
+    # bands: one projection per term, so the signature is computed once.
+    # posexplode_outer, not posexplode: the inner form makes the optimizer
+    # infer a size(bands) > 0 filter below the projections, which re-inlines
+    # the signature once per band (the array always has LSH_NUM_BANDS entries,
+    # so both forms yield the same rows).
+    # pairs: a pair x < y is formed in every bucket it shares and kept only
+    # in its first shared band, so each distinct pair leaves the buckets once,
+    # with no DISTINCT. The pair test is a filter inside the generator, not a
+    # WHERE: a WHERE would share one Filter with the verifier, whose common
+    # subexpressions Spark then evaluates for every (x, y) before the cheap
+    # conjuncts can reject it; here the verifier only sees the pairs kept.
     return f"""
-WITH sh AS (
-  SELECT norm_term, posexplode({lsh_bands_sql('sig', LSH_NUM_HASHES, LSH_NUM_BANDS)})
-         AS (band_idx, band_hash)
+WITH banded AS (
+  SELECT norm_term, {lsh_bands_sql('sig', LSH_NUM_HASHES, LSH_NUM_BANDS)} AS bands
   FROM (SELECT norm_term, {minhash_sql('shingles', LSH_NUM_HASHES)} AS sig
         FROM (SELECT norm_term, {shingles('norm_term')} AS shingles FROM {{terms}}))),
+buckets AS (
+  SELECT band_idx, collect_list(struct(norm_term, bands)) AS members
+  FROM (SELECT norm_term, bands, posexplode_outer(bands) AS (band_idx, band_hash)
+        FROM banded)
+  GROUP BY band_idx, band_hash
+  HAVING count(1) > 1),
 cand AS (
-  SELECT DISTINCT a.norm_term AS src, b.norm_term AS dst
-  FROM sh a JOIN sh b USING (band_idx, band_hash)
-  WHERE a.norm_term < b.norm_term)
+  SELECT x.norm_term AS src, y.norm_term AS dst
+  FROM buckets
+  LATERAL VIEW explode(members) xs AS x
+  LATERAL VIEW explode(filter(members, m -> x.norm_term < m.norm_term AND array_position(
+    zip_with(x.bands, m.bands, (u, v) -> u = v), true) = band_idx + 1)) ys AS y)
 {scored}"""
 
 
@@ -134,13 +158,16 @@ def minhash_candidate_edges(
     terms: DataFrame,
     ambiguous_band: tuple[float, float] | None = None,
 ) -> DataFrame:
-    """Banded MinHash-LSH self-join + word-aligned verification.
+    """Banded MinHash-LSH candidates + word-aligned verification.
 
-    Plan shape: terms → [map] shingles+signature+bands → explode bands →
-    shuffle on (band_idx, band_hash) → per-bucket pair join → distinct
-    (src, dst) → verify → shingle Jaccard `sim` of the pairs kept. The
-    bucket join is an equi-join, so AQE skew-join splitting applies if a
-    bucket runs hot. Banding gives candidate recall; the verifier is the
+    Plan shape: terms → [map] shingles, signature and band hashes, once per
+    term → explode bands → one shuffle on (band_idx, band_hash), collecting
+    each bucket's members → pairs formed inside each bucket, each distinct
+    pair kept only in its first shared band → verify → shingle Jaccard `sim`
+    of the pairs kept. No join and no DISTINCT: the verifier runs once per
+    distinct pair. A bucket of k terms is one task that forms k(k-1)/2
+    pairs, as many as a band self-join produces for it; nothing splits a
+    hot bucket. Banding gives candidate recall; the verifier is the
     word-aligned char-set rule (not whole-string Jaccard, which cannot
     separate one-word typos from two-word terms sharing a long word).
 

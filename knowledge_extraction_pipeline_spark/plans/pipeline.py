@@ -65,13 +65,16 @@ def run_pipeline(
     mentions, triples_raw = stage("extract", ("mentions", "triples_raw"),
                                   lambda: extract_stage(transcripts))
 
-    # the vocabulary is consumed by both link and canonicalize — one scan
+    # the vocabulary is consumed by both link and canonicalize — one scan.
+    # A persisted DataFrame, not a localCheckpoint: spark.catalog.clearCache()
+    # releases it, where a checkpoint's blocks outlive the run.
     terms = None
 
     def _terms():
         nonlocal terms
         if terms is None:
-            terms = distinct_terms(mentions).localCheckpoint(eager=True)
+            terms = distinct_terms(mentions).persist()
+            terms.count()
         return terms
 
     [candidates] = stage("link", ("candidates",), lambda: [

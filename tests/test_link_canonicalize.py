@@ -138,6 +138,68 @@ def test_minhash_no_cross_base_merges(spark):
     assert got == [], f"unexpected merges between distinct terms: {got[:5]}"
 
 
+def test_lsh_candidates_are_the_band_sharing_pairs_once(spark):
+    """With a maximal ambiguous band, the fuzzy phase emits every pair of
+    terms that share a band hash exactly once, labelled by the verifier,
+    also through a hot bucket: 300 case and whitespace variants of one term
+    share its shingle set, so with their base they collide in every band.
+    The oracle reads each term's band hashes once and pairs the terms on
+    the driver."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from knowledge_extraction_pipeline_spark.config import (
+        LSH_NUM_BANDS,
+        LSH_NUM_HASHES,
+        LSH_SHINGLE_SIZE,
+    )
+    from knowledge_extraction_pipeline_spark.functions.lexicon import base_terms
+    from knowledge_extraction_pipeline_spark.functions.text import (
+        char_shingles_sql,
+        lsh_bands_sql,
+        minhash_sql,
+        normalize_term_resolver,
+    )
+    from knowledge_extraction_pipeline_spark.operators.link import (
+        _word_aligned_similar,
+    )
+
+    hot = "stochastic gradient descent"
+    letters = [i for i, c in enumerate(hot) if c != " "]
+
+    def variant(n: int) -> str:
+        up = {letters[k] for k in range(len(letters)) if n >> k & 1}
+        v = "".join(c.upper() if i in up else c for i, c in enumerate(hot))
+        return [v, f" {v} ", v.replace(" ", "  ")][n % 3]
+
+    words = {hot, *(variant(n) for n in range(1, 301)),
+             *(b for b, _, _ in base_terms()[:200])}
+    terms = spark.createDataFrame([(t,) for t in words], "norm_term string")
+
+    rows = minhash_candidate_edges(terms, ambiguous_band=(0.0, 1.01)) \
+        .select("src", "dst", "phase").collect()
+    got = {tuple(r) for r in rows}
+    assert len(got) == len(rows), "a candidate pair was emitted twice"
+
+    shingles = f"array_distinct({char_shingles_sql('norm_term', LSH_SHINGLE_SIZE)})"
+    banded = terms.selectExpr(
+        "norm_term", f"{minhash_sql(shingles, LSH_NUM_HASHES)} AS sig").selectExpr(
+        "norm_term", f"{lsh_bands_sql('sig', LSH_NUM_HASHES, LSH_NUM_BANDS)} AS bands")
+    buckets = defaultdict(list)
+    for r in banded.collect():
+        for band in enumerate(r["bands"]):
+            buckets[band].append(r["norm_term"])
+    pairs = {tuple(sorted(p)) for members in buckets.values()
+             for p in combinations(members, 2)}
+    assert len(pairs) > 300 * 299 // 2
+    labelled = spark.createDataFrame(sorted(pairs), "src string, dst string") \
+        .withColumn("ok", _word_aligned_similar(normalize_term_resolver(F.col("src")),
+                                                normalize_term_resolver(F.col("dst"))))
+    want = {(r["src"], r["dst"], "fuzzy" if r["ok"] else "ambiguous")
+            for r in labelled.collect()}
+    assert got == want
+
+
 def test_canonicalize_isolated_terms_self_map(spark, transcripts):
     m = extract_stage(transcripts, engine="pandas")[0]
     terms = distinct_terms(m)

@@ -12,6 +12,22 @@ from knowledge_extraction_pipeline_spark.sources.tables import (
 )
 
 
+def test_in_memory_runs_release_their_caches(spark, transcripts):
+    """What an in-memory run persists is a cached DataFrame, so
+    spark.catalog.clearCache() releases it: three runs, each followed by
+    clearCache(), leave no persisted RDD that they added."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        for _ in range(3):
+            res = run_pipeline(spark, transcripts)
+            res.nodes.count(), res.edges.count()
+            spark.catalog.clearCache()
+            assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    finally:
+        transcripts.cache()  # the session fixture's cache, dropped above
+
+
 def test_pipeline_checkpoints_and_resumes(spark, transcripts, tmp_path):
     run_dir = str(tmp_path / "run1")
 

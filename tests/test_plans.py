@@ -287,6 +287,69 @@ def test_materialize_plan_shape(spark, transcripts, tmp_path):
                    "edges": {"Exchange": 7, "SortAggregate": 6}}
 
 
+def _seq(s) -> list:
+    """A Scala Seq as a list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _nodes(df) -> list:
+    """Every node of a DataFrame's physical plan."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        stack.extend(_seq(node.children()))
+    return out
+
+
+def test_link_plan_shape(spark, tmp_path):
+    """Link does each term's work once. The fuzzy phase computes a term's
+    MinHash signature in one projection and groups the exploded bands into
+    buckets with one shuffle, forming pairs inside each bucket: no band
+    self-join, which computed the signature on both of its sides, and no
+    (src, dst) DISTINCT, which the verifier was pushed below. The pair test
+    runs inside the generator, so no Filter holds it with the verifier,
+    whose common subexpressions would then be evaluated for every pair the
+    test rejects. Each blocked phase is one window over its key: one
+    shuffle, no self-join. Static plans, before adaptive execution re-plans
+    them."""
+    from knowledge_extraction_pipeline_spark.functions.lexicon import base_terms
+    from knowledge_extraction_pipeline_spark.operators.link import (
+        charsort_edges,
+        minhash_candidate_edges,
+        resolver_norm_edges,
+    )
+
+    path = str(tmp_path / "terms")
+    spark.createDataFrame([(t,) for t, _, _ in base_terms()],
+                          "norm_term string").write.parquet(path)
+    terms = spark.read.parquet(path)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        fuzzy = _nodes(minhash_candidate_edges(terms))
+        ambiguous = _nodes(minhash_candidate_edges(terms, ambiguous_band=(0.0, 1.01)))
+        blocked = [_nodes(charsort_edges(terms)), _nodes(resolver_norm_edges(terms))]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    def names(nodes, part):
+        return [n.nodeName() for n in nodes if part in n.nodeName()]
+
+    signature = [n for n in fuzzy if n.nodeName() == "Project"
+                 and "aggregate(" in n.projectList().toString()]
+    assert len(signature) == 1
+    assert len(names(fuzzy, "Exchange")) == 1 and not names(fuzzy, "Join")
+    keys = [{g.name() for g in _seq(n.groupingExpressions())}
+            for n in fuzzy if "Aggregate" in n.nodeName()]
+    assert {"src", "dst"} not in keys
+    for nodes in (fuzzy, ambiguous):
+        conds = [n.condition().toString() for n in nodes if n.nodeName() == "Filter"]
+        assert any("forall(" in c for c in conds)
+        assert not [c for c in conds if "forall(" in c and "array_position(" in c]
+    for nodes in blocked:
+        assert len(names(nodes, "Exchange")) == 1 and not names(nodes, "Join")
+
+
 def test_warm_pipeline_reuses_generated_code(spark, transcripts):
     """A repeated run_pipeline in one session reuses the whole-stage-codegen
     classes of the run before: the session's generated-class cache holds a
